@@ -13,7 +13,11 @@ SQL-expressible query) plus the transcript rollup engine itself:
   needs external file access).
 - ``transcript_tier_1m``/``_agg_*``/``_packed_1h`` — full tiers incl.
   smoothed floats/Gorilla blobs: rows-only here, byte-matched against
-  the single-node oracle in pytest.
+  the single-node oracle in pytest
+  (tests/test_spark_pipeline.py::test_transcript_full_tier_queries_bitexact).
+
+Every tier row comes from the fused kernel the pipeline writes with
+(sits_spark.operators.fused).
 """
 
 from __future__ import annotations

@@ -195,15 +195,8 @@ def reduce(
         elif m == "fslope":
             aggs.append(F.max("_fslope_diff").alias(m))
         else:  # skew / kurt, reference formulas over d = x - mean
-            d = vcol - F.col("_m")
-            n = F.count(value).cast("double")
-            if m == "skew":
-                m3 = F.sum(d * d * d) / n
-                s15 = F.pow(F.sum(d * d) / n, F.lit(1.5))
-                adj = F.sqrt(n * (n - 1)) / n - F.lit(2.0)
-                aggs.append(((m3 / s15) * adj).alias(m))
-            else:
-                aggs.append((n * F.sum(d * d * d * d) / F.pow(F.sum(d * d), F.lit(2.0))).alias(m))
+            moment = _red.t_skew if m == "skew" else _red.t_kurt
+            aggs.append(moment(vcol, F.col("_m")).alias(m))
     return src.groupBy(*keys).agg(*aggs)
 
 

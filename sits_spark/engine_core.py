@@ -1,12 +1,18 @@
-"""Per-conversation grid/fill/smooth/rollup/pack core, shared by the
-single-node oracle (pandas loop) and the Spark grouped pandas UDFs.
+"""Grid/fill/smooth/rollup/pack core of the tier math.
+
+Two families over the same semantics: the per-conversation functions
+(``scatter_grid``, ``band_pipeline``, ``observed_to_grid``,
+``rollup_conv``, ``pack_conv``) are the single-node oracle's reference
+path; the ``*_flat`` functions run many conversations per call and are
+what the Spark fused kernel executes (operators.fused). Tests byte-match
+the two.
 
 All inputs are OBSERVED 1-minute slot metrics as exact int64 arrays (turn
 counts, per-role token sums, assistant-text length sums) — integers
 aggregate order-independently, so Spark's built-in partial aggregation
 produces bit-identical inputs to the oracle's bincounts. Every float in
-the engine is then derived here, in one canonical order, on (1, T)
-matrices (no BLAS batching variance).
+the engine is then derived here, in one canonical order, by row-wise
+kernels (no BLAS batching variance).
 
 Semantics mirrored from the reference (citations in sits_spark.kernels and
 sits_spark.oracle docstrings).
@@ -40,8 +46,6 @@ TIER_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
 # result: a single segment's extended window is the whole grid).
 CHUNK_SLOTS = 8 * 1440  # 8 epoch-aligned days of minutes
 CHUNK_OVERLAP = 64
-# back-compat alias: the longest a non-crossing grid can be
-MAX_UNCHUNKED_SLOTS = CHUNK_SLOTS
 
 GRID_COLS = [
     "slot_start_s",
@@ -187,61 +191,6 @@ def band_pipeline(
     filled = kernels.linear_interp_mtx(alen)
     sg, whit = smooth_conv(filled[0], int(lo_idx))
     return filled, sg.reshape(1, -1), whit.reshape(1, -1)
-
-
-def band_pipeline_rows(
-    alen_rows: list[np.ndarray],
-    lo_idxs: list[int] | None = None,
-) -> tuple[list[np.ndarray], list[np.ndarray], list[np.ndarray], list[np.ndarray]]:
-    """Gap-fill + SG + Whittaker + flags over a RAGGED batch of series
-    (one per conv), bit-identical per row to band_pipeline on (1, T).
-
-    Linear fill and flags run per row (np.interp is C-speed); SG batches
-    equal-length rows (elementwise kernels); Whittaker runs the ragged
-    prefix solver (kernels.smooth_whit_ragged) over the short rows at
-    once. Rows crossing a chunk boundary take the chunked
-    smooth_conv path (``lo_idxs`` = absolute start slot index per row).
-
-    Returns (filled_rows, sg_rows, whit_rows, flag_rows) in input order.
-    """
-    n = len(alen_rows)
-    if lo_idxs is None:
-        lo_idxs = [0] * n
-    lengths = np.array([len(r) for r in alen_rows], dtype=np.int64)
-    filled_rows: list[np.ndarray] = [None] * n  # type: ignore[list-item]
-    flag_rows: list[np.ndarray] = [None] * n  # type: ignore[list-item]
-    sg_rows: list[np.ndarray] = [None] * n  # type: ignore[list-item]
-    whit_rows: list[np.ndarray] = [None] * n  # type: ignore[list-item]
-    by_len: dict[int, list[int]] = {}
-    long_rows: list[int] = []
-    for i, r in enumerate(alen_rows):
-        mtx = r.reshape(1, -1)
-        filled_rows[i] = kernels.linear_interp_mtx(mtx)[0]
-        flag_rows[i] = fill_flags_mtx(mtx)[0]
-        if is_crossing(int(lo_idxs[i]), len(r)):
-            long_rows.append(i)
-        else:
-            by_len.setdefault(len(r), []).append(i)
-    for t, idxs in by_len.items():
-        block = np.vstack([filled_rows[i] for i in idxs])
-        sg = kernels.smooth_sg_mtx(block, order=SG_ORDER, length=SG_LENGTH)
-        for row, i in enumerate(idxs):
-            sg_rows[i] = sg[row]
-    short = [i for idxs in by_len.values() for i in idxs]
-    if short:
-        sl = lengths[short]
-        order = np.argsort(-sl, kind="stable")
-        ordered = [short[int(p)] for p in order]
-        flat = np.concatenate([filled_rows[i] for i in ordered])
-        sorted_lens = sl[order]
-        offsets = np.zeros(len(short), dtype=np.int64)
-        np.cumsum(sorted_lens[:-1], out=offsets[1:])
-        whit_flat = kernels.smooth_whit_ragged(flat, offsets, sorted_lens, WHIT_LAMBDA)
-        for pos, i in enumerate(ordered):
-            whit_rows[i] = whit_flat[offsets[pos] : offsets[pos] + sorted_lens[pos]]
-    for i in long_rows:
-        sg_rows[i], whit_rows[i] = smooth_conv(filled_rows[i], int(lo_idxs[i]))
-    return filled_rows, sg_rows, whit_rows, flag_rows
 
 
 _FLAG_NAMES = np.array(["obs", "linear", "locf_lead", "locf_trail", "empty"], dtype=object)
@@ -391,7 +340,7 @@ def observed_to_grid(
     alen_n: np.ndarray,
 ) -> dict[str, np.ndarray]:
     """Full per-conv grid: scatter + fill + flags + smooth (the oracle's
-    single-conv path; the engine batches band_pipeline by grid length)."""
+    single-conv path; the engine runs band_pipeline_flat per batch)."""
     grid = scatter_grid(
         slot_s, n_turns, tokens_user, tokens_assistant, tokens_tool,
         tool_calls, alen_sum, alen_n,

@@ -27,10 +27,13 @@ chunk+overlap halo pattern, /root/reference/R/api_chunks.R:44-148):
   stream, no driver round-trip.
 
 The kernel smooths each chunk's extended window and crops — numerically
-the SAME operation smooth_conv applies inside one task, so
-tier_1m_chunked is BYTE-identical to regularize.tier_1m (asserted in
-tests/test_chunked.py). Scale math: a conversation spanning Y years is
-~Y*46 chunks of <= 11520 slots each, each a few hundred KB of state.
+the SAME operation smooth_conv applies inside one task — and hands the
+cropped chunk grids to the fused kernel's tier emitter
+(``fused._emit_tiers``), so ``fused_write_chunked`` writes tiers
+BYTE-identical to the single-node oracle (asserted in
+tests/test_chunked.py and tests/test_spark_pipeline.py). Scale math: a
+conversation spanning Y years is ~Y*46 chunks of <= 11520 slots each,
+each a few hundred KB of state.
 """
 
 from __future__ import annotations
@@ -43,13 +46,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import engine_core
-from ..batching import arrow_conv_batches, record_batch, schema_of
-from .regularize import _OBS_COLS, TIER_1M_SCHEMA, observed_slots
+from ..batching import arrow_conv_batches
+from .fused import (
+    FLUSH_ROWS,
+    STATS_SCHEMA,
+    PartitionedWriter,
+    _emit_tiers,
+    require_no_speculation,
+)
+from .regularize import _OBS_COLS
 
 CHUNK_SEC = engine_core.CHUNK_SLOTS * 60
 OV_SEC = engine_core.CHUNK_OVERLAP * 60
-
-_TIER_1M_PA = schema_of(TIER_1M_SCHEMA)
 
 # marker 0 = anchor row (one per (conv, chunk)), 1 = data row (own or halo)
 _STREAM_SCHEMA = (
@@ -193,18 +201,24 @@ def _iter_groups(tbl) -> Iterator[tuple[int, int]]:
         yield lo, hi
 
 
-def _chunk_iter(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for tbl in arrow_conv_batches(it, key="gkey"):
-        out: dict[str, list[np.ndarray]] = {}
-        for lo, hi in _iter_groups(tbl):
-            res = _process_group(tbl, lo, hi)
-            if res is None:
-                continue
-            for k, v in res.items():
-                out.setdefault(k, []).append(v)
-        if out:
-            merged = {k: np.concatenate(v) for k, v in out.items()}
-            yield record_batch(merged, _TIER_1M_PA, len(merged["slot_start"]))
+def _group_slices(tbl, max_slots: int) -> Iterator[list[tuple[int, dict]]]:
+    """(lo, cropped grid) of each (conv, chunk) group of a gkey-sorted
+    batch, in lists of about ``max_slots`` grid slots — a silent chunk
+    expands one anchor row into a whole chunk of slots, so the output of
+    a batch is bounded by slots, not by its input rows."""
+    out: list[tuple[int, dict]] = []
+    n = 0
+    for lo, hi in _iter_groups(tbl):
+        res = _process_group(tbl, lo, hi)
+        if res is None:
+            continue
+        out.append((lo, res))
+        n += len(res["slot_start_s"])
+        if n >= max_slots:
+            yield out
+            out, n = [], 0
+    if out:
+        yield out
 
 
 def _process_group(tbl, lo: int, hi: int):
@@ -279,11 +293,8 @@ def _process_group(tbl, lo: int, hi: int):
     # crop to the chunk's own region
     ca = (a - ext_lo) // 60
     cb = (b - ext_lo) // 60 + 1
-    n = cb - ca
-    cid = tbl["conv_id"][lo]
     return {
-        "conv_id": np.full(n, cid, dtype=object),
-        "slot_start": grid["slot_start_s"][ca:cb] * 1_000_000,
+        "slot_start_s": grid["slot_start_s"][ca:cb],
         "present": grid["n_turns"][ca:cb] > 0,
         "n_turns": grid["n_turns"][ca:cb],
         "tokens_user": grid["tokens_user"][ca:cb],
@@ -319,69 +330,6 @@ def _chunked_stream(obs: DataFrame, partitions: int) -> DataFrame:
     return clustered.select(*cols)
 
 
-def _emit_group_tiers(writer, tbl, lo: int, hi: int, tiers, with_pack: bool):
-    """slot + agg + pack rows of ONE (conv, chunk) group, written via the
-    incremental writer. Chunk boundaries are epoch-day aligned
-    (engine_core.CHUNK_SLOTS % 1440 == 0), so every 1h/1d window and 1h
-    pack block lies wholly inside one chunk — per-chunk aggregation is
-    byte-equal to whole-conv aggregation restricted to the same windows."""
-    from .. import engine_core
-
-    res = _process_group(tbl, lo, hi)
-    if res is None:
-        return
-    n = len(res["slot_start"])
-    bucket = np.full(n, tbl["bucket"][lo], dtype=np.int32)
-    slot_s = res["slot_start"] // 1_000_000
-    slot_data = dict(res)
-    slot_data["bucket"] = bucket
-    slot_data["day"] = (slot_s // 86400).astype(np.int32)
-    writer.add("slot", slot_data, n)
-
-    flat = {"slot_start_s": slot_s, "alen_whit": res["alen_whit"]}
-    for k in engine_core._SUM_COLS:
-        flat[k] = res[k]
-    gb = np.array([0, n], dtype=np.int64)
-    cid = res["conv_id"][:1]
-    parts = [
-        (t, *engine_core.rollup_flat(flat, gb, engine_core.TIER_SECONDS[t]))
-        for t in tiers
-    ]
-    n_agg = sum(len(cw) for _t, _c, cw in parts)
-    if n_agg:
-        win = np.concatenate([c["window_start_s"] for _t, c, _w in parts])
-        agg_data = {
-            "conv_id": np.concatenate([cid[cw] for _t, _c, cw in parts]),
-            "tier": np.concatenate(
-                [np.full(len(cw), t, dtype=object) for t, _c, cw in parts]
-            ),
-            "window_start": win * 1_000_000,
-            "bucket": np.full(n_agg, bucket[0], dtype=np.int32),
-            "day": (win // 86400).astype(np.int32),
-        }
-        for k in engine_core.ROLLUP_COLS:
-            if k != "window_start_s":
-                agg_data[k] = np.concatenate([c[k] for _t, c, _w in parts])
-        writer.add("agg", agg_data, n_agg)
-
-    if with_pack:
-        pcols, pcw = engine_core.pack_flat(flat, gb, 3600)
-        if len(pcw):
-            pk_win = pcols["window_start_s"]
-            pack_data = {
-                "conv_id": cid[pcw],
-                "window_start": pk_win * 1_000_000,
-                "bucket": np.full(len(pcw), bucket[0], dtype=np.int32),
-                "day": (pk_win // 86400).astype(np.int32),
-                "n": pcols["n"],
-                "first_ts": pcols["first_ts"],
-                "first_val": pcols["first_val"],
-                "ts_d2": np.array(pcols["ts_d2"], dtype=object),
-                "vals_gorilla": np.array(pcols["vals_gorilla"], dtype=object),
-            }
-            writer.add("pack", pack_data, len(pcw))
-
-
 def fused_write_chunked(
     obs: DataFrame,
     table_path: str,
@@ -396,11 +344,11 @@ def fused_write_chunked(
     independent tasks of bounded state instead of one straggler pinning a
     core (the reference's chunk+overlap pattern, R/api_chunks.R:44-148,
     lifted across tasks). Byte-identical to the whole-conv path: slot rows
-    via the halo/anchor kernel (tests/test_chunked.py), aggregates/packs
-    per chunk — exact because chunk cuts are epoch-day aligned. Returns
-    the same lazy stats DataFrame contract as fused_write."""
-    from .fused import PartitionedWriter, STATS_SCHEMA, require_no_speculation
-
+    via the halo/anchor kernel, aggregates/packs by the fused kernel's
+    emitter with each (conv, chunk) as one series — exact because chunk
+    cuts are epoch-day aligned (engine_core.CHUNK_SLOTS % 1440 == 0), so
+    no 1h/1d window or 1h pack block spans two chunks. Returns the same
+    lazy stats DataFrame contract as fused_write."""
     spark = obs.sparkSession
     require_no_speculation(spark)
     n = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -412,29 +360,19 @@ def fused_write_chunked(
         pid = TaskContext.get().partitionId() if TaskContext.get() else 0
         writer = PartitionedWriter(table_path, pid, label="g", gen=gen)
         for tbl in arrow_conv_batches(it, key="gkey"):
-            for lo, hi in _iter_groups(tbl):
-                _emit_group_tiers(writer, tbl, lo, hi, tiers, with_pack)
+            for groups in _group_slices(tbl, FLUSH_ROWS):
+                los = np.array([lo for lo, _res in groups])
+                gb = np.zeros(len(groups) + 1, dtype=np.int64)
+                np.cumsum([len(res["slot_start_s"]) for _lo, res in groups], out=gb[1:])
+                slot_data = {
+                    k: np.concatenate([res[k] for _lo, res in groups])
+                    for k in groups[0][1]
+                }
+                for kind, data, rows in _emit_tiers(
+                    slot_data, gb, tbl["conv_id"][los],
+                    tbl["bucket"][los].astype(np.int32), tiers, with_pack,
+                ):
+                    writer.add(kind, data, rows)
         yield writer.stats_batch()
 
     return stream.mapInArrow(write_fn, STATS_SCHEMA)
-
-
-def tier_1m_chunked(transcripts: DataFrame, partitions: int | None = None) -> DataFrame:
-    """raw turns -> dense smoothed 1m tier with per-(conv, chunk) units of
-    work — byte-identical to regularize.tier_1m, but no single task ever
-    holds more than one chunk of one conversation."""
-    spark = transcripts.sparkSession
-    n = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    obs = observed_slots(transcripts)
-    stream = _anchor_table(obs).unionByName(_data_stream(obs))
-    clustered = (
-        stream.withColumn(
-            "gkey", F.concat_ws("#", "conv_id", F.format_string("%06d", "chunk"))
-        )
-        .repartitionByRange(n, "conv_id", "chunk")
-        .sortWithinPartitions("conv_id", "chunk", "marker", "slot_s")
-    )
-    cols = ["gkey"] + [f.split(" ")[0] for f in _STREAM_SCHEMA.split(", ")]
-    return clustered.select(*cols).mapInArrow(
-        _chunk_iter, TIER_1M_SCHEMA
-    )

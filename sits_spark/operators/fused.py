@@ -25,9 +25,11 @@ Two sinks over the same kernel stream:
   pipeline's manifest commit (sits_spark.manifest), exactly as Iceberg
   writers hand visibility to the catalog commit.
 
-Per-conv math is identical to operators.regularize/rollup (shared
-engine_core kernels), so byte-exactness vs the oracle is unchanged —
-asserted in tests/test_spark_pipeline.py.
+Both sinks, and the giant-conversation writer in operators.chunk_split,
+emit their rows through one generator (``_emit_tiers``) over the flat
+engine_core kernels; the oracle's per-conv engine_core functions are the
+independent reference they are byte-matched against in
+tests/test_spark_pipeline.py.
 """
 
 from __future__ import annotations
@@ -41,8 +43,25 @@ from pyspark.sql import DataFrame
 
 from .. import engine_core
 from ..batching import arrow_conv_batches, conv_bounds, record_batch, schema_of
-from .regularize import _INT_COLS, _OBS_COLS, TIER_1M_SCHEMA
-from .rollup import PACK_SCHEMA, ROLLUP_SCHEMA
+from .regularize import _OBS_COLS
+
+TIER_1M_SCHEMA = (
+    "conv_id string, slot_start timestamp, present boolean, n_turns long, "
+    "tokens_user long, tokens_assistant long, tokens_tool long, "
+    "tool_calls long, alen double, fill_flag string, alen_filled double, "
+    "alen_sg double, alen_whit double"
+)
+ROLLUP_SCHEMA = (
+    "conv_id string, tier string, window_start timestamp, n_slots long, "
+    "n_turns long, tokens_user long, tokens_assistant long, tokens_tool long, "
+    "tool_calls long, turn_rate double, tool_call_rate double, "
+    "alen_mean double, alen_min double, alen_max double, "
+    "alen_median double, alen_std double"
+)
+PACK_SCHEMA = (
+    "conv_id string, window_start timestamp, n int, first_ts long, "
+    "first_val double, ts_d2 binary, vals_gorilla binary"
+)
 
 FUSED_SCHEMA = (
     "row_kind string, conv_id string, slot_start timestamp, present boolean, "
@@ -67,7 +86,6 @@ _KIND_PA = {
     "agg": schema_of(ROLLUP_SCHEMA),
     "pack": schema_of(PACK_SCHEMA),
 }
-_KIND_TS = {"slot": "slot_start", "agg": "window_start", "pack": "window_start"}
 TIER_OF_KIND = {"slot": "tier_1m", "agg": "agg", "pack": "packed_1h"}
 
 STATS_SCHEMA = "tier string, bucket int, rows long"
@@ -94,51 +112,61 @@ def _tier_stream(
     plus ``bucket`` int32 and ``day`` int32 epoch-days) to a numpy array."""
     for tbl in arrow_conv_batches(it):
         cid = tbl["conv_id"]
-        slot = tbl["slot_s"]
         bkt = tbl["bucket"]
         starts, bounds = conv_bounds(cid)
-        n_convs = len(starts)
 
         # --- dense grids + band pipeline, flat across the whole batch ---
         grid, gb = engine_core.scatter_grid_flat(
-            slot, bounds, {c: tbl[c] for c in _OBS_COLS}
+            tbl["slot_s"], bounds, {c: tbl[c] for c in _OBS_COLS}
         )
         filled, sg, whit, flags = engine_core.band_pipeline_flat(
             grid["alen"], gb, grid["slot_start_s"][gb[:-1]] // 60
         )
-
-        # --- slot rows ---
-        lens = np.diff(gb)
-        n_slot = int(gb[-1])
-        slot_s_all = grid["slot_start_s"]
         slot_data: dict[str, np.ndarray] = {
-            "conv_id": np.repeat(cid[starts], lens),
-            "slot_start": slot_s_all * 1_000_000,
-            "bucket": np.repeat(bkt[starts], lens),
-            "day": (slot_s_all // 86400).astype(np.int32),
+            "slot_start_s": grid["slot_start_s"],
             "alen": grid["alen"],
             "fill_flag": flags,
             "alen_filled": filled,
             "alen_sg": sg,
             "alen_whit": whit,
         }
-        for k in _INT_COLS:
+        for k in ("present", *engine_core._SUM_COLS):
             slot_data[k] = grid[k]
-        yield "slot", slot_data, n_slot
+        yield from _emit_tiers(
+            slot_data, gb, cid[starts], bkt[starts].astype(np.int32), tiers, with_pack
+        )
 
-        # --- agg + pack over the already-flat grid columns (one
-        # vectorized pass per tier across ALL convs in the batch) ---
-        flat = {
-            "slot_start_s": slot_s_all,
-            "alen_whit": slot_data["alen_whit"],
-        }
-        for k in engine_core._SUM_COLS:
-            flat[k] = slot_data[k]
-        gb = np.zeros(n_convs + 1, dtype=np.int64)
-        np.cumsum(lens, out=gb[1:])
-        conv_arr = cid[starts]
-        bkt_arr = bkt[starts].astype(np.int32)
 
+def _emit_tiers(
+    slot_data: dict[str, np.ndarray],
+    gb: np.ndarray,
+    conv_arr: np.ndarray,
+    bkt_arr: np.ndarray,
+    tiers: tuple[str, ...],
+    with_pack: bool,
+):
+    """slot -> agg -> pack rows of a batch of dense grids.
+
+    ``slot_data`` holds the concatenated grid columns (``slot_start_s`` in
+    epoch seconds; conv_id, slot_start, bucket and day are added here),
+    ``gb`` the bounds of each series in it, ``conv_arr``/``bkt_arr`` each
+    series' conv_id and bucket. One vectorized rollup per tier and one
+    pack pass run across every series of the batch; windows never merge
+    across ``gb``, so a series may be a whole conversation or one
+    epoch-day-aligned chunk of one."""
+    lens = np.diff(gb)
+    slot_s = slot_data["slot_start_s"]
+    slot_data["conv_id"] = np.repeat(conv_arr, lens)
+    slot_data["slot_start"] = slot_s * 1_000_000
+    slot_data["bucket"] = np.repeat(bkt_arr, lens)
+    slot_data["day"] = (slot_s // 86400).astype(np.int32)
+    yield "slot", slot_data, int(gb[-1])
+
+    flat = {"slot_start_s": slot_s, "alen_whit": slot_data["alen_whit"]}
+    for k in engine_core._SUM_COLS:
+        flat[k] = slot_data[k]
+
+    if tiers:
         parts = [
             (tier, *engine_core.rollup_flat(flat, gb, engine_core.TIER_SECONDS[tier]))
             for tier in tiers
@@ -159,21 +187,21 @@ def _tier_stream(
                 agg_data[k] = np.concatenate([c[k] for _t, c, _w in parts])
         yield "agg", agg_data, n_agg
 
-        if with_pack:
-            pcols, pcw = engine_core.pack_flat(flat, gb, 3600)
-            pk_win = pcols["window_start_s"]
-            pack_data = {
-                "conv_id": conv_arr[pcw],
-                "bucket": bkt_arr[pcw],
-                "window_start": pk_win * 1_000_000,
-                "day": (pk_win // 86400).astype(np.int32),
-                "n": pcols["n"],
-                "first_ts": pcols["first_ts"],
-                "first_val": pcols["first_val"],
-                "ts_d2": np.array(pcols["ts_d2"], dtype=object),
-                "vals_gorilla": np.array(pcols["vals_gorilla"], dtype=object),
-            }
-            yield "pack", pack_data, len(pcw)
+    if with_pack:
+        pcols, pcw = engine_core.pack_flat(flat, gb, 3600)
+        pk_win = pcols["window_start_s"]
+        pack_data = {
+            "conv_id": conv_arr[pcw],
+            "bucket": bkt_arr[pcw],
+            "window_start": pk_win * 1_000_000,
+            "day": (pk_win // 86400).astype(np.int32),
+            "n": pcols["n"],
+            "first_ts": pcols["first_ts"],
+            "first_val": pcols["first_val"],
+            "ts_d2": np.array(pcols["ts_d2"], dtype=object),
+            "vals_gorilla": np.array(pcols["vals_gorilla"], dtype=object),
+        }
+        yield "pack", pack_data, len(pcw)
 
 
 def _fused_iter(tiers: tuple[str, ...], with_pack: bool = True):
@@ -218,10 +246,9 @@ def fused_tiers(
 # regardless of how much data the task's key range holds (a skewed range
 # at 100x otherwise buffers its whole multi-GB output before writing).
 # Both limits apply — rows for the narrow tiers, bytes for blob-carrying
-# pack rows whose size per row is unbounded. Env-overridable so the
-# bench can A/B writer knobs without code churn.
-FLUSH_ROWS = int(os.environ.get("SPARK_GRAFT_FLUSH_ROWS", 1 << 18))
-FLUSH_BYTES = int(os.environ.get("SPARK_GRAFT_FLUSH_BYTES", 64 << 20))
+# pack rows whose size per row is unbounded.
+FLUSH_ROWS = 1 << 18
+FLUSH_BYTES = 64 << 20
 # lz4 over zstd for the tier files: the fused kernel+write stage is the
 # scaling bottleneck (its total CPU inflates ~40% from 2 -> 8 cores under
 # memory-bandwidth contention), and the parquet encoder's CPU is a big
@@ -231,7 +258,7 @@ FLUSH_BYTES = int(os.environ.get("SPARK_GRAFT_FLUSH_BYTES", 64 << 20))
 # stage. The tier floats are smoothed doubles (high entropy), so zstd's
 # better ratio bought little on the dominant columns anyway; the packed
 # blob tier is already Gorilla-compressed before parquet sees it.
-WRITE_COMPRESSION = os.environ.get("SPARK_GRAFT_COMPRESSION", "lz4")
+WRITE_COMPRESSION = "lz4"
 
 # Dictionary-encode ONLY the low-cardinality string columns (round 6,
 # guide §6 file layout): pyarrow dictionary-encodes every column by
@@ -402,20 +429,9 @@ def _write_iter(
             table_path, pid, flush_rows=flush_rows, flush_bytes=flush_bytes,
             gen=gen,
         )
-        prof_dir = os.environ.get("SPARK_GRAFT_TASK_PROFILE_DIR")
-        prof = None
-        if prof_dir:
-            import cProfile
-
-            prof = cProfile.Profile()
-            prof.enable()
         for kind, data, n in _tier_stream(it, tiers, with_pack):
             writer.add(kind, data, n)
-        out = writer.stats_batch()
-        if prof is not None:
-            prof.disable()
-            prof.dump_stats(os.path.join(prof_dir, f"task-{pid:05d}.prof"))
-        yield out
+        yield writer.stats_batch()
 
     return fn
 

@@ -1,52 +1,24 @@
-"""Spark regularization stage: raw transcript turns -> dense 1-minute tier.
+"""Spark regularization stage: raw transcript turns -> observed 1-minute
+slots.
 
-Two sub-stages, mirroring the reference's regularize -> impute -> smooth
-chain (/root/reference/R/sits_regularize.R:170-246,
-R/api_regularize.R:54-112, R/sits_imputation.R, R/sits_filters.R) as
-idiomatic Spark:
+The first half of the reference's regularize -> impute -> smooth chain
+(R/sits_regularize.R:170-246, R/api_regularize.R:54-112 in sits)
+as a Catalyst-native groupBy over (conv_id, minute slot). Every measure is
+an exact int64 (counts / integer sums), so Spark's map-side partial
+aggregation is order-insensitive and bit-stable — the distributed result
+equals the oracle's bincounts exactly. This stage reads the raw table
+once; filters and column pruning push down to the parquet/Iceberg scan.
 
-1. ``observed_slots``: Catalyst-native groupBy over (conv_id, minute slot).
-   Every measure is an exact int64 (counts / integer sums), so Spark's
-   map-side partial aggregation is order-insensitive and bit-stable — the
-   distributed result equals the oracle's bincounts exactly. This stage
-   reads the raw table once; filters and column pruning push down to the
-   parquet/Iceberg scan.
-2. ``fill_smooth``: range-partition by conv_id, sort within partitions by
-   (conv_id, slot), then ``mapInArrow`` over RecordBatches — conversations
-   sliced out with numpy boundaries (sits_spark.batching), full minute
-   grids materialized (gap slots included), and the assistant-length band
-   gap-filled + smoothed (Savitzky-Golay + Whittaker) via the shared numpy
-   core. The float band pipeline is batched into one (B, T) matrix per
-   distinct grid length, so the smoothers' sequential time loops run once
-   per length, vectorized across conversations — bit-identical per row to
-   the oracle's (1, T) calls (elementwise kernels only). One conversation
-   is one slice: a series never splits, so no halo/overlap handling is
-   needed (SURVEY.md §4 overlap row).
-
-Scale note: the unit of memory is one Arrow batch plus one conversation's
-minute grid (30-day conv = 43k slots ≈ 4 MB); stage 1 already collapsed
-raw turns into slots, so hot conversations arrive pre-reduced.
+Gap-fill, smoothing and the tier rollups run on these slots in the fused
+kernel (operators.fused; operators.chunk_split for giant conversations).
+Hot conversations therefore arrive there pre-reduced to one row per
+observed minute.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .. import engine_core
-from ..batching import arrow_conv_batches, conv_bounds, record_batch, schema_of
-
-TIER_1M_SCHEMA = (
-    "conv_id string, slot_start timestamp, present boolean, n_turns long, "
-    "tokens_user long, tokens_assistant long, tokens_tool long, "
-    "tool_calls long, alen double, fill_flag string, alen_filled double, "
-    "alen_sg double, alen_whit double"
-)
-_TIER_1M_PA = schema_of(TIER_1M_SCHEMA)
 
 _OBS_COLS = (
     "n_turns",
@@ -57,7 +29,6 @@ _OBS_COLS = (
     "alen_sum",
     "alen_n",
 )
-_INT_COLS = ("present", "n_turns", "tokens_user", "tokens_assistant", "tokens_tool", "tool_calls")
 
 
 def observed_slots(transcripts: DataFrame) -> DataFrame:
@@ -82,56 +53,3 @@ def observed_slots(transcripts: DataFrame) -> DataFrame:
         F.sum(F.when(is_role("assistant"), text_len).otherwise(0)).alias("alen_sum"),
         F.sum(F.when(is_role("assistant"), 1).otherwise(0)).alias("alen_n"),
     )
-
-
-def _grids_of_batch(tbl: dict[str, np.ndarray]) -> pa.RecordBatch:
-    """Expand one batch of complete conversations into grid rows."""
-    cid = tbl["conv_id"]
-    slot = tbl["slot_s"]
-    starts, bounds = conv_bounds(cid)
-    n_convs = len(starts)
-
-    grids: list[dict[str, np.ndarray]] = []
-    for i in range(n_convs):
-        sl = slice(bounds[i], bounds[i + 1])
-        grids.append(
-            engine_core.scatter_grid(slot[sl], *[tbl[c][sl] for c in _OBS_COLS])
-        )
-    filled, sg, whit, flags = engine_core.band_pipeline_rows(
-        [g["alen"] for g in grids],
-        [int(g["slot_start_s"][0]) // 60 for g in grids],
-    )
-    band = {i: (flags[i], filled[i], sg[i], whit[i]) for i in range(n_convs)}
-
-    lens = np.array([len(g["slot_start_s"]) for g in grids], dtype=np.int64)
-    data: dict[str, np.ndarray] = {
-        "conv_id": np.repeat(cid[starts], lens),
-        "slot_start": np.concatenate([g["slot_start_s"] for g in grids]) * 1_000_000,
-    }
-    for k in _INT_COLS:
-        data[k] = np.concatenate([g[k] for g in grids])
-    data["alen"] = np.concatenate([g["alen"] for g in grids])
-    for j, k in enumerate(("fill_flag", "alen_filled", "alen_sg", "alen_whit")):
-        data[k] = np.concatenate([band[i][j] for i in range(n_convs)])
-    return record_batch(data, _TIER_1M_PA)
-
-
-def _fill_smooth_iter(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for tbl in arrow_conv_batches(it):
-        yield _grids_of_batch(tbl)
-
-
-def fill_smooth(observed: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Dense, gap-filled, smoothed 1m tier (one grid row per minute slot)."""
-    n = partitions or int(
-        observed.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    clustered = observed.repartitionByRange(n, "conv_id").sortWithinPartitions(
-        "conv_id", "slot_s"
-    )
-    return clustered.mapInArrow(_fill_smooth_iter, TIER_1M_SCHEMA)
-
-
-def tier_1m(transcripts: DataFrame, partitions: int | None = None) -> DataFrame:
-    """raw turns -> dense smoothed 1-minute tier."""
-    return fill_smooth(observed_slots(transcripts), partitions)

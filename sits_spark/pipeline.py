@@ -45,6 +45,7 @@ from __future__ import annotations
 import logging
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -101,6 +102,16 @@ class RollupPipeline:
 
     def tier_path(self, tier: str) -> str:
         return os.path.join(self.table_path, TIER_DIRS[tier])
+
+    def _read_input(self, path: str) -> DataFrame:
+        """The input parquet table; a directory holding no data files is a
+        ValueError naming the path, not Spark's schema-inference error."""
+        try:
+            return self.spark.read.parquet(path)
+        except AnalysisException as e:
+            if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+                raise
+            raise ValueError(f"input path {path!r} holds no parquet files") from e
 
     def _plan_missing(self, tier_names, fp: str, resume: bool) -> list[int]:
         if not resume:
@@ -207,7 +218,7 @@ class RollupPipeline:
         /root/reference/R/api_gdalcubes.R:713-760).
         """
         fp = mf.input_fingerprint(input_path)
-        raw = self.spark.read.parquet(input_path)
+        raw = self._read_input(input_path)
         tier_names = ["tier_1m", "agg"] + (["packed_1h"] if with_pack else [])
         out = {t: self.tier_path(t) for t in tier_names}
 
@@ -252,7 +263,7 @@ class RollupPipeline:
         with extents read from the (narrow) observed table itself."""
         fp = mf.input_fingerprint(observed_path)
         obs_cols = ["conv_id", "slot_s", *regularize._OBS_COLS]
-        obs_all = self.spark.read.parquet(observed_path).select(*obs_cols)
+        obs_all = self._read_input(observed_path).select(*obs_cols)
         tier_names = ["tier_1m", "agg"] + (["packed_1h"] if with_pack else [])
         out = {t: self.tier_path(t) for t in tier_names}
 

@@ -159,16 +159,10 @@ def ts_reduce_skew_kurt(spark, sf_dir):
         (F.sum(F.col("value").cast(_DEC)).cast("double") / F.count("value")).alias("m")
     )
     j = e.join(means, "user_id")
-    d = F.col("value") - F.col("m")
-    n = F.count("value").cast("double")
-    m3 = F.sum(d * d * d) / n
-    s15 = F.pow(F.sum(d * d) / n, F.lit(1.5))
-    adj = F.sqrt(n * (n - 1)) / n - F.lit(2.0)
-    m4 = F.sum(d * d * d * d)
-    m2sq = F.pow(F.sum(d * d), F.lit(2.0))
+    v, m = F.col("value"), F.col("m")
     return j.groupBy("user_id").agg(
-        _r6((m3 / s15) * adj).alias("v_skew"),
-        _r6(n * m4 / m2sq).alias("v_kurt"),
+        _r6(R.t_skew(v, m)).alias("v_skew"),
+        _r6(R.t_kurt(v, m)).alias("v_kurt"),
     )
 
 

@@ -3,12 +3,15 @@
 These run the actual rollup engine on the deterministic synthetic
 transcript table (BASELINE.json input_hint — the driver's sf tables are
 not transcript-shaped). The fixture is also materialized to a stable
-parquet path so DuckDB can read the SAME input via ``read_parquet``:
+parquet path so DuckDB can read the SAME input via ``read_parquet``.
+Every tier query reads the fused kernel the pipeline writes with
+(``fused.fused_tiers`` over ``regularize.observed_slots``, viewed through
+``fused.slot_tier``/``agg_tier``/``pack_tier``):
 
 - The ``*_ints`` / ``*_meta`` queries project the exactly-integer (or
   single-division float) columns of each tier, which ARE SQL-expressible
   — they give the driver hard hash-checked oracles over the real engine
-  path (Catalyst slot agg + mapInArrow grid kernels).
+  path (Catalyst slot agg + the fused mapInArrow kernel).
 - The four full-tier queries include the smoothed float bands
   (Savitzky-Golay, Whittaker, Gorilla blobs) which no SQL engine
   reproduces; they stay rows-only here and are byte-matched against the
@@ -23,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fixtures
-from .operators import regularize, rollup
+from .operators import fused, regularize
 
 _N_CONVS = 150
 _SEED = 42
@@ -56,30 +59,41 @@ def _transcripts(spark: SparkSession) -> DataFrame:
     return spark.read.parquet(ensure_fixture())
 
 
+def _fused(
+    transcripts: DataFrame, tiers: tuple[str, ...] = (), with_pack: bool = False
+) -> DataFrame:
+    """raw turns -> the fused kernel's union-schema tier stream."""
+    return fused.fused_tiers(
+        regularize.observed_slots(transcripts), tiers, with_pack=with_pack
+    )
+
+
+def _agg(transcripts: DataFrame, tier: str) -> DataFrame:
+    """raw turns -> one aggregate tier, ``tier`` column dropped."""
+    return fused.agg_tier(_fused(transcripts, (tier,))).drop("tier")
+
+
 # -- full-tier queries (rows-only: smoothed floats are not SQL) ------------
 
 
 def transcript_tier_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """raw turns -> dense gap-filled smoothed 1-minute tier."""
-    return regularize.tier_1m(_transcripts(spark))
+    return fused.slot_tier(_fused(_transcripts(spark)))
 
 
 def transcript_agg_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1m tier -> 1h continuous aggregates."""
-    t1m = regularize.tier_1m(_transcripts(spark))
-    return rollup.rollup_tiers(t1m, ("1h",)).where(F.col("tier") == "1h").drop("tier")
+    return _agg(_transcripts(spark), "1h")
 
 
 def transcript_agg_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1m tier -> 1d continuous aggregates."""
-    t1m = regularize.tier_1m(_transcripts(spark))
-    return rollup.rollup_tiers(t1m, ("1d",)).where(F.col("tier") == "1d").drop("tier")
+    return _agg(_transcripts(spark), "1d")
 
 
 def transcript_packed_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gorilla-packed (conv, hour) blocks of the smoothed band."""
-    t1m = regularize.tier_1m(_transcripts(spark))
-    return rollup.pack_blocks(t1m)
+    return fused.pack_tier(_fused(_transcripts(spark), with_pack=True))
 
 
 # -- driver-oracle projections (hash-checked vs DuckDB) --------------------
@@ -96,8 +110,7 @@ def transcript_slots_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def transcript_grid_1m_ints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense 1m grid (gap slots materialized by the mapInArrow kernel),
     integer projection."""
-    t1m = regularize.tier_1m(_transcripts(spark))
-    return t1m.select(
+    return fused.slot_tier(_fused(_transcripts(spark))).select(
         "conv_id",
         F.col("slot_start").cast("long").alias("slot_s"),
         "present",
@@ -109,10 +122,8 @@ def transcript_grid_1m_ints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _agg_ints(spark: SparkSession, tier: str) -> DataFrame:
-    t1m = regularize.tier_1m(_transcripts(spark))
-    agg = rollup.rollup_tiers(t1m, (tier,)).where(F.col("tier") == tier)
-    return agg.select(
+def _agg_ints(transcripts: DataFrame, tier: str) -> DataFrame:
+    return _agg(transcripts, tier).select(
         "conv_id",
         F.col("window_start").cast("long").alias("window_s"),
         "n_slots",
@@ -128,12 +139,12 @@ def _agg_ints(spark: SparkSession, tier: str) -> DataFrame:
 def transcript_agg_1h_ints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1h tier through the engine kernels, integer/exact projection
     (turn_rate = one int/int division — bit-deterministic)."""
-    return _agg_ints(spark, "1h")
+    return _agg_ints(_transcripts(spark), "1h")
 
 
 def transcript_agg_1d_ints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1d tier through the engine kernels, integer/exact projection."""
-    return _agg_ints(spark, "1d")
+    return _agg_ints(_transcripts(spark), "1d")
 
 
 def transcript_pack_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -233,7 +244,7 @@ FROM dense GROUP BY 1, 2
 # variants derive the SAME transcript shape (BASELINE.json input_hint)
 # deterministically from the driver's registered `events` view — pure SQL
 # on both sides — and push it through the REAL engine kernels
-# (observed_slots -> tier_1m mapInArrow grid -> rollup_tiers -> pack_blocks),
+# (observed_slots -> fused mapInArrow kernel -> slot/agg/pack views),
 # so the driver gets hash-checked rows over the flagship path with zero
 # filesystem dependencies.
 
@@ -286,7 +297,7 @@ def transcript_ev_slots_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def transcript_ev_grid_1m_ints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine 1m tier (mapInArrow dense-grid kernel incl. gap slots),
     integer projection, on a bounded conv/time slice."""
-    t1m = regularize.tier_1m(_ev_transcripts(spark, sf_dir, "mod5_4d"))
+    t1m = fused.slot_tier(_fused(_ev_transcripts(spark, sf_dir, "mod5_4d")))
     return t1m.select(
         "conv_id",
         F.col("slot_start").cast("long").alias("slot_s"),
@@ -299,37 +310,20 @@ def transcript_ev_grid_1m_ints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ev_agg_ints(spark: SparkSession, sf_dir: str, tier: str, cond: str) -> DataFrame:
-    t1m = regularize.tier_1m(_ev_transcripts(spark, sf_dir, cond))
-    agg = rollup.rollup_tiers(t1m, (tier,)).where(F.col("tier") == tier)
-    return agg.select(
-        "conv_id",
-        F.col("window_start").cast("long").alias("window_s"),
-        "n_slots",
-        "n_turns",
-        "tokens_user",
-        "tokens_assistant",
-        "tokens_tool",
-        "tool_calls",
-        "turn_rate",
-    )
-
-
 def transcript_ev_agg_1h_ints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine 1h tier (conv-batched rollup kernel), exact projection."""
-    return _ev_agg_ints(spark, sf_dir, "1h", "mod5")
+    return _agg_ints(_ev_transcripts(spark, sf_dir, "mod5"), "1h")
 
 
 def transcript_ev_agg_1d_ints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine 1d tier over every conversation, exact projection."""
-    return _ev_agg_ints(spark, sf_dir, "1d", "all")
+    return _agg_ints(_ev_transcripts(spark, sf_dir, "all"), "1d")
 
 
 def transcript_ev_pack_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gorilla packed-block envelope (window, n points, first ts) through
     the engine's pack kernel."""
-    t1m = regularize.tier_1m(_ev_transcripts(spark, sf_dir, "mod5"))
-    pk = rollup.pack_blocks(t1m)
+    pk = fused.pack_tier(_fused(_ev_transcripts(spark, sf_dir, "mod5"), with_pack=True))
     return pk.select(
         "conv_id",
         F.col("window_start").cast("long").alias("window_s"),

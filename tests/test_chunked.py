@@ -1,6 +1,6 @@
 """Chunked-smoothing semantics (SURVEY.md §7 hard part 2).
 
-A conversation longer than MAX_UNCHUNKED_SLOTS is smoothed in fixed
+A conversation crossing a CHUNK_SLOTS boundary is smoothed in fixed
 epoch-aligned chunks with overlap+crop (engine_core.smooth_conv). These
 tests pin the semantics: SG is BIT-exact vs the unchunked solve, the
 chunked Whittaker deviates only near chunk boundaries within a tight
@@ -60,13 +60,12 @@ def test_band_pipeline_variants_agree_on_long_conv():
     lo_idx = 7_000_011
     alen = _series(n, seed=2)
     _f1, sg1, whit1 = engine_core.band_pipeline(alen.reshape(1, -1), lo_idx)
-    f2, sg2, whit2, _fl = engine_core.band_pipeline_rows([alen.copy()], [lo_idx])
     gb = np.array([0, n], dtype=np.int64)
-    f3, sg3, whit3, _fl3 = engine_core.band_pipeline_flat(
+    _f3, sg3, whit3, _fl3 = engine_core.band_pipeline_flat(
         alen.copy(), gb, np.array([lo_idx])
     )
-    assert np.array_equal(sg1[0], sg2[0]) and np.array_equal(sg1[0], sg3)
-    assert np.array_equal(whit1[0], whit2[0]) and np.array_equal(whit1[0], whit3)
+    assert np.array_equal(sg1[0], sg3)
+    assert np.array_equal(whit1[0], whit3)
 
 
 def test_chunk_grid_is_absolute_not_conv_relative():
@@ -101,7 +100,7 @@ def test_pipeline_bytematch_with_chunked_conv(spark, tmp_path_factory):
     from sits_spark import fixtures, oracle
     from sits_spark.pipeline import RollupPipeline
 
-    # ~25k turns, ~70 s mean gap -> grid span comfortably > MAX_UNCHUNKED
+    # ~25k turns, ~70 s mean gap -> grid span comfortably > CHUNK_SLOTS
     pdf = fixtures.gen_transcripts(40, seed=9, hot_turns=25_000)
     golden = oracle.full_pipeline(pdf)
     span = golden["tier_1m"].groupby("conv_id").size().max()
@@ -125,37 +124,42 @@ def test_pipeline_bytematch_with_chunked_conv(spark, tmp_path_factory):
 
 
 def test_cross_task_chunk_split_byte_identical(spark, tmp_path_factory):
-    """tier_1m_chunked distributes one conversation over many
-    (conv, chunk) tasks with halo + anchor rows — and must be BYTE
-    identical to the single-task kernel, including boundary-crossing
-    convs, interior multi-chunk gaps, and band-empty convs."""
+    """The production chunked writer (fused_write_chunked, forced for every
+    multi-slot conversation by giant_span_chunks=0) distributes each
+    conversation over (conv, chunk) tasks with halo + anchor rows — and
+    its three tiers must be BYTE identical to the single-node oracle,
+    including a 30k-turn boundary-crossing conv, an interior multi-chunk
+    gap, and band-empty convs."""
     import pandas as pd
-    from sits_spark import fixtures
-    from sits_spark.operators import chunk_split, regularize
+    from sits_spark import fixtures, oracle
+    from sits_spark.pipeline import RollupPipeline
+    from test_spark_pipeline import assert_frames_bitexact as bitexact
 
     pdf = fixtures.gen_transcripts(50, seed=13, hot_turns=30_000)
     # add a conv with a >2-chunk interior silent gap (stub-chunk path)
-    import numpy as np_
-    base = np_.datetime64("2025-01-01T00:00:00", "s")
+    base = np.datetime64("2025-01-01T00:00:00", "s")
     gap_rows = []
     for j, off in enumerate([0, 120, 240, engine_core.CHUNK_SLOTS * 3 * 60 + 60]):
         gap_rows.append(("conv-big-gap", j, "assistant", f"gap turn {j} xx", None,
-                         base + np_.timedelta64(off, "s")))
+                         base + np.timedelta64(off, "s")))
     gap = pd.DataFrame(gap_rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
     gap["turn_idx"] = gap["turn_idx"].astype("int32")
     pdf = pd.concat([pdf, gap], ignore_index=True)
+    golden = oracle.full_pipeline(pdf)
+    assert (golden["tier_1m"]["fill_flag"] == "empty").any(), "fixture needs band-empty convs"
 
     inp = str(tmp_path_factory.mktemp("cs_in") / "t")
     spark.createDataFrame(pdf).write.parquet(inp)
-    raw = spark.read.parquet(inp)
+    wh = str(tmp_path_factory.mktemp("cs_wh"))
+    pipe = RollupPipeline(spark, wh, giant_span_chunks=0)
+    pipe.run(inp, run_id="cs1")
 
-    want = regularize.tier_1m(raw).orderBy("conv_id", "slot_start").toPandas()
-    got = chunk_split.tier_1m_chunked(raw).orderBy("conv_id", "slot_start").toPandas()
-    assert len(got) == len(want)
-    assert list(got.columns) == list(want.columns)
-    for c in want.columns:
-        a, b = got[c].to_numpy(), want[c].to_numpy()
-        if a.dtype == np.float64:
-            assert np.array_equal(a.view(np.uint64), b.view(np.uint64)), c
-        else:
-            assert np.array_equal(a, b), c
+    bitexact(pipe.read_tier("tier_1m").toPandas(), golden["tier_1m"], ["conv_id", "slot_start"])
+    agg = pipe.read_tier("agg").toPandas()
+    for tier in ("1h", "1d"):
+        got = agg[agg["tier"] == tier].drop(columns="tier")
+        bitexact(got, golden[f"agg_{tier}"], ["conv_id", "window_start"])
+    pk = pipe.read_tier("packed_1h").toPandas()
+    pk["ts_d2"] = pk["ts_d2"].apply(bytes)
+    pk["vals_gorilla"] = pk["vals_gorilla"].apply(bytes)
+    bitexact(pk, golden["packed_1h"], ["conv_id", "window_start"])

@@ -2,11 +2,12 @@
 
 The Spark pipeline must reproduce the single-node oracle bit-for-bit at
 every tier, per-turn text must round-trip byte-exactly under stable
-(conv_id, turn_idx) order, the salted Catalyst aggregation path must equal
-the UDF path, and a killed-after-tier run must resume from manifests to a
-byte-identical result."""
+(conv_id, turn_idx) order, the full-tier transcript registry queries must
+equal the oracle too, and a killed-after-tier run must resume from
+manifests to a byte-identical result."""
 
 import os
+import re
 
 import numpy as np
 import pandas as pd
@@ -16,7 +17,7 @@ from pyspark.sql import functions as F
 
 from sits_spark import fixtures, oracle
 from sits_spark import manifest as mf
-from sits_spark.operators import regularize, rollup
+from sits_spark.operators import regularize
 from sits_spark.pipeline import RollupPipeline
 
 N_CONVS = 120
@@ -102,19 +103,37 @@ def test_packed_bitexact(spark, warehouse, golden):
     assert_frames_bitexact(got, golden["packed_1h"], ["conv_id", "window_start"])
 
 
-def test_salted_catalyst_sums_equal_udf_path(spark, warehouse):
-    t1m = _spark_tier(spark, warehouse, "tier_1m")
-    for tier in ("1h", "1d"):
-        catalyst = rollup.rollup_sums_catalyst(t1m, tier, salt_buckets=8).toPandas()
-        udf = (
-            _spark_tier(spark, warehouse, "agg")
-            .where(F.col("tier") == tier)
-            .select(catalyst.columns.tolist())
-            .toPandas()
-        )
-        assert_frames_bitexact(
-            catalyst, udf, ["conv_id", "window_start"]
-        )
+def test_transcript_full_tier_queries_bitexact(spark):
+    """The four rows-only transcript registry queries (fused_tiers union
+    stream through its slot/agg/pack views) equal the single-node oracle
+    bit for bit on the fixture they read."""
+    from sits_spark import transcript_queries as tq
+
+    pdf = fixtures.gen_transcripts(tq._N_CONVS, seed=tq._SEED, hot_turns=tq._HOT)
+    want = oracle.full_pipeline(pdf)
+    got = tq.transcript_tier_1m(spark, "").toPandas()
+    assert_frames_bitexact(got, want["tier_1m"], ["conv_id", "slot_start"])
+    for tier, query in (("1h", tq.transcript_agg_1h), ("1d", tq.transcript_agg_1d)):
+        got = query(spark, "").toPandas()
+        assert_frames_bitexact(got, want[f"agg_{tier}"], ["conv_id", "window_start"])
+    got = tq.transcript_packed_1h(spark, "").toPandas()
+    got["ts_d2"] = got["ts_d2"].apply(bytes)
+    got["vals_gorilla"] = got["vals_gorilla"].apply(bytes)
+    assert_frames_bitexact(got, want["packed_1h"], ["conv_id", "window_start"])
+
+
+def test_empty_input_raises_value_error_naming_path(spark, tmp_path_factory):
+    """An input directory with no parquet files fails with a ValueError
+    that names it, from both entry points, before any manifest write."""
+    empty = str(tmp_path_factory.mktemp("empty_in"))
+    wh = str(tmp_path_factory.mktemp("whe") / "tiers")
+    pipe = RollupPipeline(spark, wh)
+    msg = re.escape(f"input path '{empty}' holds no parquet files")
+    with pytest.raises(ValueError, match=msg):
+        pipe.run(empty, run_id="e-1")
+    with pytest.raises(ValueError, match=msg):
+        pipe.run_from_observed(empty, run_id="e-2")
+    assert not os.path.exists(os.path.join(wh, "_manifest"))
 
 
 def test_resume_after_kill_is_byte_identical(spark, input_path, golden, tmp_path_factory):
