@@ -57,13 +57,14 @@ _PRIORITY: list[str] = [
     "transcript_ev_agg_1h_ints",
     "transcript_ev_agg_1d_ints",
     "transcript_ev_pack_meta",
-    # sits-API facade verbs
+    # sits-API facade verbs (ts_reduce_skew_kurt is api.reduce's
+    # two-pass skew/kurt path)
     "api_accuracy_kappa",
     "api_clean_modal",
     "api_verbs_chain",
     "api_reclassify_predictors",
-    "api_reduce_moments",
-    "api_smooth_bayes",
+    "ts_reduce_skew_kurt",
+    "api_variance_window",
     "api_normalize_uncertainty",
     "api_classify_probs",
     # temporal reduce / regularize / smooth core
@@ -90,9 +91,9 @@ _PRIORITY: list[str] = [
     "ts_bayes_smooth",
     "ts_glcm_texture",
     # segmentation + per-label patterns (round 4; ts_uncertainty_margin
-    # and ts_reduce_skew_kurt ceded their window slots — their families
-    # stay covered by ts_entropy_uncertainty / api_reduce_moments, and
-    # they remain selfcheck-verified past the window)
+    # ceded its window slot — its family stays covered by
+    # ts_entropy_uncertainty, and it remains selfcheck-verified past the
+    # window)
     "ts_segment_sessions",
     "ts_label_patterns",
     # joins
@@ -113,7 +114,7 @@ _PRIORITY: list[str] = [
     # past the 50-entry verified window from here (selfcheck-covered):
     # ts_reduce_fslope ceded its slot to emb_cluster_dendro and
     # ts_autocorr_lags to doc_dedup_groups — both families keep multiple
-    # driver-green rows (ts_reduce_stats, api_reduce_moments,
+    # window-verified rows (ts_reduce_stats, ts_reduce_skew_kurt,
     # ts_mse_spectral) and the demoted rows stay selfcheck-verified
     "ts_reduce_fslope",
     "ts_autocorr_lags",

@@ -15,9 +15,10 @@ nothing materializes between verbs. Only `smooth` with the SG/Whittaker
 matrix kernels drops to Arrow (`mapInArrow`, batched per key run), exactly
 like the tier pipeline.
 
-The driver-checkable variants of these verbs (fixed parameters, DuckDB
-oracle) live in queries.py; this module is the parameterizable surface a
-user migrating from the reference would call.
+This module is the parameterizable surface a user migrating from the
+reference would call. The DuckDB-checked registry rows (queries.py,
+facade_queries.py) call these verbs with fixed parameters, so the oracle
+checks the code users run.
 """
 
 from __future__ import annotations
@@ -144,13 +145,16 @@ _PLAIN_METRICS: dict[str, Callable[[Column], Column]] = {
     "min": _red.t_min,
     "max": _red.t_max,
     "amplitude": _red.t_amplitude,
-    "mean": lambda c: _red.t_mean(c),
-    "median": _red.t_median,
+    "mean": _red.t_mean,
     "std": _red.t_std,
-    "q25": lambda c: _red.t_quantile(c, 0.25),
-    "q75": lambda c: _red.t_quantile(c, 0.75),
-    "iqr": _red.t_iqr,
-    "count": lambda c: F.count(c),
+    "count": F.count,
+}
+# quartile metrics -> reader over the shared t_quartiles buffer
+_PCT_METRICS: dict[str, Callable[[Column], Column]] = {
+    "q25": lambda p: p[_red.Q25],
+    "median": lambda p: p[_red.MEDIAN],
+    "q75": lambda p: p[_red.Q75],
+    "iqr": lambda p: p[_red.Q75] - p[_red.Q25],
 }
 
 
@@ -164,16 +168,21 @@ def reduce(
     """sits_reduce (R/sits_reduce.R:104-203 -> src/reduce_fns.cpp): named
     temporal statistics per key group, one shuffle total.
 
-    Plain metrics are single-pass Catalyst aggregates. ``skew``/``kurt``
-    use the reference's exact two-pass central-moment formulas
-    (reduce_fns.cpp:37-60): a means subaggregate shuffle-joined back (never
-    broadcast — key cardinality grows with data). ``fslope``
-    (reduce_fns.cpp:68-70) needs ``order_by`` and adds one window pass.
-    Output columns are named after the metrics."""
+    Plain metrics are single-pass Catalyst aggregates; ``mean``/``std``
+    divide exact decimal(18,4) sums (operators.reduce._dec contract) and
+    ``count`` counts non-NULL values. ``median``/``q25``/``q75``/``iqr``
+    all read ONE shared percentile buffer (operators.reduce.t_quartiles),
+    so asking for several costs one value-count map per group, not one
+    each. ``skew``/``kurt`` use the reference's exact two-pass
+    central-moment formulas (reduce_fns.cpp:37-60): a means subaggregate
+    shuffle-joined back (never broadcast — key cardinality grows with
+    data). ``fslope`` (reduce_fns.cpp:68-70) needs ``order_by`` and adds
+    one window pass. Output columns are named after the metrics."""
     vcol = F.col(value)
-    unknown = [m for m in metrics if m not in _PLAIN_METRICS and m not in ("skew", "kurt", "fslope")]
+    known = [*_PLAIN_METRICS, *_PCT_METRICS, "skew", "kurt", "fslope"]
+    unknown = [m for m in metrics if m not in known]
     if unknown:
-        raise ValueError(f"unknown metrics: {unknown}; known: {sorted(_PLAIN_METRICS) + ['skew', 'kurt', 'fslope']}")
+        raise ValueError(f"unknown metrics: {unknown}; known: {sorted(known)}")
 
     src = df
     if "fslope" in metrics:
@@ -185,19 +194,35 @@ def reduce(
         )
     needs_moments = "skew" in metrics or "kurt" in metrics
     if needs_moments:
+        # two-pass central moments: a single-pass power-sum form would
+        # be one scan but catastrophically cancels for |x| >> sd
         means = src.groupBy(*keys).agg(_red.t_mean(vcol).alias("_m"))
         src = src.join(means, list(keys))  # shuffle join: means ~ |keys|
 
     aggs: list[Column] = []
+    outs: list[Column] = []
     for m in metrics:
+        if m in _PCT_METRICS:
+            outs.append(_PCT_METRICS[m](F.col("_pct")).alias(m))
+            continue
         if m in _PLAIN_METRICS:
-            aggs.append(_PLAIN_METRICS[m](vcol).alias(m))
+            agg = _PLAIN_METRICS[m](vcol)
         elif m == "fslope":
-            aggs.append(F.max("_fslope_diff").alias(m))
+            agg = F.max("_fslope_diff")
         else:  # skew / kurt, reference formulas over d = x - mean
             moment = _red.t_skew if m == "skew" else _red.t_kurt
-            aggs.append(moment(vcol, F.col("_m")).alias(m))
-    return src.groupBy(*keys).agg(*aggs)
+            agg = moment(vcol, F.col("_m"))
+        aggs.append(agg.alias(m))
+        outs.append(F.col(m))
+    if any(m in _PCT_METRICS for m in metrics):
+        # round 6 (guide §1.2 per-task work): the quartiles (and the IQR
+        # difference) share ONE percentile(value, array(...)) aggregate
+        # buffer instead of building an independent value-count map per
+        # metric per group. Spark evaluates the array form with the exact
+        # same interpolation as the scalar calls (median == percentile
+        # 0.5), so every output is bit-identical.
+        aggs.append(_red.t_quartiles(vcol).alias("_pct"))
+    return src.groupBy(*keys).agg(*aggs).select(*keys, *outs)
 
 
 # ---------------------------------------------------------------- merge
@@ -780,17 +805,24 @@ def patterns(
     timeline, average per (label, slot), then smooth each label's curve
     with a centered moving mean of half-width ``smooth_radius`` (the
     closed-form stand-in for the reference's GAM fit). The second stage
-    is bounded by the label vocabulary, not the data."""
+    is bounded by the label vocabulary, not the data.
+
+    The per-slot mean divides an exact decimal(18,4) partial sum
+    (operators.reduce._dec, the contract ``reduce``'s mean has), so it
+    does not depend on Spark's partial-aggregate combine order."""
     slot_col = F.col(slot) if isinstance(slot, str) else slot
     hourly = df.groupBy(
         F.col(label_col).alias("label"), slot_col.alias("slot")
-    ).agg(F.sum(value).alias("_sv"), F.count(F.lit(1)).alias("n_obs"))
+    ).agg(
+        F.sum(_red._dec(F.col(value))).alias("_sv"),
+        F.count(F.lit(1)).alias("n_obs"),
+    )
     w = (
         Window.partitionBy("label")
         .orderBy("slot")
         .rowsBetween(-smooth_radius, smooth_radius)
     )
-    raw = F.col("_sv") / F.col("n_obs")
+    raw = F.col("_sv").cast("double") / F.col("n_obs")
     return hourly.select(
         "label",
         "slot",

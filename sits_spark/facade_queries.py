@@ -1,10 +1,12 @@
 """Driver-checkable queries built ONLY from the user-facing verb facade.
 
-queries.py proves each operator individually; these rows prove the
-`sits_spark.api` composition surface — the path a user migrating from the
-reference (sits_select |> sits_apply |> sits_reduce chains,
-R/sits_select.R + R/sits_apply.R + R/sits_reduce.R) actually writes —
-against the same DuckDB oracles. Because every verb is Catalyst-
+queries.py proves each operator individually (its reduce, smooth,
+segment, patterns, merge and select rows call the single verb); these
+rows cover the verbs it has no row for and the `sits_spark.api`
+composition surface — the path a user migrating from the reference
+(sits_select |> sits_apply |> sits_reduce chains, R/sits_select.R +
+R/sits_apply.R + R/sits_reduce.R) actually writes — against the same
+DuckDB oracles. Because every verb is Catalyst-
 declarative, a chained pipeline here still compiles to one optimized
 plan (filter pushdown through apply/reduce, single shuffle per groupBy).
 """
@@ -53,73 +55,13 @@ WITH t AS (
   FROM events WHERE event_type <> 'error'
 )
 SELECT user_id,
-       count(*) AS n_events,
+       count(v2) AS n_events,
        CAST(round(CAST(sum(CAST(v2 AS {_DEC})) AS DOUBLE) / count(v2), 6) AS DOUBLE) AS v_mean,
        min(v2) AS v_min,
        max(v2) AS v_max,
        CAST(round(CAST(quantile_cont(v2, 0.5) AS DOUBLE), 6) AS DOUBLE) AS v_median,
        CAST(round(CAST(quantile_cont(v2, 0.75) AS DOUBLE) - CAST(quantile_cont(v2, 0.25) AS DOUBLE), 6) AS DOUBLE) AS v_iqr
 FROM t GROUP BY user_id
-"""
-
-
-def api_reduce_moments(spark, sf_dir):
-    """Facade reduce's two-pass skew/kurt path (reference formulas,
-    src/reduce_fns.cpp:37-60; means shuffle-joined, never broadcast)."""
-    e = _events(spark, sf_dir)
-    red = api.reduce(e, ["user_id"], "value", ["skew", "kurt"])
-    return red.select(
-        "user_id", _r6("skew").alias("v_skew"), _r6("kurt").alias("v_kurt")
-    )
-
-
-SQL_API_REDUCE_MOMENTS = f"""
-WITH m AS (
-  SELECT user_id, CAST(sum(CAST(value AS {_DEC})) AS DOUBLE) / count(value) AS m
-  FROM events GROUP BY user_id
-)
-SELECT e.user_id,
-       CAST(round((sum(pow(e.value - m.m, 3)) / count(*))
-            / pow(sum(pow(e.value - m.m, 2)) / count(*), 1.5)
-            * (sqrt(count(*) * (count(*) - 1.0)) / count(*) - 2.0), 6) AS DOUBLE) AS v_skew,
-       CAST(round(count(*) * sum(pow(e.value - m.m, 4))
-            / pow(sum(pow(e.value - m.m, 2)), 2.0), 6) AS DOUBLE) AS v_kurt
-FROM events e JOIN m ON e.user_id = m.user_id
-GROUP BY e.user_id
-"""
-
-
-def api_smooth_bayes(spark, sf_dir):
-    """Facade Bayesian smoother (src/smooth_bayes.cpp:20-78 with
-    neigh_fraction=1): +-2 window prior, variance-weighted posterior —
-    pure Catalyst window expressions through api.smooth(method='bayes')."""
-    e = _events(spark, sf_dir)
-    sm = api.smooth(
-        e,
-        key="user_id",
-        order_by=["ts", "event_id"],
-        value="value",
-        method="bayes",
-        window=2,
-        smoothness=400.0,
-        out="v_bayes",
-    )
-    return sm.select("event_id", "user_id", _r6("v_bayes").alias("v_bayes"))
-
-
-SQL_API_SMOOTH_BAYES = """
-SELECT event_id, user_id,
-  CAST(round(CASE WHEN s0 < 1e-4 THEN m0
-             ELSE (s0 / (s0 + 400.0)) * value
-                  + (1.0 - s0 / (s0 + 400.0)) * m0 END, 6) AS DOUBLE) AS v_bayes
-FROM (
-  SELECT event_id, user_id, value,
-         avg(value) OVER w AS m0,
-         var_samp(value) OVER w AS s0
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING)
-)
 """
 
 
@@ -551,14 +493,12 @@ FACADE_REGISTRY: dict[str, tuple] = {
         api_reclassify_predictors,
         SQL_API_RECLASSIFY_PREDICTORS,
     ),
-    "api_reduce_moments": (api_reduce_moments, SQL_API_REDUCE_MOMENTS),
-    "api_smooth_bayes": (api_smooth_bayes, SQL_API_SMOOTH_BAYES),
     "api_normalize_uncertainty": (
         api_normalize_uncertainty,
         SQL_API_NORMALIZE_UNCERTAINTY,
     ),
-    # past the driver's 50-entry window (selfcheck-verified)
     "api_variance_window": (api_variance_window, SQL_API_VARIANCE_WINDOW),
+    # past the 50-entry verified window of queries() (selfcheck-verified)
     "api_uncertainty_sampling": (
         api_uncertainty_sampling,
         SQL_API_UNCERTAINTY_SAMPLING,

@@ -56,25 +56,21 @@ def t_mean(col: Column) -> Column:
     return (F.sum(_dec(col)).cast("double") / F.count(col)).alias("mean")
 
 
-def t_median(col: Column) -> Column:
-    """Exact interpolated median (reduce_fns.cpp:27-29)."""
-    return F.median(col)
+# index of each quartile in the t_quartiles buffer
+Q25, MEDIAN, Q75 = 0, 1, 2
 
 
-def t_quantile(col: Column, p: float) -> Column:
-    """Linear-interpolated quantile (reduce_fns.cpp:79-86).
+def t_quartiles(col: Column) -> Column:
+    """Exact linear-interpolated q25/median/q75 as ONE aggregate: an
+    array indexed by Q25/MEDIAN/Q75 (reduce_fns.cpp:27-29, 79-92; the
+    IQR is [Q75] - [Q25]).
 
     DOCUMENTED DEVIATION: the reference's arma::quantile is the R type-5
     definition; this engine standardizes on type-7 (numpy/Spark/DuckDB
     default linear interpolation) on every path, so q25/q75/IQR can
     differ from upstream sits for the same data (see also
     kernels.temp_quantile)."""
-    return F.percentile(col, F.lit(p))
-
-
-def t_iqr(col: Column) -> Column:
-    """reduce_fns.cpp:89-92."""
-    return F.percentile(col, F.lit(0.75)) - F.percentile(col, F.lit(0.25))
+    return F.percentile(col, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
 
 
 def t_std(col: Column) -> Column:

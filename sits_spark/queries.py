@@ -7,6 +7,10 @@ query, SURVEY.md §2) over the `events` (time-series), TPC-H-ish,
 Catalyst-native; the SQL string is the independent DuckDB oracle the
 driver hashes against.
 
+Where an ``api`` verb implements the operator (reduce, smooth, segment,
+patterns, merge, select, detect_change_dtw, smote), the builder calls it
+and only renames and rounds, so the oracle checks the code users run.
+
 Determinism rules (so order-insensitive value hashes match exactly):
 - selection-based stats (min/max/median/quantile/first-by-order) use raw
   input doubles — bit-deterministic;
@@ -22,7 +26,6 @@ import pandas as pd  # noqa: F401 — pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .operators import reduce as R
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -76,43 +79,25 @@ _DEC = "decimal(18,4)"
 
 def ts_reduce_stats(spark, sf_dir):
     """sits_reduce kernel family (/root/reference/src/reduce_fns.cpp:12-92)
-    as one grouped aggregation."""
-    e = _t(spark, sf_dir, "events")
-    v = F.col("value")
-    # round 6 (guide §1.2 per-task work): the three quantiles (and the
-    # IQR difference) share ONE percentile(value, array(...)) aggregate
-    # buffer instead of building three independent value-count maps per
-    # group. Spark evaluates the array form with the exact same
-    # interpolation as the scalar calls (median == percentile 0.5), so
-    # every output is bit-identical.
-    pct = F.percentile(v, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
-    agg = e.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        _r6(R.t_mean(v)).alias("v_mean"),
-        R.t_min(v).alias("v_min"),
-        R.t_max(v).alias("v_max"),
-        _r6(R.t_amplitude(v)).alias("v_amplitude"),
-        _r6(R.t_std(v)).alias("v_std"),
-        pct.alias("pct"),
+    as one grouped aggregation (api.reduce)."""
+    from . import api
+
+    red = api.reduce(
+        _t(spark, sf_dir, "events"), ["user_id"], "value",
+        ["count", "mean", "min", "max", "amplitude", "median", "std", "q25", "q75", "iqr"],
     )
-    return agg.select(
-        "user_id",
-        "n_events",
-        "v_mean",
-        "v_min",
-        "v_max",
-        "v_amplitude",
-        _r6(F.col("pct")[1]).alias("v_median"),
-        "v_std",
-        _r6(F.col("pct")[0]).alias("v_fqr"),
-        _r6(F.col("pct")[2]).alias("v_tqr"),
-        _r6(F.col("pct")[2] - F.col("pct")[0]).alias("v_iqr"),
+    return red.select(
+        "user_id", F.col("count").alias("n_events"), _r6("mean").alias("v_mean"),
+        F.col("min").alias("v_min"), F.col("max").alias("v_max"),
+        _r6("amplitude").alias("v_amplitude"), _r6("median").alias("v_median"),
+        _r6("std").alias("v_std"), _r6("q25").alias("v_fqr"), _r6("q75").alias("v_tqr"),
+        _r6("iqr").alias("v_iqr"),
     )
 
 
 SQL_TS_REDUCE_STATS = f"""
 SELECT user_id,
-       count(*) AS n_events,
+       count(value) AS n_events,
        CAST(round(CAST(sum(CAST(value AS {_DEC})) AS DOUBLE) / count(value), 6) AS DOUBLE) AS v_mean,
        min(value) AS v_min,
        max(value) AS v_max,
@@ -131,14 +116,11 @@ FROM events GROUP BY user_id
 def ts_reduce_fslope(spark, sf_dir):
     """t_fslope: max |first difference| per series ordered by (ts, event_id)
     (/root/reference/src/reduce_fns.cpp:68-70)."""
+    from . import api
+
     e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    d = F.abs(F.col("value") - F.lag("value").over(w))
-    return (
-        e.select("user_id", d.alias("d"))
-        .groupBy("user_id")
-        .agg(_r6(F.max("d")).alias("v_fslope"))
-    )
+    red = api.reduce(e, ["user_id"], "value", ["fslope"], order_by=["ts", "event_id"])
+    return red.select("user_id", _r6("fslope").alias("v_fslope"))
 
 
 SQL_TS_REDUCE_FSLOPE = """
@@ -151,19 +133,10 @@ GROUP BY user_id
 def ts_reduce_skew_kurt(spark, sf_dir):
     """t_skewness / t_kurtosis with the reference's exact formulas
     (/root/reference/src/reduce_fns.cpp:37-60), two-pass central moments."""
-    e = _t(spark, sf_dir, "events")
-    # two-pass central moments (power-sum single-pass would be one scan
-    # but catastrophically cancels for |x| >> sd); the means side grows
-    # with key cardinality, so it shuffle-joins — never broadcasts
-    means = e.groupBy("user_id").agg(
-        (F.sum(F.col("value").cast(_DEC)).cast("double") / F.count("value")).alias("m")
-    )
-    j = e.join(means, "user_id")
-    v, m = F.col("value"), F.col("m")
-    return j.groupBy("user_id").agg(
-        _r6(R.t_skew(v, m)).alias("v_skew"),
-        _r6(R.t_kurt(v, m)).alias("v_kurt"),
-    )
+    from . import api
+
+    red = api.reduce(_t(spark, sf_dir, "events"), ["user_id"], "value", ["skew", "kurt"])
+    return red.select("user_id", _r6("skew").alias("v_skew"), _r6("kurt").alias("v_kurt"))
 
 
 SQL_TS_REDUCE_SKEW_KURT = f"""
@@ -294,18 +267,12 @@ FROM events GROUP BY 1, 2
 def ts_select_interval(spark, sf_dir):
     """sits_select temporal interval + value-range predicate
     (/root/reference/R/api_select.R:42-52, R/api_ts.R:306-309)."""
-    e = _t(spark, sf_dir, "events")
-    return e.where(
-        (F.col("ts") >= F.lit("2024-01-10")) & (F.col("ts") < F.lit("2024-01-20"))
-    ).select(
-        "event_id",
-        "user_id",
-        "ts",
-        "event_type",
-        "value",
-        F.when(F.col("value").between(50.0, 150.0), F.col("value")).alias(
-            "value_clamped"
-        ),
+    from . import api
+
+    sel = api.select(_t(spark, sf_dir, "events"), start="2024-01-10", end="2024-01-20")
+    clamped = F.when(F.col("value").between(50.0, 150.0), F.col("value"))
+    return sel.select(
+        "event_id", "user_id", "ts", "event_type", "value", clamped.alias("value_clamped")
     )
 
 
@@ -363,14 +330,13 @@ FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts >= p.ts
 def ts_merge_bind(spark, sf_dir):
     """Cube merge, bind strategy = row union
     (/root/reference/R/api_merge.R:131-143)."""
+    from . import api
+
     e = _t(spark, sf_dir, "events")
-    a = e.where(F.col("event_type") == "click")
-    b = e.where(F.col("event_type") == "error")
-    return (
-        a.unionByName(b)
-        .groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    a = api.select(e, where=F.col("event_type") == "click")
+    b = api.select(e, where=F.col("event_type") == "error")
+    bound = api.merge(a, b, "bind")
+    return bound.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("n"))
 
 
 SQL_TS_MERGE_BIND = """
@@ -1872,25 +1838,17 @@ _BAYES_SMOOTHNESS = 400.0
 
 def ts_bayes_smooth(spark, sf_dir):
     """Bayesian smoother (/root/reference/src/smooth_bayes.cpp:20-78 with
-    neigh_fraction = 1.0): neighborhood = the +-2 window along each
-    user's series; prior m0/s0 = mean/sample-variance of the window;
+    neigh_fraction = 1.0; api.smooth): neighborhood = the +-2 window along
+    each user's series; prior m0/s0 = mean/sample-variance of the window;
     posterior = w*x + (1-w)*m0 with w = s0/(s0 + smoothness); degenerate
-    windows (s0 < 1e-4) and NULL centers collapse to m0."""
-    e = _t(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-2, 2)
+    windows (s0 < 1e-4) collapse to m0."""
+    from . import api
+
+    sm = api.smooth(
+        _t(spark, sf_dir, "events"), "user_id", ["ts", "event_id"], "value", "bayes",
+        out="v_bayes", window=2, smoothness=_BAYES_SMOOTHNESS,
     )
-    m0 = F.avg("value").over(w)
-    s0 = F.var_samp("value").over(w)
-    wt = s0 / (s0 + F.lit(_BAYES_SMOOTHNESS))
-    smoothed = F.when(s0 < 1e-4, m0).otherwise(
-        wt * F.col("value") + (F.lit(1.0) - wt) * m0
-    )
-    return e.select(
-        "event_id", "user_id", _r6(smoothed).alias("v_bayes")
-    )
+    return sm.select("event_id", "user_id", _r6("v_bayes").alias("v_bayes"))
 
 
 SQL_TS_BAYES_SMOOTH = f"""
@@ -1912,31 +1870,22 @@ FROM (
 def ts_merge_densify(spark, sf_dir):
     """Cube merge, densify + compactify strategies
     (/root/reference/R/api_merge.R:144-230): two bands (click/view daily
-    means) on a UNION timeline (densify: full outer join, gaps NULL);
-    ``in_both`` marks the compactified (zipper-overlap) subset."""
-    e = _t(spark, sf_dir, "events")
+    means, api.reduce) on a UNION timeline (api.merge densify: full outer
+    join, gaps NULL); ``in_both`` marks the compactified (zipper-overlap)
+    subset."""
+    from . import api
+
+    e = api.apply(_t(spark, sf_dir, "events"), day=F.date_trunc("day", "ts"))
 
     def band(t):
-        return (
-            e.where(F.col("event_type") == t)
-            .groupBy("user_id", F.date_trunc("day", "ts").alias("day"))
-            .agg(
-                _r6(
-                    F.sum(F.col("value").cast(_DEC)).cast("double") / F.count(F.lit(1))
-                ).alias(f"{t}_mean")
-            )
-        )
+        sel = api.select(e, where=F.col("event_type") == t)
+        return api.reduce(sel, ["user_id", "day"], "value", ["mean"])
 
-    a, b = band("click"), band("view")
-    j = a.join(b, ["user_id", "day"], "full_outer")
+    j = api.merge(band("click"), band("view"), "densify", keys=("user_id", "day"))
+    click, view = _r6("mean_a"), _r6("mean_b")
+    both = click.isNotNull() & view.isNotNull()
     return j.select(
-        "user_id",
-        "day",
-        "click_mean",
-        "view_mean",
-        (F.col("click_mean").isNotNull() & F.col("view_mean").isNotNull()).alias(
-            "in_both"
-        ),
+        "user_id", "day", click.alias("click_mean"), view.alias("view_mean"), both.alias("in_both")
     )
 
 
@@ -2904,36 +2853,22 @@ def ts_segment_sessions(spark, sf_dir):
     /root/reference/R/sits_segmentation.R:60-118 — here adjacency is
     temporal, the merge criterion is the gap threshold).
 
-    Islands-and-gaps: a running sum of is-new-segment flags over the
-    per-key ordered window labels every row with its segment id in ONE
-    pass — no iteration, no UDF; the window shuffle is the only exchange
-    and it is keyed by user_id (the series key), so at 100 TB it
-    partitions by series exactly like every other per-series operator
-    here. Epoch-second arithmetic keeps the gap test integer-exact in
-    both engines."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # NTZ timestamps need the timestamp hop before the epoch-long cast
-    s = F.col("ts").cast("timestamp").cast("long")
-    gap = s - F.lag(s).over(w)
-    seg = F.sum(
-        F.when(gap.isNull() | (gap > 3600), F.lit(1)).otherwise(F.lit(0))
-    ).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return (
-        e.select("user_id", "event_id", "ts", "value", seg.alias("seg_id"))
-        .groupBy("user_id", "seg_id")
-        .agg(
-            F.min("ts").alias("seg_start"),
-            F.max("ts").alias("seg_end"),
-            F.count(F.lit(1)).alias("n_events"),
-            # exact-decimal sum before the divide (repo convention, cf.
-            # ts_mse_spectral): Spark's partial-agg order vs DuckDB's
-            # sequential sum can differ at ulp level on raw doubles
-            _r6(
-                F.sum(F.col("value").cast(_DEC)).cast("double")
-                / F.count(F.lit(1))
-            ).alias("avg_value"),
-        )
+    api.segment labels the rows in one window pass keyed by user_id (the
+    series key), so at 100 TB it partitions by series exactly like every
+    other per-series operator here. Epoch-second arithmetic keeps the gap
+    test integer-exact in both engines."""
+    from . import api
+
+    seg = api.segment(_t(spark, sf_dir, "events"), ["user_id"], ["ts", "event_id"], gap_s=3600)
+    n = F.count(F.lit(1))
+    return seg.groupBy("user_id", "seg_id").agg(
+        F.min("ts").alias("seg_start"),
+        F.max("ts").alias("seg_end"),
+        n.alias("n_events"),
+        # exact-decimal sum before the divide (repo convention, cf.
+        # ts_mse_spectral): Spark's partial-agg order vs DuckDB's
+        # sequential sum can differ at ulp level on raw doubles
+        _r6(F.sum(F.col("value").cast(_DEC)).cast("double") / n).alias("avg_value"),
     )
 
 
@@ -2976,29 +2911,13 @@ def ts_label_patterns(spark, sf_dir):
     pattern with a centered 3-slot mean (sits_patterns' align-to-common-
     timeline + smooth-fit shape, /root/reference/R/sits_patterns.R:57-95,
     with the GAM fit replaced by a fixed moving-average kernel so both
-    engines are closed-form).
+    engines are closed-form; api.patterns)."""
+    from . import api
 
-    Two hash aggregations (map-side partial) and one tiny window over
-    the 24xlabels pattern table — the second stage is bounded by the
-    label-vocabulary size, not the data, so at 100 TB everything after
-    the first groupBy is effectively free."""
-    e = _t(spark, sf_dir, "events")
-    hourly = e.groupBy(
-        F.col("event_type").alias("label"), F.hour("ts").alias("slot")
-    ).agg(
-        # exact-decimal partial sums (repo convention): the raw-double
-        # sum is sensitive to Spark's partial-agg combine order
-        F.sum(F.col("value").cast(_DEC)).alias("sv"),
-        F.count(F.lit(1)).alias("n_obs"),
-    )
-    w = Window.partitionBy("label").orderBy("slot").rowsBetween(-1, 1)
-    raw = F.col("sv").cast("double") / F.col("n_obs")
-    return hourly.select(
-        "label",
-        "slot",
-        "n_obs",
-        _r6(raw).alias("pattern_raw"),
-        _r6(F.avg(raw).over(w)).alias("pattern_smooth"),
+    pat = api.patterns(_t(spark, sf_dir, "events"), "event_type", "value", F.hour("ts"))
+    return pat.select(
+        "label", "slot", "n_obs",
+        _r6("pattern_raw").alias("pattern_raw"), _r6("pattern_smooth").alias("pattern_smooth"),
     )
 
 

@@ -52,7 +52,8 @@ def test_reduce_matches_numpy(series_df):
         r.conv_id: r
         for r in api.reduce(
             series_df, ["conv_id"], "value",
-            ["mean", "std", "min", "max", "median", "iqr", "skew", "kurt", "count", "fslope"],
+            ["mean", "std", "min", "max", "median", "iqr", "skew", "kurt", "count", "fslope",
+             "q25", "q75", "amplitude"],
             order_by=["turn_idx"],
         ).collect()
     }
@@ -63,6 +64,11 @@ def test_reduce_matches_numpy(series_df):
         assert got[cid]["std"] == pytest.approx(v.std(ddof=1), abs=1e-3)
         assert got[cid]["min"] == v.min() and got[cid]["max"] == v.max()
         assert got[cid]["median"] == pytest.approx(np.median(v))
+        q25, q75 = np.percentile(v, [25, 75], method="linear")
+        assert got[cid]["q25"] == pytest.approx(q25)
+        assert got[cid]["q75"] == pytest.approx(q75)
+        assert got[cid]["iqr"] == pytest.approx(q75 - q25)
+        assert got[cid]["amplitude"] == pytest.approx(np.ptp(v))
         assert got[cid]["count"] == len(v)
         assert got[cid]["fslope"] == pytest.approx(np.abs(np.diff(v)).max())
         n, d = len(v), v - v.mean()
@@ -70,6 +76,23 @@ def test_reduce_matches_numpy(series_df):
         kurt = n * (d**4).sum() / ((d**2).sum()) ** 2
         assert got[cid]["skew"] == pytest.approx(skew, rel=1e-9)
         assert got[cid]["kurt"] == pytest.approx(kurt, rel=1e-9)
+
+
+def test_reduce_skips_null_values(spark):
+    """A NULL value is not an observation: count counts non-NULL values
+    and every other metric is computed over the rest of the series."""
+    df = spark.createDataFrame(
+        [("c", 0, 1.0), ("c", 1, None), ("c", 2, 3.0), ("c", 3, 8.0)],
+        "conv_id string, turn_idx int, value double",
+    )
+    r = api.reduce(
+        df, ["conv_id"], "value", ["count", "mean", "min", "max", "median", "q25", "iqr"]
+    ).first()
+    assert r["count"] == 3
+    assert r["mean"] == 4.0
+    assert (r["min"], r["max"]) == (1.0, 8.0)
+    assert r["median"] == 3.0
+    assert r["q25"] == 2.0 and r["iqr"] == 3.5
 
 
 def test_merge_strategies(spark):
