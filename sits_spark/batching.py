@@ -30,14 +30,23 @@ import pyarrow as pa
 def _to_numpy(col: pa.ChunkedArray | pa.Array) -> np.ndarray:
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
+    if pa.types.is_struct(col.type):
+        # an object array of dicts of exact Python scalars (to_numpy would
+        # route nullable int fields through float64); NULL rows are None
+        out = np.full(len(col), None, dtype=object)
+        valid = np.flatnonzero(col.is_valid().to_numpy(zero_copy_only=False))
+        out[valid] = col.take(valid).to_pylist()
+        return out
     return col.to_numpy(zero_copy_only=False)
 
 
 def arrow_conv_batches(
-    it: Iterator[pa.RecordBatch], key: str = "conv_id"
+    it: Iterator[pa.RecordBatch], key: str | tuple[str, ...] = "conv_id"
 ) -> Iterator[dict[str, np.ndarray]]:
     """Re-chunk an iterator of key-sorted RecordBatches into dict-of-numpy
-    tables containing only complete key groups."""
+    tables containing only complete key groups. ``key`` is one column or
+    a tuple of columns that together form the group key."""
+    keys = (key,) if isinstance(key, str) else key
     buf: dict[str, np.ndarray] | None = None
     names: list[str] | None = None
     for rb in it:
@@ -47,18 +56,18 @@ def arrow_conv_batches(
         if buf is not None:
             tbl = {n: np.concatenate([buf[n], tbl[n]]) for n in names}
             buf = None
-        n_rows = len(tbl[key])
-        if n_rows == 0:
+        if len(tbl[keys[0]]) == 0:
             continue
-        keys = tbl[key]
         # hold back the trailing key RUN (keys are run-contiguous but not
         # necessarily globally sorted — e.g. sorted by (bucket, conv_id))
-        neq = keys != keys[-1]
+        neq = np.zeros(len(tbl[keys[0]]), dtype=bool)
+        for k in keys:
+            neq |= tbl[k] != tbl[k][-1]
         cut = int(neq.nonzero()[0][-1]) + 1 if neq.any() else 0
         buf = {n: v[cut:] for n, v in tbl.items()}
         if cut:
             yield {n: v[:cut] for n, v in tbl.items()}
-    if buf is not None and len(buf[key]):
+    if buf is not None and len(buf[keys[0]]):
         yield buf
 
 

@@ -31,13 +31,6 @@ __all__ = [
     "temp_std",
     "temp_min",
     "temp_max",
-    "temp_amplitude",
-    "temp_fslope",
-    "temp_mse",
-    "temp_skew",
-    "temp_kurt",
-    "temp_quantile",
-    "temp_iqr",
 ]
 
 # ---------------------------------------------------------------------------
@@ -398,58 +391,6 @@ def temp_median(mtx: np.ndarray) -> np.ndarray:
 def temp_std(mtx: np.ndarray) -> np.ndarray:
     """reduce_fns.cpp:32-34 — arma::stddev norm_type 0 = sample (n-1)."""
     return np.std(mtx, axis=1, ddof=1)
-
-
-def temp_amplitude(mtx: np.ndarray) -> np.ndarray:
-    """reduce_fns.cpp:63-65."""
-    return np.max(mtx, axis=1) - np.min(mtx, axis=1)
-
-
-def temp_fslope(mtx: np.ndarray) -> np.ndarray:
-    """reduce_fns.cpp:68-70 — max |first difference| along time."""
-    return np.max(np.abs(np.diff(mtx, axis=1)), axis=1)
-
-
-def temp_skew(mtx: np.ndarray) -> np.ndarray:
-    """Adjusted Fisher-Pearson skewness, reduce_fns.cpp:37-49 (including
-    the reference's literal adjustment factor sqrt(n(n-1))/n - 2)."""
-    n = mtx.shape[1]
-    adj = np.sqrt(n * (n - 1.0)) / n - 2.0
-    mean = np.mean(mtx, axis=1, keepdims=True)
-    m3 = np.sum((mtx - mean) ** 3, axis=1) / n
-    s = (np.sum((mtx - mean) ** 2, axis=1) / n) ** 1.5
-    return (m3 / s) * adj
-
-
-def temp_kurt(mtx: np.ndarray) -> np.ndarray:
-    """Pearson kurtosis (normal -> 3.0), reduce_fns.cpp:52-60."""
-    n = mtx.shape[1]
-    mean = np.mean(mtx, axis=1, keepdims=True)
-    m4 = np.sum((mtx - mean) ** 4, axis=1)
-    m2 = np.sum((mtx - mean) ** 2, axis=1) ** 2
-    return n * m4 / m2
-
-
-def temp_mse(mtx: np.ndarray) -> np.ndarray:
-    """Mean spectral energy, reduce_fns.cpp:73-76:
-    mean(|FFT(x)|^2) per row (unnormalized DFT, as arma::fft). By
-    Parseval's theorem this equals sum(x^2) exactly; the engine's
-    Catalyst path (queries.ts_mse_spectral) uses that identity — the
-    equivalence is asserted in tests/test_kernels.py."""
-    return np.mean(np.abs(np.fft.fft(mtx, axis=1)) ** 2, axis=1)
-
-
-def temp_quantile(mtx: np.ndarray, p: float) -> np.ndarray:
-    """reduce_fns.cpp:79-86 — arma::quantile uses the R type-5 definition;
-    numpy's 'midpoint'-free equivalent is interpolation='linear' on
-    (n*p - 0.5) positions. We standardize on numpy's default linear
-    interpolation (R type-7), identically on both engine and oracle."""
-    return np.quantile(mtx, p, axis=1)
-
-
-def temp_iqr(mtx: np.ndarray) -> np.ndarray:
-    """reduce_fns.cpp:89-92."""
-    return temp_quantile(mtx, 0.75) - temp_quantile(mtx, 0.25)
 
 
 def dtw_windows(wins: np.ndarray, pattern: np.ndarray) -> np.ndarray:

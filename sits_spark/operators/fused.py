@@ -8,6 +8,17 @@ in a single conv-batched pass — the Spark analog of the reference
 computing every requested band in one chunk traversal
 (/root/reference/R/api_apply.R:114-138 block loop).
 
+One stream feeds the kernel: observed slots keyed by (conv_id, chunk)
+(operators.chunk_split.keyed_stream), range-partitioned once by
+(bucket, conv_id, chunk) and sorted. An ordinary conversation is one
+chunk-0 group that stays whole inside one task and goes to the flat
+engine_core kernels; a conversation tagged as a giant arrives as
+per-(conv, chunk) groups with halo and anchor rows, spread over tasks,
+and goes to chunk_split's per-chunk kernel. Both kinds of series leave
+through one generator (``_emit_tiers``); the oracle's per-conv
+engine_core functions are the independent reference they are
+byte-matched against in tests/test_spark_pipeline.py.
+
 Two sinks over the same kernel stream:
 
 - ``fused_tiers``: a UNION-schema DataFrame (``row_kind`` in
@@ -16,7 +27,7 @@ Two sinks over the same kernel stream:
   writes its (row_kind, bucket, day) parquet files directly via pyarrow
   and returns only per-partition row-count stats. This is the
   DataSourceV2-writer pattern realized at the operator level: the input
-  is already range-clustered by (bucket, conv_id), so the write needs no
+  is already range-clustered by bucket, so the write needs no
   repartition exchange and no partition sort, each tier's files carry its
   OWN narrow schema (no union nulls), and the 3-tier fan-out costs one
   action instead of three. Idempotent under task retry: file names are
@@ -24,12 +35,6 @@ Two sinks over the same kernel stream:
   pure function of the input split. Atomicity/visibility is owned by the
   pipeline's manifest commit (sits_spark.manifest), exactly as Iceberg
   writers hand visibility to the catalog commit.
-
-Both sinks, and the giant-conversation writer in operators.chunk_split,
-emit their rows through one generator (``_emit_tiers``) over the flat
-engine_core kernels; the oracle's per-conv engine_core functions are the
-independent reference they are byte-matched against in
-tests/test_spark_pipeline.py.
 """
 
 from __future__ import annotations
@@ -43,6 +48,7 @@ from pyspark.sql import DataFrame
 
 from .. import engine_core
 from ..batching import arrow_conv_batches, conv_bounds, record_batch, schema_of
+from . import chunk_split
 from .regularize import _OBS_COLS
 
 TIER_1M_SCHEMA = (
@@ -107,34 +113,56 @@ def require_no_speculation(spark) -> None:
 def _tier_stream(
     it: Iterator[pa.RecordBatch], tiers: tuple[str, ...], with_pack: bool
 ):
-    """Kernel core: yields (kind, columns, n_rows) per conv-batch, where
-    ``columns`` maps each output column (timestamps as int64 epoch-µs,
-    plus ``bucket`` int32 and ``day`` int32 epoch-days) to a numpy array."""
-    for tbl in arrow_conv_batches(it):
-        cid = tbl["conv_id"]
-        bkt = tbl["bucket"]
-        starts, bounds = conv_bounds(cid)
+    """Kernel core: yields (kind, columns, n_rows) per batch of series,
+    where ``columns`` maps each output column (timestamps as int64
+    epoch-µs, plus ``bucket`` int32 and ``day`` int32 epoch-days) to a
+    numpy array. Whole-conversation rows go to the flat kernels, giant
+    (conv, chunk) groups to chunk_split's; both emit via ``_emit_tiers``."""
+    for tbl in arrow_conv_batches(_non_null_convs(it), key=("conv_id", "chunk")):
+        whole = tbl["marker"] == chunk_split.WHOLE_ROW
+        if whole.any():
+            yield from _emit_tiers(*_whole_grids(_rows(tbl, whole)), tiers, with_pack)
+        if not whole.all():
+            for grids in chunk_split.chunk_grids(_rows(tbl, ~whole), FLUSH_ROWS):
+                yield from _emit_tiers(*grids, tiers, with_pack)
 
-        # --- dense grids + band pipeline, flat across the whole batch ---
-        grid, gb = engine_core.scatter_grid_flat(
-            tbl["slot_s"], bounds, {c: tbl[c] for c in _OBS_COLS}
-        )
-        filled, sg, whit, flags = engine_core.band_pipeline_flat(
-            grid["alen"], gb, grid["slot_start_s"][gb[:-1]] // 60
-        )
-        slot_data: dict[str, np.ndarray] = {
-            "slot_start_s": grid["slot_start_s"],
-            "alen": grid["alen"],
-            "fill_flag": flags,
-            "alen_filled": filled,
-            "alen_sg": sg,
-            "alen_whit": whit,
-        }
-        for k in ("present", *engine_core._SUM_COLS):
-            slot_data[k] = grid[k]
-        yield from _emit_tiers(
-            slot_data, gb, cid[starts], bkt[starts].astype(np.int32), tiers, with_pack
-        )
+
+def _non_null_convs(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for rb in it:
+        if rb.column("conv_id").null_count:
+            raise ValueError(
+                f"conv_id is NULL in {rb.column('conv_id').null_count} observed "
+                "slot rows: every turn needs a conversation id"
+            )
+        yield rb
+
+
+def _rows(tbl: dict[str, np.ndarray], mask: np.ndarray) -> dict[str, np.ndarray]:
+    return tbl if mask.all() else {k: v[mask] for k, v in tbl.items()}
+
+
+def _whole_grids(tbl: dict[str, np.ndarray]) -> tuple:
+    """Dense grids + band pipeline of whole conversations, flat across the
+    batch, as ``_emit_tiers``' (slot_data, gb, conv_ids, buckets)."""
+    cid = tbl["conv_id"]
+    starts, bounds = conv_bounds(cid)
+    grid, gb = engine_core.scatter_grid_flat(
+        tbl["slot_s"], bounds, {c: tbl[c] for c in _OBS_COLS}
+    )
+    filled, sg, whit, flags = engine_core.band_pipeline_flat(
+        grid["alen"], gb, grid["slot_start_s"][gb[:-1]] // 60
+    )
+    slot_data: dict[str, np.ndarray] = {
+        "slot_start_s": grid["slot_start_s"],
+        "alen": grid["alen"],
+        "fill_flag": flags,
+        "alen_filled": filled,
+        "alen_sg": sg,
+        "alen_whit": whit,
+    }
+    for k in ("present", *engine_core._SUM_COLS):
+        slot_data[k] = grid[k]
+    return slot_data, gb, cid[starts], tbl["bucket"][starts].astype(np.int32)
 
 
 def _emit_tiers(
@@ -214,9 +242,13 @@ def _fused_iter(tiers: tuple[str, ...], with_pack: bool = True):
     return fn
 
 
-def _cluster(observed: DataFrame, partitions: int | None) -> DataFrame:
-    """Range-cluster by (bucket, conv_id) and sort — a conversation stays
-    whole inside one task and each task's output covers few buckets, so a
+def _cluster(
+    observed: DataFrame, partitions: int | None, giants: DataFrame | None = None
+) -> DataFrame:
+    """The one kernel stream: range-cluster the keyed rows by
+    (bucket, conv_id, chunk) and sort — an ordinary conversation (one
+    chunk-0 group) stays whole inside one task, a giant's chunks spread
+    over tasks, and each task's output covers few buckets, so a
     (bucket, day)-partitioned write needs no further exchange."""
     from .. import manifest as mf
 
@@ -224,9 +256,10 @@ def _cluster(observed: DataFrame, partitions: int | None) -> DataFrame:
         observed.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     return (
-        observed.withColumn("bucket", mf.bucket_expr())
-        .repartitionByRange(n, "bucket", "conv_id")
-        .sortWithinPartitions("bucket", "conv_id", "slot_s")
+        chunk_split.keyed_stream(observed, giants)
+        .withColumn("bucket", mf.bucket_expr())
+        .repartitionByRange(n, "bucket", "conv_id", "chunk")
+        .sortWithinPartitions("bucket", "conv_id", "chunk", "marker", "slot_s")
     )
 
 
@@ -292,12 +325,10 @@ class PartitionedWriter:
 
     Accumulates kernel output per row_kind and flushes to
     ``pads.write_dataset`` every FLUSH_ROWS rows — each flush gets a
-    deterministic basename (task partition id + flush index + ``label``),
-    so a sequential task retry overwrites the same files with the same
-    content (the input split and kernel stream are deterministic).
-    ``label`` disambiguates independent write jobs targeting the same
-    table (e.g. the normal and giant-conv passes); ``gen`` is the write
-    action's generation token — unique per action, fixed at plan build,
+    deterministic basename (task partition id + flush index), so a
+    sequential task retry overwrites the same files with the same content
+    (the input split and kernel stream are deterministic). ``gen`` is the
+    write action's generation token — unique per action, fixed at plan build,
     so names are unique ACROSS actions (no cross-run overwrite; stale
     generations stay invisible to manifest-driven readers and are
     reclaimed by vacuum) yet deterministic WITHIN one (retry-safe).
@@ -317,7 +348,6 @@ class PartitionedWriter:
         self,
         table_path: str,
         pid: int,
-        label: str = "n",
         flush_rows: int | None = None,
         flush_bytes: int | None = None,
         gen: str = "",
@@ -327,7 +357,7 @@ class PartitionedWriter:
         self._pads = pads
         self.table_path = table_path
         self.pid = pid
-        self.label = f"g{gen}-{label}" if gen else label
+        self.prefix = f"part-g{gen}-" if gen else "part-"
         self.flush_rows = flush_rows or FLUSH_ROWS
         self.flush_bytes = flush_bytes or FLUSH_BYTES
         self._acc: dict[str, list[pa.RecordBatch]] = {}
@@ -383,7 +413,7 @@ class PartitionedWriter:
             os.path.join(self.table_path, f"row_kind={kind}"),
             format="parquet",
             partitioning=self._pads.partitioning(_PART_SCHEMA, flavor="hive"),
-            basename_template=f"part-{self.label}{self.pid:05d}-{fi:04d}-{{i}}.parquet",
+            basename_template=f"{self.prefix}{self.pid:05d}-{fi:04d}-{{i}}.parquet",
             file_options=self._opts[kind],
             existing_data_behavior="overwrite_or_ignore",
             max_partitions=1 << 20,
@@ -445,18 +475,23 @@ def fused_write(
     flush_rows: int | None = None,
     flush_bytes: int | None = None,
     gen: str = "",
+    giants: DataFrame | None = None,
 ) -> DataFrame:
     """Observed 1-minute slots -> partitioned tier table on disk.
 
     Returns the (lazy) per-(tier, bucket) row-count stats DataFrame; the
-    caller's action on it IS the write job.
+    caller's action on it IS the write job — one action, one range
+    exchange, one mapInArrow for every conversation. ``giants`` is a
+    one-column DataFrame of the distinct conv_ids to cut into
+    (conv, chunk) units of work (operators.chunk_split); None keeps every
+    conversation whole.
 
     Constraint: tasks write deterministic file names with no output-commit
     coordinator, which is only safe when a task attempt cannot run twice
     concurrently — i.e. speculation off. Idempotent under sequential task
     RETRY (same name, same content); enforced here rather than assumed."""
     require_no_speculation(observed.sparkSession)
-    return _cluster(observed, partitions).mapInArrow(
+    return _cluster(observed, partitions, giants).mapInArrow(
         _write_iter(table_path, tiers, with_pack, flush_rows, flush_bytes, gen),
         STATS_SCHEMA,
     )

@@ -68,8 +68,7 @@ def t_quartiles(col: Column) -> Column:
     DOCUMENTED DEVIATION: the reference's arma::quantile is the R type-5
     definition; this engine standardizes on type-7 (numpy/Spark/DuckDB
     default linear interpolation) on every path, so q25/q75/IQR can
-    differ from upstream sits for the same data (see also
-    kernels.temp_quantile)."""
+    differ from upstream sits for the same data."""
     return F.percentile(col, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
 
 

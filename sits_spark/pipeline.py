@@ -7,12 +7,21 @@ aggregation, Arrow-batched kernels handle the per-series math, manifests
 handle resume, and tier outputs land partitioned by
 (bucket(conv_id), day) — the parquet-compatible Iceberg layout.
 
-Physical plan — ONE action per checkpoint group:
+Physical plan — ONE action per checkpoint group, for every conversation:
 
   scan -> slot agg (map-side partial, 1 exchange) ->
-  range-partition by (bucket, conv_id) + sort (1 exchange) ->
-  grid/fill/smooth/rollup/pack fused mapInArrow ->
+  tag giants (broadcast left join with the driver-held id list) ->
+    explode giant rows into chunk + halo copies, union one anchor row
+    per giant (conv, chunk) ->
+  range-partition by (bucket, conv_id, chunk) + sort (1 exchange) ->
+  grid/fill/smooth/rollup/pack fused mapInArrow (whole convs: flat
+    kernel; giant chunks: chunk kernel) ->
   partitioned write (row_kind, bucket, day)
+
+The giants' anchor rows come from a small per-(conv, chunk) summary of the
+giants alone (a second scan, semi-joined to the giant ids below its slot
+aggregation, with two small exchanges of its own); without giants the
+plan is the single scan above.
 
 The fused kernel emits every tier as a UNION-schema stream tagged with
 ``row_kind`` AND emits the write's partition columns directly, so the
@@ -52,7 +61,7 @@ from pyspark.sql import functions as F
 from . import engine_core
 from . import manifest as mf
 from . import storage as store_mod
-from .operators import chunk_split, fused, regularize
+from .operators import fused, regularize
 
 TIER_DIRS = {
     "tier_1m": "row_kind=slot",
@@ -79,11 +88,12 @@ class RollupPipeline:
         stats_dir: str | None = None,
     ):
         """``giant_span_chunks``: conversations spanning more than this
-        many 8-day chunks are routed through the cross-task chunked
-        writer (per-(conv, chunk) units of work) instead of the whole-conv
-        fused path — one pathological years-long conversation otherwise
-        pins a core and holds its full grid in one task. ``None`` disables
-        the split (and its cheap pruned-column pre-scan)."""
+        many 8-day chunks are cut into per-(conv, chunk) units of work
+        (operators.chunk_split) inside the one write stream instead of
+        staying whole in one task — one pathological years-long
+        conversation otherwise pins a core and holds its full grid in one
+        task. ``None`` disables the split (and its cheap pruned-column
+        pre-scan)."""
         self.spark = spark
         self.warehouse = warehouse
         self.n_buckets = n_buckets
@@ -125,48 +135,28 @@ class RollupPipeline:
             )
         )
 
-    def _split_stats(self, observed, giants: list[str], tiers, with_pack, gen=""):
-        """Stats DataFrame for one write action over observed slots.
+    def _write(self, observed, giants: list[str], tiers, with_pack, gen=""):
+        """The write action's lazy stats DataFrame: ONE fused_write over
+        every conversation. The giants (the driver-held ``_giant_convs``
+        list) are tagged by a broadcast join, not split off by a filter,
+        so the slot aggregation, the range exchange and the kernel all
+        run once; the tag cuts each giant into per-(conv, chunk) units of
+        work inside that one stream. A join rather than a literal
+        ``isin``: on a 4-core host, planning the write with an In list
+        took 1.4 s at 1k ids, 9.8 s at 10k and ~100 s at 100k
+        (MAX_GIANTS); the join's plan holds no id literals, and planning
+        it did not grow with the list."""
+        giant_ids = None
+        if giants:
+            # from Arrow, decoded in the JVM: a DataFrame made from a
+            # Python list is decoded by a second pool of Python workers
+            # (~0.5 GB more resident memory on a 4-core pass)
+            import pyarrow as pa
 
-        Giant convs -> per-(conv, chunk) units of work; the common case
-        stays on the cheap whole-conv path. Up to ``GIANT_ISIN_MAX`` ids
-        both sides are literal conv_id predicates that push THROUGH the
-        slot aggregation down to the scan (grouping-key filter;
-        plan-asserted in tests) — the giant pass never re-reads the whole
-        table, and neither branch adds a shuffle. Above that, literal In
-        lists bloat the plan and parquet filter evaluation, so the split
-        becomes a broadcast semi-/anti-join against the (bounded,
-        driver-held) giant-id table — still no extra shuffle, at the cost
-        of scan pushdown. One action runs both writes."""
-        if not giants:
-            return fused.fused_write(
-                observed, self.table_path, tiers, self.range_partitions,
-                with_pack=with_pack, gen=gen,
-            )
-        if len(giants) <= self.GIANT_ISIN_MAX:
-            gcol = F.col("conv_id")
-            # IsNull OR Not(In) keeps NULL-key rows on the common branch,
-            # matching the left_anti regime below — crossing
-            # GIANT_ISIN_MAX must not change which rows are written; this
-            # form (unlike coalesce) still translates to parquet filters
-            common = observed.where(gcol.isNull() | ~gcol.isin(giants))
-            giant = observed.where(gcol.isin(giants))
-        else:
-            gdf = F.broadcast(
-                self.spark.createDataFrame(
-                    [(g,) for g in giants], "conv_id string"
-                )
-            )
-            common = observed.join(gdf, "conv_id", "left_anti")
-            giant = observed.join(gdf, "conv_id", "left_semi")
+            giant_ids = self.spark.createDataFrame(pa.table({"conv_id": giants}))
         return fused.fused_write(
-            common, self.table_path, tiers, self.range_partitions,
-            with_pack=with_pack, gen=gen,
-        ).unionByName(
-            chunk_split.fused_write_chunked(
-                giant, self.table_path, tiers, self.range_partitions,
-                with_pack=with_pack, gen=gen,
-            )
+            observed, self.table_path, tiers, self.range_partitions,
+            with_pack=with_pack, gen=gen, giants=giant_ids,
         )
 
     def _commit_group(
@@ -237,7 +227,7 @@ class RollupPipeline:
             if len(group) != self.n_buckets:
                 df = df.where(mf.bucket_expr().isin(group))
             gen = store_mod.new_generation()
-            stats = self._split_stats(
+            stats = self._write(
                 regularize.observed_slots(df), giants, tiers, with_pack, gen
             )
             self._commit_group(stats, group, fp, run_id, tier_names, gen)
@@ -279,7 +269,7 @@ class RollupPipeline:
         if len(missing) != self.n_buckets:
             obs = obs.where(mf.bucket_expr().isin(missing))
         gen = store_mod.new_generation()
-        stats = self._split_stats(obs, giants, tiers, with_pack, gen)
+        stats = self._write(obs, giants, tiers, with_pack, gen)
         self._commit_group(stats, missing, fp, run_id, tier_names, gen)
         return out
 
@@ -287,9 +277,6 @@ class RollupPipeline:
     # worst (longest-span) conversations are split — the rest stay on
     # the whole-conv path, which is always correct, just less parallel
     MAX_GIANTS = 100_000
-    # above this many giant ids, the split switches from literal isin
-    # pushdown to a broadcast semi-/anti-join (see _split_stats)
-    GIANT_ISIN_MAX = 1_000
 
     def _giant_convs(self, raw: DataFrame, fp: str) -> list[str]:
         """conv_ids spanning more than ``giant_span_chunks`` chunks, as a

@@ -48,6 +48,24 @@ def test_conv_spanning_three_batches():
     )
 
 
+
+def test_composite_key_keeps_groups_whole_not_convs():
+    # key (conv_id, chunk): a (conv, chunk) group is never cut, but one
+    # conversation's chunks may land in different yielded tables
+    def rb(convs, chunks):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(convs, pa.string()), pa.array(chunks, pa.int64())],
+            names=["conv_id", "chunk"],
+        )
+
+    batches = [rb(["a", "g", "g"], [0, 5, 5]), rb(["g", "g", "g"], [5, 6, 6]), rb(["g"], [7])]
+    got = [
+        list(zip(t["conv_id"], t["chunk"]))
+        for t in arrow_conv_batches(iter(batches), key=("conv_id", "chunk"))
+    ]
+    assert got == [[("a", 0)], [("g", 5)] * 3, [("g", 6)] * 2, [("g", 7)]]
+
+
 def test_single_conv_single_batch():
     got = _collect([_rb(["x", "x"], [1, 2])])
     assert got == [(["x", "x"], [1, 2])]

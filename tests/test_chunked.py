@@ -163,3 +163,53 @@ def test_cross_task_chunk_split_byte_identical(spark, tmp_path_factory):
     pk["ts_d2"] = pk["ts_d2"].apply(bytes)
     pk["vals_gorilla"] = pk["vals_gorilla"].apply(bytes)
     bitexact(pk, golden["packed_1h"], ["conv_id", "window_start"])
+
+
+def test_split_stream_keeps_int64_measures_exact(spark, tmp_path_factory):
+    """Anchor rows share Arrow batches with data rows; their measures are
+    0, not NULL, so no int column takes the float64 path (exact only
+    below 2**53). A split conversation and a whole one, in one batch,
+    keep a token count of 2**53 + 1 (resp. + 3) exact in tier_1m and in
+    the 1h sum."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from sits_spark import manifest as mf
+    from sits_spark.pipeline import RollupPipeline
+
+    big = 2**53
+    b = 2512 * engine_core.CHUNK_SLOTS * 60  # a chunk (and hour) boundary
+    slots = list(range(b - 3600, b + 3600, 60))
+    n = len(slots) + 1
+    cols = {
+        "conv_id": ["big"] * len(slots) + ["tiny"],
+        "slot_s": slots + [b],
+        "n_turns": [1] * n,
+        "tokens_user": [big + 1 if s == b + 120 else 0 for s in slots] + [big + 3],
+        "tokens_assistant": [2] * n,
+        "tokens_tool": [0] * n,
+        "tool_calls": [0] * n,
+        "alen_sum": [(s // 60) % 97 for s in slots] + [5],
+        "alen_n": [1] * n,
+    }
+    obs_path = str(tmp_path_factory.mktemp("exact_obs"))
+    pq.write_table(
+        pa.table({k: pa.array(v, pa.string() if k == "conv_id" else pa.int64())
+                  for k, v in cols.items()}),
+        os.path.join(obs_path, "part-0.parquet"),
+    )
+    pipe = RollupPipeline(spark, str(tmp_path_factory.mktemp("exact_wh")), giant_span_chunks=0)
+    obs = spark.read.parquet(obs_path)
+    giants = pipe._giant_convs(
+        obs.select("conv_id", F.col("slot_s").cast("timestamp").alias("ts")),
+        mf.input_fingerprint(obs_path),
+    )
+    assert giants == ["big"]
+    pipe.run_from_observed(obs_path, run_id="exact-1")
+
+    want = [("big", big + 1), ("tiny", big + 3)]
+    for df in (pipe.read_tier("tier_1m"), pipe.read_agg("1h")):
+        got = df.where(F.col("tokens_user") > 2**52).select("conv_id", "tokens_user")
+        assert sorted(tuple(r) for r in got.collect()) == want

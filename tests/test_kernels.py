@@ -82,30 +82,6 @@ def test_reduce_kernels_against_formulas():
     np.testing.assert_allclose(kernels.temp_mean(m), m.mean(axis=1))
     np.testing.assert_allclose(kernels.temp_std(m), m.std(axis=1, ddof=1))
     np.testing.assert_allclose(kernels.temp_median(m), np.median(m, axis=1))
-    np.testing.assert_allclose(
-        kernels.temp_amplitude(m), m.max(axis=1) - m.min(axis=1)
-    )
-    np.testing.assert_allclose(
-        kernels.temp_fslope(m), np.abs(np.diff(m, axis=1)).max(axis=1)
-    )
-    np.testing.assert_allclose(
-        kernels.temp_iqr(m),
-        np.quantile(m, 0.75, axis=1) - np.quantile(m, 0.25, axis=1),
-    )
-
-
-def test_skew_kurt_match_reference_formulas():
-    rng = np.random.default_rng(4)
-    m = rng.normal(size=(3, 50))
-    n = m.shape[1]
-    mean = m.mean(axis=1, keepdims=True)
-    m3 = ((m - mean) ** 3).sum(axis=1) / n
-    s = (((m - mean) ** 2).sum(axis=1) / n) ** 1.5
-    adj = np.sqrt(n * (n - 1)) / n - 2  # reference's literal (reduce_fns.cpp:43)
-    np.testing.assert_allclose(kernels.temp_skew(m), m3 / s * adj)
-    m4 = ((m - mean) ** 4).sum(axis=1)
-    m2 = (((m - mean) ** 2).sum(axis=1)) ** 2
-    np.testing.assert_allclose(kernels.temp_kurt(m), n * m4 / m2)
 
 
 def test_sgolay_validation():
@@ -113,16 +89,6 @@ def test_sgolay_validation():
         kernels.sgolay_coef(3, 4)
     with pytest.raises(ValueError):
         kernels.sgolay_coef(5, 5)
-
-
-def test_temp_mse_parseval_identity():
-    """mean(|FFT(x)|^2) == sum(x^2) (Parseval) — the identity the engine's
-    Catalyst t_mse path relies on (queries.ts_mse_spectral)."""
-    rng = np.random.default_rng(3)
-    mtx = rng.normal(scale=100.0, size=(7, 129))
-    got = kernels.temp_mse(mtx)
-    want = np.sum(mtx * mtx, axis=1)
-    np.testing.assert_allclose(got, want, rtol=1e-12)
 
 
 def test_dtw_windows_matches_reference_recurrence():

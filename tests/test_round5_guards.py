@@ -1,5 +1,5 @@
 """Round-5 guard rails: driver-collect caps, vacuum ownership, dtype-strict
-selfcheck, giant-split NULL-regime agreement (VERDICT r4 #1/#3/#10 + ADVICE).
+selfcheck (VERDICT r4 #1/#3/#10), and a NULL conv_id failing the run loudly.
 """
 
 import os
@@ -7,7 +7,6 @@ import os
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from sits_spark import api
 
@@ -76,19 +75,17 @@ def test_vacuum_skips_out_of_band_tier(spark, tmp_path_factory):
     assert os.path.exists(os.path.join(d, "part-oob.parquet"))
 
 
-def test_giant_split_null_regimes_agree(spark):
-    """The two giant-split regimes (literal isin vs broadcast anti-join)
-    must route NULL conv_id rows identically: to the common branch."""
-    df = spark.createDataFrame(
-        [("a", 1), (None, 2), ("g", 3)], "conv_id string, v int"
-    )
-    giants = ["g"]
-    gcol = F.col("conv_id")
-    common_isin = df.where(gcol.isNull() | ~gcol.isin(giants))
-    gdf = F.broadcast(
-        spark.createDataFrame([(g,) for g in giants], "conv_id string")
-    )
-    common_anti = df.join(gdf, "conv_id", "left_anti")
-    assert sorted(r.v for r in common_isin.collect()) == sorted(
-        r.v for r in common_anti.collect()
-    ) == [1, 2]
+def test_null_conv_id_fails_loudly(spark, tmp_path_factory):
+    """Turns with a NULL conv_id fail the run with an error naming
+    conv_id as NULL, instead of a numpy TypeError deep in the kernel or a
+    silently partial table."""
+    from sits_spark import fixtures
+    from sits_spark.pipeline import RollupPipeline
+
+    pdf = fixtures.gen_transcripts(5, seed=3, hot_turns=20, include_edges=False)
+    pdf.loc[[0, 7, 11], "conv_id"] = None
+    inp = str(tmp_path_factory.mktemp("null_in") / "t")
+    spark.createDataFrame(pdf).write.parquet(inp)
+    pipe = RollupPipeline(spark, str(tmp_path_factory.mktemp("null_wh")))
+    with pytest.raises(Exception, match="conv_id is NULL"):
+        pipe.run(inp, run_id="null-1")

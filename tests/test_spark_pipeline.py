@@ -243,37 +243,40 @@ def test_regularize_first_plan_is_one_pass_agg_no_window(spark):
     assert "Window" not in plan
 
 
-def test_giant_pass_filter_reaches_scan(spark, input_path, tmp_path_factory):
-    """The giant pass's conv_id isin predicate must be PUSHED to the
-    parquet scan (row-group pruning at 100 TB), not applied post-scan."""
-    raw = spark.read.parquet(input_path)
-    giant = raw.where(F.col("conv_id").isin(["conv-hot-1", "conv-hot-2"]))
-    plan = regularize.observed_slots(giant)._jdf.queryExecution().executedPlan().toString()
-    pushed = plan.split("PushedFilters")[-1][:200]
-    assert "In(conv_id" in pushed, pushed
+def test_one_write_plan_splits_giant_across_tasks(spark, tmp_path_factory):
+    """Giants ride the same stream as every other conversation: on a
+    fixture holding a multi-chunk giant, the write is ONE mapInArrow over
+    at most 3 input scans, the giant's slot rows still come from at least
+    2 tasks (task ids read from the file names), and the tiers match the
+    oracle."""
+    import pyarrow.parquet as pq
 
+    # ~25k turns, ~70 s mean gap: conv-hot-1 spans > 2 chunks (16 days)
+    pdf = fixtures.gen_transcripts(40, seed=9, hot_turns=25_000)
+    inp = str(tmp_path_factory.mktemp("one_in") / "t")
+    spark.createDataFrame(pdf).write.parquet(inp)
+    wh = str(tmp_path_factory.mktemp("one_wh"))
+    pipe = RollupPipeline(spark, wh)
+    raw = spark.read.parquet(inp)
+    giants = pipe._giant_convs(raw, mf.input_fingerprint(inp))
+    assert giants == ["conv-hot-1"], giants
 
-def test_giant_split_joins_above_isin_cap(spark, input_path, golden, tmp_path_factory):
-    """Above GIANT_ISIN_MAX ids the split must switch from literal isin
-    predicates (plan/codegen bloat at 100k literals) to a broadcast
-    semi-/anti-join — and the output must stay byte-identical."""
-    wh = str(tmp_path_factory.mktemp("whj") / "tiers")
-    pipe = RollupPipeline(spark, wh, giant_span_chunks=0)
-    pipe.GIANT_ISIN_MAX = 0  # force the join regime for every giant list
-    raw = spark.read.parquet(input_path)
-    giants = pipe._giant_convs(raw, mf.input_fingerprint(input_path))
-    assert giants  # threshold 0 makes every multi-chunk conv a giant
-    from sits_spark.operators import regularize as reg
-
-    stats = pipe._split_stats(
-        reg.observed_slots(raw), giants, ("1h", "1d"), with_pack=True
-    )
+    stats = pipe._write(regularize.observed_slots(raw), giants, ("1h", "1d"), True)
     plan = stats._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan and "LeftAnti" in plan
-    assert "In(conv_id" not in plan
-    pipe.run(input_path, run_id="run-j")
-    got = _spark_tier(spark, wh, "tier_1m").toPandas()
-    assert_frames_bitexact(got, golden["tier_1m"], ["conv_id", "slot_start"])
+    assert plan.count("MapInArrow") == 1, plan
+    assert plan.count("FileScan parquet") <= 3, plan
+
+    pipe.run(inp, run_id="one-1")
+    golden = oracle.full_pipeline(pdf)
+    assert_frames_bitexact(
+        pipe.read_tier("tier_1m").toPandas(), golden["tier_1m"], ["conv_id", "slot_start"]
+    )
+    tasks = {
+        int(re.search(r"part-g\w+-(\d{5})-", os.path.basename(f)).group(1))
+        for f in pipe._live_files("tier_1m")
+        if "conv-hot-1" in pq.read_table(f, columns=["conv_id"])["conv_id"].to_pylist()
+    }
+    assert len(tasks) >= 2, tasks
 
 
 def test_multi_flush_write_byte_identical(spark, input_path, golden, tmp_path_factory):
