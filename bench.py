@@ -385,7 +385,7 @@ below for transparency.
 Efficiency {pair832['eff']:.3f} vs the measured pure-CPU host ceiling
 ~0.66 at this pairing.
 
-## Per-stage 8 vs 32 split (`tools/stage_split.py`, round-5 instrumented)
+## Per-stage 8 vs 32 split (round-5 instrumented)
 
 Round 4's table reported the fused stage's "CPU" inflating 3.5x from 8
 to 32 cores. Round 5 split that number with host counters

@@ -1269,6 +1269,47 @@ def som_clean(
 # --------------------------------------------------------- change detect
 
 
+def _bayts_llr_fp(
+    df: DataFrame, cols: Sequence[str], value: str, mu_stable: float,
+    sd_stable: float, mu_changed: float, sd_changed: float,
+    bwf: tuple[float, float],
+) -> DataFrame:
+    """``cols`` plus ``llr_fp``, the bayts log-odds of each row with a
+    non-NULL ``value`` as a long in 1e-4 fixed point; rows with a NULL
+    value are dropped. Shared by ``detect_change`` and
+    ``streaming.detect_change_stream``."""
+    v = F.col(value)
+
+    def phi(mu: float, sd: float) -> Column:
+        return F.exp(-((v - mu) ** 2) / (2.0 * sd * sd)) / (
+            sd * F.sqrt(F.lit(2.0 * np.pi))
+        )
+
+    # each density is evaluated once per row as a named column
+    dens = df.where(v.isNotNull()).select(
+        *cols,
+        value,
+        phi(mu_changed, sd_changed).alias("_pc"),
+        phi(mu_stable, sd_stable).alias("_ps"),
+    )
+    pc, ps = F.col("_pc"), F.col("_ps")
+    # far outliers underflow BOTH densities to 0 (|z| > ~38): decide by
+    # the nearer mean (squared z-score) instead of dividing 0/0, which
+    # raises under ANSI mode. Inside the CASE, only those rows pay for it.
+    zc = ((v - mu_changed) / sd_changed) ** 2
+    zs = ((v - mu_stable) / sd_stable) ** 2
+    p = F.when(pc + ps > 0, pc / (pc + ps)).otherwise(
+        F.when(zc <= zs, F.lit(1.0)).otherwise(F.lit(0.0))
+    )
+    # p to 6 dp and the log-odds to a 1e-4 step: grids 100x coarser than
+    # the fixed-point step, so a ~1-ulp exp/ln difference between engines
+    # cannot flip the integer comparison except on a doubly-degenerate
+    # boundary. Spark's HALF_UP round on doubles equals DuckDB's round.
+    p = F.round(F.greatest(F.least(p, F.lit(bwf[1])), F.lit(bwf[0])), 6)
+    llr_fp = F.round(F.log(p / (F.lit(1.0) - p)) * 10_000, 0).cast("long")
+    return dens.select(*cols, llr_fp.alias("llr_fp"))
+
+
 def detect_change(
     df: DataFrame,
     keys: Sequence[str],
@@ -1285,42 +1326,42 @@ def detect_change(
     R/sits_detect_change.R:41-177): per-observation conditional probability
     from the stable/changed Gaussians, clamped to ``bwf``, chained by
     Bayes' rule. The chain is a cumulative SUM in log-odds space, i.e. a
-    running-window aggregation — no recursion, no Python. Emits one row per
-    flagged key with its first flagged ordering position; never-flagged
-    keys are absent from the output."""
-    v = F.col(value)
+    running-window aggregation — no recursion, no Python.
 
-    def phi(mu: float, sd: float) -> Column:
-        return F.exp(-((v - mu) ** 2) / (2.0 * sd * sd)) / (
-            sd * F.sqrt(F.lit(2.0 * np.pi))
-        )
+    The chain is quantised: ``p`` is rounded to 6 dp and each log-odds is
+    a long in 1e-4 fixed point, so the running sum is an integer compared
+    with ``round(tau * 10_000)``. Rows with a NULL ``value`` are skipped,
+    not counted as evidence. A far outlier whose two densities both
+    underflow to 0 counts for the hypothesis with the smaller squared
+    z-score. ``streaming.detect_change_stream`` projects the same per-row
+    expression, so stream and batch agree exactly.
 
-    pc, ps = phi(mu_changed, sd_changed), phi(mu_stable, sd_stable)
-    # far outliers underflow BOTH densities to 0 (|z| > ~38): decide by
-    # the nearer mean (squared z-score) instead of dividing 0/0 — which
-    # would raise under ANSI mode and poison the cumulative sum
-    zc = ((v - mu_changed) / sd_changed) ** 2
-    zs = ((v - mu_stable) / sd_stable) ** 2
-    p = F.when(pc + ps > 0, pc / (pc + ps)).otherwise(
-        F.when(zc <= zs, F.lit(1.0)).otherwise(F.lit(0.0))
+    Emits one row per flagged key: its first flagged ordering position
+    (``first_<c>`` per ``order_by`` column) and ``max_cum_llr_fp``, the
+    largest running sum among its flagged rows. Never-flagged keys are
+    absent from the output."""
+    llr = _bayts_llr_fp(
+        df, [*keys, *order_by], value,
+        mu_stable, sd_stable, mu_changed, sd_changed, bwf,
     )
-    p = F.greatest(F.least(p, F.lit(bwf[1])), F.lit(bwf[0]))
     w = (
         Window.partitionBy(*keys)
         .orderBy(*order_by)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    cum = F.sum(F.log(p / (1.0 - p))).over(w)
-    flagged = df.select(
-        *keys, *order_by, cum.alias("cum_llr")
-    ).where(F.col("cum_llr") >= tau)
+    flagged = llr.select(
+        *keys, *order_by, F.sum("llr_fp").over(w).alias("cum_llr_fp")
+    ).where(F.col("cum_llr_fp") >= round(tau * 10_000))
     # lexicographic minimum in ONE struct so a multi-column ordering
     # reports an actual flagged row, not a per-column min mixture
-    first = F.min(F.struct(*order_by)).alias("_first")
-    firsts = flagged.groupBy(*keys).agg(first)
+    firsts = flagged.groupBy(*keys).agg(
+        F.min(F.struct(*order_by)).alias("_first"),
+        F.max("cum_llr_fp").alias("max_cum_llr_fp"),
+    )
     return firsts.select(
         *keys,
         *[F.col(f"_first.{c}").alias(f"first_{c}") for c in order_by],
+        "max_cum_llr_fp",
     )
 
 
@@ -1343,31 +1384,26 @@ def detect_change_dtw(
     tiny dict shipped in the UDF closure — never joined); a change fires
     when the best distance is <= ``threshold``. One sort shuffle + one
     Arrow-batched vectorized-DP UDF; incomplete trailing windows are
-    dropped (no partial-window semantics).
+    dropped (no partial-window semantics). Rows with a NULL ``value`` are
+    skipped before the series is numbered, so windows are cut over the
+    observed values.
 
-    Round 6 (guide §2.4): window rows are assembled with ``lead()`` over
-    the SAME sorted window that numbers the series — the old
-    groupBy(keys, win_id) + sort_array(collect_list(struct)) hash
-    aggregate re-collected and re-sorted what the window sort had
-    already ordered. lead(k) on the window-start row yields exactly the
-    old sorted value list ([v, lead 1..W-1] in order), and a NULL
-    lead(W-1) marks precisely the incomplete trailing slice the old
-    size() filter dropped — same windows, same values, one less
-    aggregate pass, no second exchange either way (win_id grouping
-    reused the window's partitioning)."""
+    Window rows are assembled with ``lead()`` over the same sorted window
+    that numbers the series: lead(k) on the window-start row yields the
+    window's values in order, and a NULL lead(W-1) marks the incomplete
+    trailing slice."""
     from . import kernels
 
     w = Window.partitionBy(*keys).orderBy(*order_by)
     rn = F.row_number().over(w) - 1
     leads = [F.lead(value, k).over(w) for k in range(1, window)]
-    win = df.select(
+    win = df.where(F.col(value).isNotNull()).select(
         *keys,
         rn.alias("_rn"),
         F.array(F.col(value), *leads).alias("vals"),
     )
     arrs = win.where(
-        (F.col("_rn") % window == 0)
-        & ~F.exists("vals", lambda x: x.isNull())
+        (F.col("_rn") % window == 0) & F.col("vals")[window - 1].isNotNull()
     ).select(*keys, F.floor(F.col("_rn") / window).alias("win_id"), "vals")
     names = sorted(patterns)
     pats = {k: np.asarray(patterns[k], dtype=np.float64) for k in names}

@@ -118,7 +118,7 @@ def _tier_stream(
     epoch-µs, plus ``bucket`` int32 and ``day`` int32 epoch-days) to a
     numpy array. Whole-conversation rows go to the flat kernels, giant
     (conv, chunk) groups to chunk_split's; both emit via ``_emit_tiers``."""
-    for tbl in arrow_conv_batches(_non_null_convs(it), key=("conv_id", "chunk")):
+    for tbl in arrow_conv_batches(_non_null_keys(it), key=("conv_id", "chunk")):
         whole = tbl["marker"] == chunk_split.WHOLE_ROW
         if whole.any():
             yield from _emit_tiers(*_whole_grids(_rows(tbl, whole)), tiers, with_pack)
@@ -127,12 +127,17 @@ def _tier_stream(
                 yield from _emit_tiers(*grids, tiers, with_pack)
 
 
-def _non_null_convs(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _non_null_keys(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     for rb in it:
         if rb.column("conv_id").null_count:
             raise ValueError(
                 f"conv_id is NULL in {rb.column('conv_id').null_count} observed "
                 "slot rows: every turn needs a conversation id"
+            )
+        if rb.column("slot_s").null_count:
+            raise ValueError(
+                f"ts is NULL in {rb.column('slot_s').null_count} observed "
+                "slot rows: every turn needs a timestamp"
             )
         yield rb
 

@@ -1540,65 +1540,29 @@ SELECT user_id, event_type, CAST(round(p_comb, 6) AS DOUBLE) AS p_comb,
 FROM c
 """
 
-# bayts-style change detection constants: two gaussian hypotheses over the
-# value band (stable regime vs changed regime) and the flagging threshold
-_BAYTS_MU_F, _BAYTS_SD_F = 80.0, 40.0
-_BAYTS_MU_N, _BAYTS_SD_N = 160.0, 60.0
-_BAYTS_BWF_LO, _BAYTS_BWF_HI = 0.1, 0.9
-_BAYTS_TAU = 2.0  # threshold on cumulative log-odds
+# bayts change detection: two gaussian hypotheses over the value band
+# (stable vs changed regime) and the threshold on the cumulative log-odds
+_BAYTS = dict(
+    mu_stable=80.0, sd_stable=40.0, mu_changed=160.0, sd_changed=60.0,
+    bwf=(0.1, 0.9), tau=2.0,
+)
 
 
 def ts_bayts_change(spark, sf_dir):
-    """bayts-style sequential change detection
-    (/root/reference/src/bayts_fns.cpp:44-120 C_bayts_calc_nf +
-    C_bayts_calc_pbayes; R/sits_detect_change.R): per-observation
-    conditional probability p = phi_changed(v) / (phi_changed(v) +
-    phi_stable(v)) clamped to the bwf range, chained by Bayes' rule. In
-    odds space the chain is a cumulative SUM of log-odds, which makes the
-    sequential update a window aggregation. Both p and the log-odds are
-    quantized to grids 100x coarser than the fixed-point step (p to 6 dp,
-    llr to a 1e-4 step), so a ~1-ulp exp/ln difference between the JVM and
-    DuckDB libm cannot flip the cumulative integer comparison except on a
-    doubly-degenerate boundary. Emits each user's first flagged ts."""
-    e = _t(spark, sf_dir, "events")
-    v = F.col("value")
+    """bayts sequential change detection: each user's first flagged ts
+    and largest fixed-point cumulative log-odds. A call of the verb
+    ``api.detect_change`` (quantised chain, NULL values skipped, far
+    outliers guarded), ordered by (ts, event_id)."""
+    from . import api
 
-    def phi(mu, sd):
-        return F.exp(-((v - mu) ** 2) / (2.0 * sd * sd)) / (sd * F.sqrt(F.lit(2.0) * F.lit(3.141592653589793)))
+    e = _spread(_t(spark, sf_dir, "events"), "user_id")
+    return api.detect_change(
+        e, ["user_id"], ["ts", "event_id"], "value", **_BAYTS
+    ).select("user_id", F.col("first_ts").alias("change_ts"), "max_cum_llr_fp")
 
-    # round 6 (guide §1.2 + §2.3): stage the densities through named
-    # columns so each exp() is evaluated once per row (the inline form
-    # repeated phi_N inside p's numerator and denominator), and project
-    # llr_fp BEFORE the window so the sort shuffle carries
-    # (user_id, ts, event_id, llr_fp) instead of the raw value column.
-    # Same expressions on the same values — bit-identical.
-    dens = _spread(e, "user_id").select(
-        "user_id",
-        "ts",
-        "event_id",
-        phi(_BAYTS_MU_N, _BAYTS_SD_N).alias("pn"),
-        phi(_BAYTS_MU_F, _BAYTS_SD_F).alias("pf"),
-    )
-    p = F.col("pn") / (F.col("pn") + F.col("pf"))
-    p = F.greatest(F.least(p, F.lit(_BAYTS_BWF_HI)), F.lit(_BAYTS_BWF_LO))
-    p = F.round(p, 6)
-    # half-away-from-zero rounding in BOTH engines (Spark HALF_UP on
-    # doubles == DuckDB round); misaligned with the 6-dp grid above
-    llr_fp = F.round(F.log(p / (F.lit(1.0) - p)) * 10_000, 0).cast("long")
-    llr = dens.select("user_id", "ts", "event_id", llr_fp.alias("llr_fp"))
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = F.sum("llr_fp").over(w)
-    flagged = llr.select("user_id", "ts", cum.alias("cum_llr_fp")).where(
-        F.col("cum_llr_fp") >= int(_BAYTS_TAU * 10_000)
-    )
-    return flagged.groupBy("user_id").agg(
-        F.min("ts").alias("change_ts"),
-        F.max("cum_llr_fp").alias("max_cum_llr_fp"),
-    )
+
+def _sql_phi(mu: float, sd: float) -> str:
+    return f"exp(-pow(value - {mu}, 2) / (2.0 * {sd} * {sd})) / ({sd} * sqrt(2.0 * 3.141592653589793))"
 
 
 SQL_TS_BAYTS_CHANGE = f"""
@@ -1607,12 +1571,12 @@ WITH llr AS (
     CAST(round(ln(p / (1.0 - p)) * 10000) AS BIGINT) AS llr_fp
   FROM (
     SELECT user_id, ts, event_id,
-      round(greatest(least(pn / (pn + pf), {_BAYTS_BWF_HI}), {_BAYTS_BWF_LO}), 6) AS p
+      round(greatest(least(pc / (pc + ps), {_BAYTS['bwf'][1]}), {_BAYTS['bwf'][0]}), 6) AS p
     FROM (
       SELECT user_id, ts, event_id,
-        exp(-pow(value - {_BAYTS_MU_N}, 2) / (2.0 * {_BAYTS_SD_N} * {_BAYTS_SD_N})) / ({_BAYTS_SD_N} * sqrt(2.0 * 3.141592653589793)) AS pn,
-        exp(-pow(value - {_BAYTS_MU_F}, 2) / (2.0 * {_BAYTS_SD_F} * {_BAYTS_SD_F})) / ({_BAYTS_SD_F} * sqrt(2.0 * 3.141592653589793)) AS pf
-      FROM events
+        {_sql_phi(_BAYTS['mu_changed'], _BAYTS['sd_changed'])} AS pc,
+        {_sql_phi(_BAYTS['mu_stable'], _BAYTS['sd_stable'])} AS ps
+      FROM events WHERE value IS NOT NULL
     )
   )
 ),
@@ -1623,7 +1587,7 @@ cum AS (
   FROM llr
 )
 SELECT user_id, min(ts) AS change_ts, CAST(max(cum_llr_fp) AS BIGINT) AS max_cum_llr_fp
-FROM cum WHERE cum_llr_fp >= {int(_BAYTS_TAU * 10_000)}
+FROM cum WHERE cum_llr_fp >= {round(_BAYTS['tau'] * 10_000)}
 GROUP BY user_id
 """
 
@@ -2823,7 +2787,7 @@ def _sql_dtw() -> str:
 WITH seq AS (
   SELECT user_id, value,
          row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS rn
-  FROM events
+  FROM events WHERE value IS NOT NULL
 ),
 win AS (
   SELECT user_id, rn // {wn} AS win_id,

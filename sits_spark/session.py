@@ -95,7 +95,8 @@ def get_spark(
         .config(
             "spark.ui.enabled",
             # UI off by default (bench purity); SPARK_GRAFT_UI=1 enables
-            # it for tools that read stage metrics (tools/stage_split.py)
+            # it for runs that read stage metrics from its REST API
+            # (perfbench's traced runs)
             "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",
         )
     )

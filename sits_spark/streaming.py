@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .api import _bayts_llr_fp
 from .manifest import bucket_expr
 
 
@@ -126,69 +127,54 @@ def detect_change_stream(
     (SURVEY.md §2.9 ``applyInPandasWithState`` row; batch semantics in
     api.detect_change, reference src/bayts_fns.cpp:44-164).
 
-    Per key, the group state carries the cumulative log-odds and the
-    first flagged timestamp; each micro-batch sorts its rows by event
-    time, continues the cumulative sum from state, and emits the key's
-    updated (cum_llr, flagged, first_flag_ts). With in-order delivery
-    per key this matches the batch operator's first-flag up to last-ulp
-    exp/log differences between numpy and the JVM (the same class of
-    divergence ts_bayts_change quantizes away; a cum sitting within
-    ~1e-15 of tau could flip) — agreement asserted stream-vs-batch on
-    clamped inputs in tests."""
-    lo, hi = bwf
+    The per-row log-odds are the batch verb's own Column expression,
+    projected before the state operator: quantised to a long in 1e-4
+    fixed point, with rows whose value is NULL skipped and the far-outlier
+    rule applied. Per key, the group state carries the fixed-point
+    cumulative sum and the first flagged timestamp; each micro-batch sorts
+    its rows by the full ordering, continues the integer sum from state,
+    and emits the key's updated (cum_llr_fp, flagged, first_flag_ts).
+    With in-order delivery per key the first flag equals the batch
+    operator's exactly."""
     # mirror the batch operator's FULL ordering tuple (api.detect_change
     # orders by e.g. (ts, event_id)): sorting on ts alone lets rows with
     # equal timestamps accumulate log-odds in a different order and flag
     # a different first row than batch
     sort_cols = list(order_by) if order_by else [ts_col]
-    out_schema = (
-        f"{key_col} string, cum_llr double, flagged boolean, first_flag_ts long"
+    llr = _bayts_llr_fp(
+        stream, list(dict.fromkeys([key_col, ts_col, *sort_cols])), value_col,
+        mu_stable, sd_stable, mu_changed, sd_changed, bwf,
     )
-    state_schema = "cum double, flagged boolean, first long"
+    tau_fp = round(tau * 10_000)
+    out_schema = (
+        f"{key_col} string, cum_llr_fp long, flagged boolean, first_flag_ts long"
+    )
+    state_schema = "cum_fp long, flagged boolean, first long"
 
     def fn(key, pdfs, state: GroupState):
         cum, flagged, first = (
-            state.get if state.exists else (0.0, False, None)
+            state.get if state.exists else (0, False, None)
         )
         rows = pd.concat(list(pdfs), ignore_index=True)
         rows = rows.sort_values(sort_cols, kind="mergesort")
-        v = rows[value_col].to_numpy(dtype=np.float64)
-        ts = rows[ts_col].to_numpy(dtype=np.int64)
-
-        def phi(mu, sd):
-            return np.exp(-((v - mu) ** 2) / (2.0 * sd * sd)) / (
-                sd * np.sqrt(2.0 * np.pi)
-            )
-
-        pc, ps = phi(mu_changed, sd_changed), phi(mu_stable, sd_stable)
-        den = pc + ps
-        # far outliers underflow both densities: 0/0 would be NaN, which
-        # np.clip passes through and which poisons the group state
-        # forever — decide by the nearer mean instead
-        zc = ((v - mu_changed) / sd_changed) ** 2
-        zs = ((v - mu_stable) / sd_stable) ** 2
-        with np.errstate(invalid="ignore", divide="ignore"):
-            p = np.where(den > 0, pc / np.where(den > 0, den, 1.0),
-                         np.where(zc <= zs, 1.0, 0.0))
-        p = np.clip(p, lo, hi)
-        cums = cum + np.cumsum(np.log(p / (1.0 - p)))
-        cum = float(cums[-1]) if len(cums) else cum
+        cums = cum + np.cumsum(rows["llr_fp"].to_numpy(dtype=np.int64))
+        cum = int(cums[-1]) if len(cums) else cum
         if not flagged:
-            hit = np.flatnonzero(cums >= tau)
+            hit = np.flatnonzero(cums >= tau_fp)
             if len(hit):
                 flagged = True
-                first = int(ts[hit[0]])
+                first = int(rows[ts_col].to_numpy(dtype=np.int64)[hit[0]])
         state.update((cum, bool(flagged), first))
         yield pd.DataFrame(
             {
                 key_col: [key[0]],
-                "cum_llr": [cum],
+                "cum_llr_fp": [cum],
                 "flagged": [bool(flagged)],
                 "first_flag_ts": [first],
             }
         )
 
-    return stream.groupBy(key_col).applyInPandasWithState(
+    return llr.groupBy(key_col).applyInPandasWithState(
         fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
 

@@ -180,6 +180,15 @@ def test_detect_change_first_flag(spark):
         mu_stable=0.0, sd_stable=1.0, mu_changed=5.0, sd_changed=1.0, tau=2.0,
     ).collect()
     assert len(got) == 1 and got[0].first_ts == 4
+    assert got[0].max_cum_llr_fp == 6 * 21972  # +-ln(9) is +-21972 in 1e-4
+    # NULL values are skipped, not evidence: after two stable obs and four
+    # NULLs the changed run cancels them at ts 6, 7 and flags at ts 8
+    nulls = [("k", i, 0.0 if i < 2 else None if i < 6 else 5.0) for i in range(12)]
+    got = api.detect_change(
+        spark.createDataFrame(nulls, "key string, ts int, v double"),
+        ["key"], ["ts"], "v", 0.0, 1.0, 5.0, 1.0, tau=2.0,
+    ).collect()
+    assert len(got) == 1 and got[0].first_ts == 8
     # never-flagged series emits nothing
     calm = spark.createDataFrame([("k", i, 0.0) for i in range(10)], "key string, ts int, v double")
     assert api.detect_change(
@@ -229,6 +238,18 @@ def test_detect_change_dtw(spark):
     assert api.detect_change_dtw(
         df2, ["key"], ["ts"], "v", {"p": [1.0, 2.0]}, window=4
     ).count() == 2
+    # a NULL value is skipped: the windows are cut over the observed
+    # values, so the NULL shifts them and drops none; the trailing 0.0
+    # is still an incomplete window
+    with_null = vals[:2] + [None] + vals[2:] + [0.0]
+    df3 = spark.createDataFrame(
+        [("k", i, v) for i, v in enumerate(with_null)], "key string, ts int, v double"
+    )
+    got = api.detect_change_dtw(
+        df3, ["key"], ["ts"], "v", {"exact": [1.0, 2.0, 3.0, 4.0]},
+        window=4, threshold=5.0,
+    ).orderBy("win_id").collect()
+    assert [r.win_id for r in got] == [0, 1] and got[1].d_exact == 0.0
 
 
 def test_clean_modal_filter(spark):

@@ -89,3 +89,18 @@ def test_null_conv_id_fails_loudly(spark, tmp_path_factory):
     pipe = RollupPipeline(spark, str(tmp_path_factory.mktemp("null_wh")))
     with pytest.raises(Exception, match="conv_id is NULL"):
         pipe.run(inp, run_id="null-1")
+
+
+def test_null_ts_fails_loudly(spark, tmp_path_factory):
+    """Turns with a NULL ts fail the run with an error naming ts as NULL,
+    instead of numpy's float64-to-int64 cast TypeError in the kernel."""
+    from sits_spark import fixtures
+    from sits_spark.pipeline import RollupPipeline
+
+    pdf = fixtures.gen_transcripts(5, seed=3, hot_turns=20, include_edges=False)
+    pdf.loc[[2, 9], "ts"] = None
+    inp = str(tmp_path_factory.mktemp("null_ts_in") / "t")
+    spark.createDataFrame(pdf).write.parquet(inp)
+    pipe = RollupPipeline(spark, str(tmp_path_factory.mktemp("null_ts_wh")))
+    with pytest.raises(Exception, match="ts is NULL"):
+        pipe.run(inp, run_id="null-ts-1")

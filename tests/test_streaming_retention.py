@@ -109,10 +109,11 @@ def test_detect_change_stream_equals_batch(spark, tmp_path_factory):
     from sits_spark import api
 
     rows = []
-    for key, jump in (("calm", None), ("shift", 4), ("late", 6)):
+    for key, jump in (("calm", None), ("shift", 4), ("late", 6), ("nulls", 5)):
         for i in range(16):
             v = 0.0 if (jump is None or i < jump) else 5.0
-            rows.append((key, i, v))
+            # NULL values in both micro-batches are skipped by both
+            rows.append((key, i, None if key == "nulls" and i in (6, 7, 9) else v))
     pdf_a = [r for r in rows if r[1] < 8]
     pdf_b = [r for r in rows if r[1] >= 8]
     src = str(tmp_path_factory.mktemp("dcs") / "in")
@@ -143,17 +144,22 @@ def test_detect_change_stream_equals_batch(spark, tmp_path_factory):
     # update mode emits one row per key per batch; flagged and
     # first_flag_ts are monotone once set, so aggregate over batches
     got = emitted.groupby("key").agg(
-        flagged=("flagged", "any"), first_flag_ts=("first_flag_ts", "max")
+        flagged=("flagged", "any"),
+        first_flag_ts=("first_flag_ts", "max"),
+        cum_llr_fp=("cum_llr_fp", "max"),
     )
     batch = api.detect_change(
         spark.createDataFrame(rows, schema), ["key"], ["ts"], "v",
         0.0, 1.0, 5.0, 1.0, tau=2.0,
     ).toPandas()
-    want = dict(zip(batch["key"], batch["first_ts"]))
-    assert "calm" not in want and not bool(got.loc["calm", "flagged"])
-    for k in ("shift", "late"):
+    want = batch.set_index("key")
+    assert "calm" not in want.index and not bool(got.loc["calm", "flagged"])
+    for k in ("shift", "late", "nulls"):
         assert bool(got.loc[k, "flagged"])
-        assert int(got.loc[k, "first_flag_ts"]) == int(want[k]), k
+        assert int(got.loc[k, "first_flag_ts"]) == int(want.loc[k, "first_ts"]), k
+        # the sums only rise after the jump, so the last state is the
+        # batch's largest flagged sum: the integer chains agree exactly
+        assert int(got.loc[k, "cum_llr_fp"]) == int(want.loc[k, "max_cum_llr_fp"]), k
 
 
 def test_compaction_from_observed_equals_raw_pipeline(spark, input_path, tmp_path_factory):
