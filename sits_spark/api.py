@@ -42,6 +42,7 @@ from .ml import (  # noqa: F401 — re-exported verbs
     tune,
 )
 from .operators import reduce as _red
+from .session import read_parquet
 
 __all__ = [
     "cube",
@@ -91,8 +92,9 @@ __all__ = [
 def cube(spark: SparkSession, path: str) -> DataFrame:
     """sits_cube local source (R/sits_cube.R local flavor): schema-on-read
     scan of a parquet table/directory. Partition discovery, predicate
-    pushdown and column pruning are Catalyst's."""
-    return spark.read.parquet(path)
+    pushdown and column pruning are Catalyst's; the inferred schema is
+    memoised per session and input (``session.read_parquet``)."""
+    return read_parquet(spark, path)
 
 
 # ---------------------------------------------------------------- select

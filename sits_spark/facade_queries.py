@@ -25,7 +25,7 @@ def _r6(col):
 
 
 def _events(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+    return api.cube(spark, f"{sf_dir}/events.parquet")
 
 
 def api_verbs_chain(spark, sf_dir):

@@ -26,7 +26,7 @@ from __future__ import annotations
 import hashlib
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_SCHEMA = (
@@ -48,18 +48,30 @@ def bucket_expr(conv_col: str = "conv_id", n_buckets: int = N_BUCKETS):
     return F.pmod(F.xxhash64(F.col(conv_col)), F.lit(n_buckets)).cast("int")
 
 
-def input_fingerprint(path: str) -> str:
-    """Metadata-only input identity: md5 over the sorted (relpath, size)
-    listing. The parquet-mode stand-in for an Iceberg snapshot-id."""
+def input_listing(path: str) -> list[tuple[str, int, int]]:
+    """Sorted (relpath, size, mtime_ns) of the data files under ``path``;
+    a file path lists itself by its own name. Files named ``_*`` or
+    ``.*`` (commit markers, checksums) are skipped. The one walker behind
+    ``input_fingerprint`` and ``session.read_parquet``'s schema memo."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return [(os.path.basename(path), st.st_size, st.st_mtime_ns)]
     entries = []
     for root, _dirs, files in os.walk(path):
-        for f in sorted(files):
+        for f in files:
             if f.startswith(("_", ".")):
                 continue
             full = os.path.join(root, f)
-            entries.append(f"{os.path.relpath(full, path)}:{os.path.getsize(full)}")
-    digest = hashlib.md5("\n".join(sorted(entries)).encode()).hexdigest()
-    return digest
+            st = os.stat(full)
+            entries.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return sorted(entries)
+
+
+def input_fingerprint(path: str) -> str:
+    """Metadata-only input identity: md5 over the sorted (relpath, size)
+    listing. The parquet-mode stand-in for an Iceberg snapshot-id."""
+    lines = sorted(f"{rel}:{size}" for rel, size, _mtime in input_listing(path))
+    return hashlib.md5("\n".join(lines).encode()).hexdigest()
 
 
 class ManifestStore:
@@ -270,31 +282,3 @@ def footer_counts(tier_path: str) -> dict[int, int]:
                 n = pq.read_metadata(os.path.join(root, f)).num_rows
                 counts[bucket] = counts.get(bucket, 0) + n
     return counts
-
-
-def write_tier(
-    df: DataFrame,
-    tier_path: str,
-    day_col: str,
-) -> DataFrame:
-    """Write ONE standalone tier partitioned by (bucket, day) — the
-    parquet-compatible analog of Iceberg ``bucket(conv_id), days(ts)``
-    (BASELINE.md input shape). Dynamic partition overwrite keeps bucket
-    rewrites idempotent.
-
-    The main pipeline no longer uses this (it writes all tiers in one
-    fused pass, sits_spark.pipeline); kept for standalone tier exports."""
-    out = df.withColumn("bucket", bucket_expr()).withColumn(
-        "day", F.to_date(F.col(day_col))
-    )
-    # shuffle onto the partition keys so each (bucket, day) directory is
-    # written by exactly one task — one file per partition instead of
-    # one-per-task-per-partition (small-file explosion at scale)
-    out = out.repartition(F.col("bucket"), F.col("day"))
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket", "day")
-        .parquet(tier_path)
-    )
-    return out

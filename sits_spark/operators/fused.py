@@ -106,7 +106,7 @@ def require_no_speculation(spark) -> None:
         raise RuntimeError(
             "direct tier writes require spark.speculation=false: concurrent "
             "task attempts would write the same deterministic file names. "
-            "Use manifest.write_tier (Spark-committed) or disable speculation."
+            "Set spark.speculation=false for rollup runs."
         )
 
 

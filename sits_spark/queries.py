@@ -26,6 +26,8 @@ import pandas as pd  # noqa: F401 — pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .session import read_parquet
+
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -33,7 +35,7 @@ from pyspark.sql import functions as F
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _spread(df: DataFrame, key: str | None = None) -> DataFrame:

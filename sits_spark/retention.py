@@ -30,14 +30,11 @@ DEFAULT_POLICY: dict[str, int] = {
 
 
 def _tier_root(warehouse: str, tier: str) -> str:
-    """Resolve a tier name to its directory in the unified layout
-    (<warehouse>/tiers/row_kind=X), falling back to the legacy
-    <warehouse>/<tier> layout if that is what exists on disk."""
+    """A tier name's directory in the unified layout
+    (<warehouse>/tiers/row_kind=X)."""
     from .pipeline import TIER_DIRS
 
-    unified = os.path.join(warehouse, "tiers", TIER_DIRS[tier])
-    legacy = os.path.join(warehouse, tier)
-    return unified if os.path.isdir(unified) or not os.path.isdir(legacy) else legacy
+    return os.path.join(warehouse, "tiers", TIER_DIRS[tier])
 
 
 def _day_partitions(tier_path: str) -> list[tuple[str, dt.date]]:

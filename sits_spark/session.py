@@ -5,13 +5,36 @@ spark-submit conf. Session timezone is pinned to UTC so timestamp math is
 deterministic, Arrow transfer is on (all UDFs are pandas/Arrow batched —
 /root/repo/BASELINE.json input_hint mandates no per-row Python), and AQE
 is enabled for runtime coalescing + skew-join handling (SURVEY.md §4).
+
+Two driver-side fixed costs are cut once per session:
+
+- ``read_parquet`` memoises the schema Spark inferred for a parquet input.
+  A bare ``spark.read.parquet`` runs a schema-inference job on every call;
+  the memo lets every later read of the same files pass ``.schema(...)``
+  and launch no job. The key is (application id, path, input identity),
+  so a new session or a rewritten file infers again.
+- ``spark.python.sql.dataFrameDebugging.enabled`` is off. When on, every
+  ``functions.*``/``Column`` call captures its Python call site and pushes
+  it to the JVM (a conf read, a stack walk and a set/clear: 13 py4j round
+  trips for one ``F.col``). Errors still raise the same exceptions
+  (``AnalysisException`` for a missing column); they lose only the Python
+  file:line in the JVM's "DataFrame query context".
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from .manifest import input_listing
+
+# (application id, absolute path, input identity) -> inferred schema. The
+# application id keeps sessions apart; two threads missing at once only
+# infer twice.
+_READ_SCHEMAS: dict[tuple[str, str, str], StructType] = {}
 
 
 def _tune_malloc() -> None:
@@ -88,6 +111,8 @@ def get_spark(
         # modules as CoW pages instead of importing per worker
         .config("spark.python.daemon.module", "sits_spark.worker_daemon")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # no per-Column call-site capture (see the module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config(
             "spark.local.dir",
             os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"),
@@ -101,3 +126,28 @@ def get_spark(
         )
     )
     return builder.getOrCreate()
+
+
+def read_parquet(
+    spark: SparkSession, path: str, fingerprint: str | None = None
+) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per
+    (session, path, input identity) and reads with ``.schema(...)`` after.
+
+    The identity is ``fingerprint`` when the caller already holds one
+    (``manifest.input_fingerprint``), else a hash of the files' names,
+    sizes and mtimes, so a rewritten file infers again. Errors of the
+    first read (e.g. ``UNABLE_TO_INFER_SCHEMA``) propagate and memoise
+    nothing."""
+    if fingerprint is None:
+        listing = input_listing(path)
+        if not listing:  # nothing local to stat (e.g. a remote URI): no memo
+            return spark.read.parquet(path)
+        fingerprint = hashlib.md5(repr(listing).encode()).hexdigest()
+    key = (spark.sparkContext.applicationId, os.path.abspath(path), fingerprint)
+    schema = _READ_SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _READ_SCHEMAS[key] = df.schema
+    return df

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from . import fixtures
 from .operators import fused, regularize
+from .session import read_parquet
 
 _N_CONVS = 150
 _SEED = 42
@@ -56,7 +57,7 @@ def ensure_fixture() -> str:
 
 
 def _transcripts(spark: SparkSession) -> DataFrame:
-    return spark.read.parquet(ensure_fixture())
+    return read_parquet(spark, ensure_fixture())
 
 
 def _fused(
@@ -258,7 +259,7 @@ _EV_COND = {
 def _ev_transcripts(spark: SparkSession, sf_dir: str, cond: str) -> DataFrame:
     """events -> (conv_id, role, text, tool, ts): conv = user, role cycles
     by event_id, text = 'event_type props', tool on role='tool' rows."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    e = read_parquet(spark, f"{sf_dir}/events.parquet")
     if cond == "mod5":
         e = e.where(F.col("user_id") % 5 == 2)
     elif cond == "mod5_4d":
