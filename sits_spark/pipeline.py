@@ -114,12 +114,12 @@ class RollupPipeline:
     def tier_path(self, tier: str) -> str:
         return os.path.join(self.table_path, TIER_DIRS[tier])
 
-    def _read_input(self, path: str, fp: str) -> DataFrame:
-        """The input parquet table, its schema memoised under the input
-        fingerprint ``fp``; a directory holding no data files is a
-        ValueError naming the path, not Spark's schema-inference error."""
+    def _read_input(self, path: str) -> DataFrame:
+        """The input parquet table (schema memoised by ``read_parquet``);
+        a directory holding no data files is a ValueError naming the
+        path, not Spark's schema-inference error."""
         try:
-            return read_parquet(self.spark, path, fp)
+            return read_parquet(self.spark, path)
         except AnalysisException as e:
             if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
                 raise
@@ -210,7 +210,7 @@ class RollupPipeline:
         /root/reference/R/api_gdalcubes.R:713-760).
         """
         fp = mf.input_fingerprint(input_path)
-        raw = self._read_input(input_path, fp)
+        raw = self._read_input(input_path)
         tier_names = ["tier_1m", "agg"] + (["packed_1h"] if with_pack else [])
         out = {t: self.tier_path(t) for t in tier_names}
 
@@ -255,7 +255,7 @@ class RollupPipeline:
         with extents read from the (narrow) observed table itself."""
         fp = mf.input_fingerprint(observed_path)
         obs_cols = ["conv_id", "slot_s", *regularize._OBS_COLS]
-        obs_all = self._read_input(observed_path, fp).select(*obs_cols)
+        obs_all = self._read_input(observed_path).select(*obs_cols)
         tier_names = ["tier_1m", "agg"] + (["packed_1h"] if with_pack else [])
         out = {t: self.tier_path(t) for t in tier_names}
 

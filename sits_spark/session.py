@@ -11,8 +11,9 @@ Two driver-side fixed costs are cut once per session:
 - ``read_parquet`` memoises the schema Spark inferred for a parquet input.
   A bare ``spark.read.parquet`` runs a schema-inference job on every call;
   the memo lets every later read of the same files pass ``.schema(...)``
-  and launch no job. The key is (application id, path, input identity),
-  so a new session or a rewritten file infers again.
+  and launch no job. It keeps one entry per path, tagged with the
+  application id and a hash of the files' names, sizes and mtimes; a new
+  session or a rewritten file infers again and replaces the entry.
 - ``spark.python.sql.dataFrameDebugging.enabled`` is off. When on, every
   ``functions.*``/``Column`` call captures its Python call site and pushes
   it to the JVM (a conf read, a stack walk and a set/clear: 13 py4j round
@@ -31,10 +32,10 @@ from pyspark.sql.types import StructType
 
 from .manifest import input_listing
 
-# (application id, absolute path, input identity) -> inferred schema. The
-# application id keeps sessions apart; two threads missing at once only
-# infer twice.
-_READ_SCHEMAS: dict[tuple[str, str, str], StructType] = {}
+# absolute path -> (application id, input identity, inferred schema). One
+# entry per path, overwritten on a miss, so stale sessions and rewritten
+# files leave nothing behind; two threads missing at once only infer twice.
+_READ_SCHEMAS: dict[str, tuple[str, str, StructType]] = {}
 
 
 def _tune_malloc() -> None:
@@ -128,26 +129,25 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def read_parquet(
-    spark: SparkSession, path: str, fingerprint: str | None = None
-) -> DataFrame:
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` that infers the schema once per
     (session, path, input identity) and reads with ``.schema(...)`` after.
 
-    The identity is ``fingerprint`` when the caller already holds one
-    (``manifest.input_fingerprint``), else a hash of the files' names,
-    sizes and mtimes, so a rewritten file infers again. Errors of the
-    first read (e.g. ``UNABLE_TO_INFER_SCHEMA``) propagate and memoise
-    nothing."""
-    if fingerprint is None:
-        listing = input_listing(path)
-        if not listing:  # nothing local to stat (e.g. a remote URI): no memo
-            return spark.read.parquet(path)
-        fingerprint = hashlib.md5(repr(listing).encode()).hexdigest()
-    key = (spark.sparkContext.applicationId, os.path.abspath(path), fingerprint)
-    schema = _READ_SCHEMAS.get(key)
-    if schema is not None:
-        return spark.read.schema(schema).parquet(path)
+    The identity is a hash of ``manifest.input_listing`` (the files'
+    names, sizes and mtimes), so a rewritten file infers again. Errors of
+    the first read (e.g. ``UNABLE_TO_INFER_SCHEMA``) propagate and
+    memoise nothing."""
+    listing = input_listing(path)
+    if not listing:  # nothing local to stat (e.g. a remote URI): no memo
+        return spark.read.parquet(path)
+    tag = (
+        spark.sparkContext.applicationId,
+        hashlib.md5(repr(listing).encode()).hexdigest(),
+    )
+    key = os.path.abspath(path)
+    hit = _READ_SCHEMAS.get(key)
+    if hit is not None and hit[:2] == tag:
+        return spark.read.schema(hit[2]).parquet(path)
     df = spark.read.parquet(path)
-    _READ_SCHEMAS[key] = df.schema
+    _READ_SCHEMAS[key] = (*tag, df.schema)
     return df

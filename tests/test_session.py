@@ -1,5 +1,5 @@
 """Session-level fixed costs: the memoised parquet read, the input
-fingerprint it keys on, and the per-Column call-site capture being off."""
+listing it keys on, and the per-Column call-site capture being off."""
 
 import os
 import uuid
@@ -10,7 +10,7 @@ from pyspark.errors import AnalysisException
 from pyspark.errors.utils import is_debugging_enabled
 
 from sits_spark import manifest as mf
-from sits_spark.session import read_parquet
+from sits_spark.session import _READ_SCHEMAS, read_parquet
 
 
 def _jobs_in(spark, fn):
@@ -73,18 +73,8 @@ def test_second_read_launches_no_job_and_rewrite_reinfers(spark, tmp_path):
     assert jobs
     assert third.columns == ["k", "w"]
     assert [tuple(r) for r in third.collect()] == [(7, "x")]
-
-
-def test_fingerprint_keys_the_memo(spark, tmp_path):
-    """A caller-held fingerprint is the input identity: the same one
-    reuses the schema, a new one infers again."""
-    path = str(tmp_path / "t.parquet")
-    pd.DataFrame({"k": [1]}).to_parquet(path)
-    read_parquet(spark, path, "fp-1")
-    _, jobs = _jobs_in(spark, lambda: read_parquet(spark, path, "fp-1"))
-    assert jobs == []
-    _, jobs = _jobs_in(spark, lambda: read_parquet(spark, path, "fp-2"))
-    assert jobs
+    # the rewrite replaced the path's one entry
+    assert _READ_SCHEMAS[os.path.abspath(path)][2] == third.schema
 
 
 def test_call_site_capture_off_errors_still_raise(spark):
