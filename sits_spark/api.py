@@ -32,7 +32,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .batching import arrow_conv_batches, conv_bounds, record_batch
-from .kernels import smooth_sg_mtx, smooth_whit_mtx
+from .engine_core import concat_ranges
+from .kernels import smooth_sg_mtx, smooth_whit_ragged
 from .ml import (  # noqa: F401 — re-exported verbs
     MLPModel,
     RandomForestModel,
@@ -285,8 +286,10 @@ def smooth(
 
     The Arrow path clusters rows by key (`repartition(key)` +
     `sortWithinPartitions(key, order_by)` — one shuffle) and streams
-    mapInArrow batches re-chunked to whole key runs; each run is smoothed
-    as a 1xT matrix by the same vectorized kernels the tier pipeline uses.
+    mapInArrow batches re-chunked to whole key runs. SG smooths each run
+    as a 1xT matrix; Whittaker smooths all runs of a batch in one
+    ``smooth_whit_ragged`` call, bit-identical per run to the 1xT solve —
+    the same kernels the tier pipeline uses.
     Output = input columns + ``out`` (double). Keeps input row order
     within each series."""
     order_cols = [order_by] if isinstance(order_by, str) else list(order_by)
@@ -311,15 +314,19 @@ def smooth(
     def _iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for tbl in arrow_conv_batches(batches, key=key):
             vals = np.asarray(tbl[value], dtype=np.float64)
-            sm = np.empty_like(vals)
-            starts, bounds = conv_bounds(tbl[key])
-            for i, s in enumerate(starts):
-                e = bounds[i + 1]
-                row = vals[s:e][None, :]
-                if method == "sg":
-                    sm[s:e] = smooth_sg_mtx(row, order=order, length=length)[0]
-                else:
-                    sm[s:e] = smooth_whit_mtx(row, lamb=lamb)[0]
+            _starts, bounds = conv_bounds(tbl[key])
+            if method == "sg":
+                sm = np.empty_like(vals)
+                for s, e in zip(bounds[:-1], bounds[1:]):
+                    sm[s:e] = smooth_sg_mtx(vals[s:e][None, :], order=order, length=length)[0]
+            else:
+                # every series of the batch in one ragged solve, longest first
+                by_len = np.argsort(-np.diff(bounds), kind="stable")
+                lens = np.diff(bounds)[by_len]
+                offs = np.concatenate([[0], np.cumsum(lens)[:-1]])
+                pos = concat_ranges(bounds[:-1][by_len], lens)
+                sm = np.empty_like(vals)
+                sm[pos] = smooth_whit_ragged(vals[pos], offs, lens, lamb)
             tbl = dict(tbl)
             tbl[out] = sm
             yield record_batch(tbl, pa_schema)

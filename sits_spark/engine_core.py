@@ -151,8 +151,9 @@ def chunk_bounds(lo_idx: int, t: int) -> np.ndarray:
     return np.concatenate([[0], cuts, [t]])
 
 
-def is_crossing(lo_idx: int, t: int) -> bool:
-    """True when a grid [lo_idx, lo_idx + t) crosses a chunk boundary."""
+def is_crossing(lo_idx, t):
+    """True when a grid [lo_idx, lo_idx + t) crosses a chunk boundary
+    (elementwise over arrays)."""
     return (lo_idx // CHUNK_SLOTS) != ((lo_idx + t - 1) // CHUNK_SLOTS)
 
 
@@ -180,6 +181,58 @@ def smooth_conv(filled: np.ndarray, lo_idx: int) -> tuple[np.ndarray, np.ndarray
             0, a - ea : (a - ea) + (b - a)
         ]
     return sg, whit
+
+
+def concat_ranges(starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    """Concatenation of ``arange(s, s + n)`` over (starts, lengths)."""
+    offs = np.zeros(len(lengths), dtype=np.int64)
+    np.cumsum(lengths[:-1], out=offs[1:])
+    total = int(lengths.sum()) if len(lengths) else 0
+    return np.repeat(starts - offs, lengths) + np.arange(total, dtype=np.int64)
+
+
+def smooth_segments(
+    filled: np.ndarray,
+    seg_lo: np.ndarray,
+    seg_hi: np.ndarray,
+    crop_lo: np.ndarray,
+    crop_hi: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray]:
+    """SG + Whittaker of EVERY segment of a batch in one pass, each
+    segment bit-identical to smoothing it alone as a (1, T) row.
+
+    Segment i is ``filled[seg_lo[i]:seg_hi[i]]`` — a whole short series,
+    or one chunk's extended window (chunk + CHUNK_OVERLAP context); only
+    ``[crop_lo[i], crop_hi[i])`` of it is kept. Segments are laid out
+    longest first, so SG runs one row-wise call per distinct length (an
+    equal-length run is a contiguous matrix) and Whittaker is one
+    ``smooth_whit_ragged`` call over the whole batch. Returns (sg, whit):
+    the crops concatenated in segment order."""
+    if not len(seg_lo):
+        return np.empty(0), np.empty(0)
+    seg_len = (seg_hi - seg_lo).astype(np.int64)
+    order = np.argsort(-seg_len, kind="stable")
+    lens = seg_len[order]
+    offs = np.zeros(len(lens), dtype=np.int64)
+    np.cumsum(lens[:-1], out=offs[1:])
+    rows = filled[concat_ranges(seg_lo[order], lens)]
+
+    sg_rows = np.empty_like(rows)
+    grp = np.append(np.flatnonzero(np.diff(lens)) + 1, len(lens))
+    lo = 0
+    for hi in grp:
+        t, a, b = int(lens[lo]), int(offs[lo]), int(offs[hi - 1] + lens[lo])
+        sg_rows[a:b] = kernels.smooth_sg_mtx(
+            rows[a:b].reshape(hi - lo, t), order=SG_ORDER, length=SG_LENGTH
+        ).ravel()
+        lo = hi
+    whit_rows = kernels.smooth_whit_ragged(rows, offs, lens, WHIT_LAMBDA)
+
+    # row start of each segment (in input order) inside the sorted layout
+    row_of = np.empty_like(offs)
+    row_of[order] = offs
+    keep = concat_ranges(row_of + (crop_lo - seg_lo), (crop_hi - crop_lo).astype(np.int64))
+    return sg_rows[keep], whit_rows[keep]
 
 
 def band_pipeline(
@@ -244,11 +297,10 @@ def band_pipeline_flat(
     band, bit-identical per conv to band_pipeline on (1, T).
 
     Flags and interp run vectorized over the flat array (per-conv edge
-    positions from reduceat); SG batches equal-length convs; Whittaker
-    runs the shared ragged prefix solver over the short convs; convs
-    crossing a chunk boundary take the chunked smooth_conv path
-    (``lo_idxs`` = absolute start slot index per conv). Returns flat
-    (filled, sg, whit, flags)."""
+    positions from reduceat). Every conv is one smoothing segment, or one
+    per chunk when it crosses a chunk boundary (``lo_idxs`` = absolute
+    start slot index per conv), and ``smooth_segments`` smooths all of
+    them in one batched pass. Returns flat (filled, sg, whit, flags)."""
     n = len(alen)
     n_convs = len(gb) - 1
     lengths = np.diff(gb)
@@ -284,48 +336,22 @@ def band_pipeline_flat(
         x = np.arange(hi - lo, dtype=np.float64)
         filled[lo:hi] = np.interp(x, x[valid], seg[valid])
 
-    # SG: batch equal-length SHORT convs (row-wise kernel); long convs
-    # take the chunked path below
+    # smoothing: a conv inside one chunk is one segment, a conv crossing a
+    # chunk boundary one segment per chunk (its extended window, cropped)
     if lo_idxs is None:
         lo_idxs = np.zeros(n_convs, dtype=np.int64)
-    sg = np.empty_like(filled)
-    whit = np.empty(n, dtype=np.float64)
-    by_len: dict[int, list[int]] = {}
-    long_convs: list[int] = []
-    for c in range(n_convs):
-        if is_crossing(int(lo_idxs[c]), int(lengths[c])):
-            long_convs.append(c)
-        else:
-            by_len.setdefault(int(lengths[c]), []).append(c)
-    for t, cs in by_len.items():
-        rows = np.empty((len(cs), t))
-        for r, c in enumerate(cs):
-            rows[r] = filled[gb[c] : gb[c] + t]
-        out = kernels.smooth_sg_mtx(rows, order=SG_ORDER, length=SG_LENGTH)
-        for r, c in enumerate(cs):
-            sg[gb[c] : gb[c] + t] = out[r]
-
-    # Whittaker: shared ragged solver over the length-sorted short batch
-    short = np.array(
-        [c for cs in by_len.values() for c in cs], dtype=np.int64
-    )
-    if len(short):
-        sl = lengths[short]
-        order = np.argsort(-sl, kind="stable")
-        ordered = short[order]
-        sorted_lens = sl[order]
-        offsets = np.zeros(len(short), dtype=np.int64)
-        np.cumsum(sorted_lens[:-1], out=offsets[1:])
-        flat_sorted = np.empty(int(sorted_lens.sum()), dtype=np.float64)
-        for p, c in enumerate(ordered):
-            flat_sorted[offsets[p] : offsets[p] + sorted_lens[p]] = filled[gb[c] : gb[c + 1]]
-        whit_sorted = kernels.smooth_whit_ragged(flat_sorted, offsets, sorted_lens, WHIT_LAMBDA)
-        for p, c in enumerate(ordered):
-            whit[gb[c] : gb[c + 1]] = whit_sorted[offsets[p] : offsets[p] + sorted_lens[p]]
-    for c in long_convs:
-        s_c, w_c = smooth_conv(filled[gb[c] : gb[c + 1]], int(lo_idxs[c]))
-        sg[gb[c] : gb[c + 1]] = s_c
-        whit[gb[c] : gb[c + 1]] = w_c
+    crossing = is_crossing(lo_idxs, lengths)
+    segs = [np.stack([gb[:-1], gb[1:], gb[:-1], gb[1:]])[:, ~crossing]]
+    for c in np.flatnonzero(crossing):
+        t = int(lengths[c])
+        cb = chunk_bounds(int(lo_idxs[c]), t)
+        a, b = cb[:-1], cb[1:]
+        segs.append(gb[c] + np.stack([
+            np.maximum(0, a - CHUNK_OVERLAP), np.minimum(t, b + CHUNK_OVERLAP), a, b,
+        ]))
+    seg = np.concatenate(segs, axis=1)
+    seg = seg[:, np.argsort(seg[2], kind="stable")]  # crops tile the batch
+    sg, whit = smooth_segments(filled, *seg)
     return filled, sg, whit, flags
 
 

@@ -32,14 +32,17 @@ sits R/api_chunks.R:44-148):
   via sequence()), then unioned into the stream — no join against the fat
   stream, no driver round-trip.
 
-The kernel (``chunk_grids``) smooths each chunk's extended window and
-crops — numerically the SAME operation smooth_conv applies inside one
-task — and the fused kernel hands the cropped chunk grids to its tier
-emitter (``fused._emit_tiers``), so a split conversation's tiers are
-BYTE-identical to the single-node oracle (asserted in tests/test_chunked.py
-and tests/test_spark_pipeline.py). Scale math: a conversation spanning Y
-years is ~Y*46 chunks of <= 11520 slots each, each a few hundred KB of
-state.
+The kernel (``chunk_grids``) scatters, gap-fills and flags each chunk's
+extended window (``_process_group``), then hands the windows of a batch
+of groups to ``engine_core.smooth_segments`` — the one batched smoother
+the flat kernel also uses — which smooths them and crops each to its
+chunk; this module calls no smoother itself. The fused kernel hands the
+cropped chunk grids to its tier emitter (``fused._emit_tiers``), so a
+split conversation's tiers are BYTE-identical to the single-node oracle,
+whose per-conversation ``smooth_conv`` is an independent solver (asserted
+in tests/test_chunked.py and tests/test_spark_pipeline.py). Scale math:
+a conversation spanning Y years is ~Y*46 chunks of <= 11520 slots each,
+each a few hundred KB of state.
 """
 
 from __future__ import annotations
@@ -202,22 +205,23 @@ def chunk_grids(tbl: dict, max_slots: int) -> Iterator[tuple]:
     """(slot_data, gb, conv_ids, buckets) — ``fused._emit_tiers``' input —
     for the (conv, chunk) groups of a batch of giant rows sorted by
     (conv_id, chunk, marker, slot_s), in lists of about ``max_slots`` grid
-    slots: a silent chunk expands one anchor row into a whole chunk of
-    slots, so the output of a batch is bounded by slots, not by its input
-    rows. A halo-only group (no anchor row) lies outside its conv's extent
-    and emits nothing."""
+    slots, each list smoothed in one ``engine_core.smooth_segments`` call
+    (``_concat``). The bound is in slots: a silent chunk expands one
+    anchor row into a whole chunk of slots, so the output of a batch is
+    bounded by slots, not by its input rows. A halo-only group (no anchor
+    row) lies outside its conv's extent and emits nothing."""
     cid, chunk = tbl["conv_id"], tbl["chunk"]
     new = np.ones(len(cid), dtype=bool)
     new[1:] = (cid[1:] != cid[:-1]) | (chunk[1:] != chunk[:-1])
     bounds = np.append(np.flatnonzero(new), len(cid))
-    groups: list[tuple[int, dict]] = []
+    groups: list[tuple[int, dict, int, int]] = []
     n = 0
     for lo, hi in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
         if tbl["marker"][lo] != ANCHOR:
             continue
-        grid = _process_group(tbl, lo, hi)
-        groups.append((lo, grid))
-        n += len(grid["slot_start_s"])
+        grid, ca, cb = _process_group(tbl, lo, hi)
+        groups.append((lo, grid, ca, cb))
+        n += cb - ca
         if n >= max_slots:
             yield _concat(tbl, groups)
             groups, n = [], 0
@@ -225,15 +229,32 @@ def chunk_grids(tbl: dict, max_slots: int) -> Iterator[tuple]:
         yield _concat(tbl, groups)
 
 
-def _concat(tbl: dict, groups: list[tuple[int, dict]]) -> tuple:
-    los = np.array([lo for lo, _grid in groups])
+def _concat(tbl: dict, groups: list[tuple[int, dict, int, int]]) -> tuple:
+    """A list of groups as ``_emit_tiers``' input: their extended windows
+    smoothed in one ``engine_core.smooth_segments`` call, then every
+    column cropped to the chunks' own slots."""
+    los = np.array([lo for lo, _g, _a, _b in groups])
+    ext_len = np.array([len(g["slot_start_s"]) for _lo, g, _a, _b in groups], dtype=np.int64)
+    ca = np.array([a for _lo, _g, a, _b in groups], dtype=np.int64)
+    cb = np.array([b for _lo, _g, _a, b in groups], dtype=np.int64)
+    starts = np.zeros(len(groups), dtype=np.int64)
+    np.cumsum(ext_len[:-1], out=starts[1:])
+    ext = {k: np.concatenate([g[k] for _lo, g, _a, _b in groups]) for k in groups[0][1]}
+    sg, whit = engine_core.smooth_segments(
+        ext["alen_filled"], starts, starts + ext_len, starts + ca, starts + cb
+    )
+    keep = engine_core.concat_ranges(starts + ca, cb - ca)
+    slot_data = {k: v[keep] for k, v in ext.items()}
+    slot_data["alen_sg"], slot_data["alen_whit"] = sg, whit
     gb = np.zeros(len(groups) + 1, dtype=np.int64)
-    np.cumsum([len(grid["slot_start_s"]) for _lo, grid in groups], out=gb[1:])
-    slot_data = {k: np.concatenate([grid[k] for _lo, grid in groups]) for k in groups[0][1]}
+    np.cumsum(cb - ca, out=gb[1:])
     return slot_data, gb, tbl["conv_id"][los], tbl["bucket"][los].astype(np.int32)
 
 
-def _process_group(tbl, lo: int, hi: int) -> dict:
+def _process_group(tbl, lo: int, hi: int) -> tuple[dict, int, int]:
+    """One (conv, chunk) group's extended window — scatter, gap-fill
+    against the anchors and flags, unsmoothed — and the chunk's own
+    [ca, cb) slot range inside it."""
     anchor = tbl["anchor"][lo]
     chunk = int(tbl["chunk"][lo])
     conv_lo, conv_hi = anchor["conv_lo"], anchor["conv_hi"]
@@ -255,12 +276,14 @@ def _process_group(tbl, lo: int, hi: int) -> dict:
         out[pos] = col[keep]
         return out
 
-    for c in ("n_turns", "tokens_user", "tokens_assistant", "tokens_tool", "tool_calls"):
+    for c in engine_core._SUM_COLS:
         grid[c] = scatter(tbl[c][sl])
+    grid["present"] = grid["n_turns"] > 0
     alen_sum = scatter(tbl["alen_sum"][sl])
     alen_n = scatter(tbl["alen_n"][sl])
     with np.errstate(invalid="ignore", divide="ignore"):
         alen = np.where(alen_n > 0, alen_sum.astype(np.float64) / alen_n, np.nan)
+    grid["alen"] = alen
 
     # exact global gap-fill: interp over ext points + outside anchors
     obs_mask = alen_n > 0
@@ -273,9 +296,9 @@ def _process_group(tbl, lo: int, hi: int) -> dict:
         xs = np.concatenate([xs, [(anchor["next_slot"] - ext_lo) / 60.0]])
         ys = np.concatenate([ys, [anchor["next_val"]]])
     if len(xs):
-        filled = np.interp(np.arange(t_ext, dtype=np.float64), xs, ys)
+        grid["alen_filled"] = np.interp(np.arange(t_ext, dtype=np.float64), xs, ys)
     else:
-        filled = np.full(t_ext, np.nan)  # band empty across the whole conv
+        grid["alen_filled"] = np.full(t_ext, np.nan)  # band empty across the whole conv
 
     # flags from the conversation's GLOBAL first/last band observation
     flags = np.full(t_ext, "linear", dtype=object)
@@ -286,31 +309,8 @@ def _process_group(tbl, lo: int, hi: int) -> dict:
         slots_abs = grid["slot_start_s"]
         flags[(slots_abs < anchor["g_first_alen"]) & ~obs_mask] = "locf_lead"
         flags[(slots_abs > anchor["g_last_alen"]) & ~obs_mask] = "locf_trail"
-
-    # smooth the ext window exactly as smooth_conv does for this segment
-    mtx = filled.reshape(1, -1)
-    sg = engine_core.kernels.smooth_sg_mtx(
-        mtx, order=engine_core.SG_ORDER, length=engine_core.SG_LENGTH
-    )[0]
-    whit = engine_core.kernels.smooth_whit_mtx(mtx, engine_core.WHIT_LAMBDA)[0]
-
-    # crop to the chunk's own region
-    ca = (a - ext_lo) // 60
-    cb = (b - ext_lo) // 60 + 1
-    return {
-        "slot_start_s": grid["slot_start_s"][ca:cb],
-        "present": grid["n_turns"][ca:cb] > 0,
-        "n_turns": grid["n_turns"][ca:cb],
-        "tokens_user": grid["tokens_user"][ca:cb],
-        "tokens_assistant": grid["tokens_assistant"][ca:cb],
-        "tokens_tool": grid["tokens_tool"][ca:cb],
-        "tool_calls": grid["tool_calls"][ca:cb],
-        "alen": alen[ca:cb],
-        "fill_flag": flags[ca:cb],
-        "alen_filled": filled[ca:cb],
-        "alen_sg": sg[ca:cb],
-        "alen_whit": whit[ca:cb],
-    }
+    grid["fill_flag"] = flags
+    return grid, (a - ext_lo) // 60, (b - ext_lo) // 60 + 1
 
 
 def fused_write_chunked(

@@ -24,7 +24,7 @@ Two sinks over the same kernel stream:
 - ``fused_tiers``: a UNION-schema DataFrame (``row_kind`` in
   {slot, agg, pack}) for downstream DataFrame composition.
 - ``fused_write``: an Arrow-native partitioned-table writer — each task
-  writes its (row_kind, bucket, day) parquet files directly via pyarrow
+  writes its (row_kind, bucket, day|month) parquet files directly via pyarrow
   and returns only per-partition row-count stats. This is the
   DataSourceV2-writer pattern realized at the operator level: the input
   is already range-clustered by bucket, so the write needs no
@@ -86,16 +86,39 @@ TIER_1M_COLS = [f.split(" ")[0] for f in TIER_1M_SCHEMA.split(", ")]
 ROLLUP_COLS = [f.split(" ")[0] for f in ROLLUP_SCHEMA.split(", ")]
 PACK_COLS = [f.split(" ")[0] for f in PACK_SCHEMA.split(", ")]
 
-# per-kind on-disk file schema (partition cols bucket/day live in the path)
+# per-kind on-disk file schema (partition cols bucket/day|month live in the path)
 _KIND_PA = {
     "slot": schema_of(TIER_1M_SCHEMA),
     "agg": schema_of(ROLLUP_SCHEMA),
     "pack": schema_of(PACK_SCHEMA),
 }
+# Partition grain per row_kind, from its retention grain
+# (retention.DEFAULT_POLICY): tier_1m, kept 7 days, by day; agg and
+# packed_1h, kept 365 and 30 days, by calendar month (``month`` is the
+# month's first day), so their files hold a month of rows instead of a
+# footer and ~4 rows per (bucket, day).
+PART_COL = {"slot": "day", "agg": "month", "pack": "month"}
+_PART_PA = {
+    kind: pa.schema([("bucket", pa.int32()), (col, pa.date32())])
+    for kind, col in PART_COL.items()
+}
+# a kind's rows as the writer holds them: file columns + partition columns
+_ADD_PA = {
+    kind: pa.schema(list(_KIND_PA[kind]) + list(_PART_PA[kind]))
+    for kind in _KIND_PA
+}
 TIER_OF_KIND = {"slot": "tier_1m", "agg": "agg", "pack": "packed_1h"}
 
 STATS_SCHEMA = "tier string, bucket int, rows long"
 _STATS_PA = schema_of(STATS_SCHEMA)
+
+
+def month_start(day: np.ndarray) -> np.ndarray:
+    """Epoch day -> epoch day of its calendar month's first day."""
+    return (
+        np.asarray(day).astype("datetime64[D]").astype("datetime64[M]")
+        .astype("datetime64[D]").astype(np.int32)
+    )
 
 
 def require_no_speculation(spark) -> None:
@@ -254,7 +277,7 @@ def _cluster(
     (bucket, conv_id, chunk) and sort — an ordinary conversation (one
     chunk-0 group) stays whole inside one task, a giant's chunks spread
     over tasks, and each task's output covers few buckets, so a
-    (bucket, day)-partitioned write needs no further exchange."""
+    (bucket, day|month)-partitioned write needs no further exchange."""
     from .. import manifest as mf
 
     n = partitions or int(
@@ -322,17 +345,21 @@ _STAT_COLS = {
     "pack": ["conv_id", "window_start", "first_ts"],
 }
 
-_PART_SCHEMA = pa.schema([("bucket", pa.int32()), ("day", pa.date32())])
-
 
 class PartitionedWriter:
-    """Incremental Arrow-native (bucket, day)-partitioned writer.
+    """Incremental Arrow-native partitioned writer: ``tier_1m`` files by
+    (bucket, day), ``agg`` and ``packed_1h`` files by (bucket, month)
+    (``PART_COL``). ``add`` takes every kind with its ``day`` column; the
+    writer maps it to the month where the kind's grain is a month.
 
     Accumulates kernel output per row_kind and flushes to
     ``pads.write_dataset`` every FLUSH_ROWS rows — each flush gets a
-    deterministic basename (task partition id + flush index), so a
-    sequential task retry overwrites the same files with the same content
-    (the input split and kernel stream are deterministic). ``gen`` is the
+    deterministic basename (task partition id + flush index). The write
+    is single-threaded, so rows keep their flush order inside each file
+    (month files are sorted by ``window_start`` first) and the same
+    batches give the same file bytes: a sequential task retry overwrites
+    the same files with the same content (the input split and kernel
+    stream are deterministic). ``gen`` is the
     write action's generation token — unique per action, fixed at plan build,
     so names are unique ACROSS actions (no cross-run overwrite; stale
     generations stay invisible to manifest-driven readers and are
@@ -382,12 +409,9 @@ class PartitionedWriter:
     def add(self, kind: str, data: dict[str, np.ndarray], n: int) -> None:
         if not n:
             return
-        schema = _KIND_PA[kind]
-        full = pa.schema(
-            list(schema)
-            + [pa.field("bucket", pa.int32()), pa.field("day", pa.date32())]
-        )
-        rb = record_batch(data, full, n)
+        if PART_COL[kind] == "month":
+            data = {**data, "month": month_start(data["day"])}
+        rb = record_batch(data, _ADD_PA[kind], n)
         self._acc.setdefault(kind, []).append(rb)
         self._acc_rows[kind] = self._acc_rows.get(kind, 0) + n
         self._acc_bytes[kind] = self._acc_bytes.get(kind, 0) + rb.nbytes
@@ -411,18 +435,26 @@ class PartitionedWriter:
         self._acc_bytes[kind] = 0
         fi = self._flush_idx.get(kind, 0)
         self._flush_idx[kind] = fi + 1
-        # Arrow C++ groups rows by (bucket, day) and writes the hive
-        # layout directly — order inside each file is preserved
+        table = pa.Table.from_batches(rbs)
+        if PART_COL[kind] == "month":
+            # a month file sorted by window_start keeps day reads prunable
+            # on its window_start statistics
+            table = table.sort_by("window_start")
+        # Arrow C++ groups rows by partition and writes the hive layout
+        # directly. Single-threaded: the task already owns its core, and
+        # the threaded writer reorders rows, so the same batches gave
+        # different file bytes from one write to the next
         self._pads.write_dataset(
-            pa.Table.from_batches(rbs),
+            table,
             os.path.join(self.table_path, f"row_kind={kind}"),
             format="parquet",
-            partitioning=self._pads.partitioning(_PART_SCHEMA, flavor="hive"),
+            partitioning=self._pads.partitioning(_PART_PA[kind], flavor="hive"),
             basename_template=f"{self.prefix}{self.pid:05d}-{fi:04d}-{{i}}.parquet",
             file_options=self._opts[kind],
             existing_data_behavior="overwrite_or_ignore",
             max_partitions=1 << 20,
             max_open_files=4096,
+            use_threads=False,
         )
 
     def stats_batch(self) -> pa.RecordBatch:

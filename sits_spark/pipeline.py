@@ -5,7 +5,7 @@ The Spark re-expression of the reference's chunked physical pipeline
 R/sits_regularize.R:170-246): Catalyst handles scan + pruning + the slot
 aggregation, Arrow-batched kernels handle the per-series math, manifests
 handle resume, and tier outputs land partitioned by
-(bucket(conv_id), day) — the parquet-compatible Iceberg layout.
+(bucket(conv_id), day or month) — the parquet-compatible Iceberg layout.
 
 Physical plan — ONE action per checkpoint group, for every conversation:
 
@@ -16,7 +16,8 @@ Physical plan — ONE action per checkpoint group, for every conversation:
   range-partition by (bucket, conv_id, chunk) + sort (1 exchange) ->
   grid/fill/smooth/rollup/pack fused mapInArrow (whole convs: flat
     kernel; giant chunks: chunk kernel) ->
-  partitioned write (row_kind, bucket, day)
+  partitioned write (row_kind, bucket, day) for tier_1m,
+    (row_kind, bucket, month) for agg and packed_1h
 
 The giants' anchor rows come from a small per-(conv, chunk) summary of the
 giants alone (a second scan, semi-joined to the giant ids below its slot
@@ -33,7 +34,12 @@ serialized resource that serial byte traffic dominated the scaling curve.)
 
 All three tiers live in one partitioned table::
 
-    <warehouse>/tiers/row_kind={slot|agg|pack}/bucket=N/day=YYYY-MM-DD/
+    <warehouse>/tiers/row_kind=slot/bucket=N/day=YYYY-MM-DD/
+    <warehouse>/tiers/row_kind={agg|pack}/bucket=N/month=YYYY-MM-01/
+
+Each tier is partitioned at its retention grain: tier_1m (kept days) by
+day, the 1h/1d aggregates and packed blocks (kept months) by calendar
+month, their rows sorted by ``window_start`` inside each file.
 
 Readers prune by row_kind (partition pruning) and project each tier's
 column set; absent columns in a row_kind are parquet nulls (RLE'd to
@@ -368,16 +374,8 @@ class RollupPipeline:
             )
         if not files:
             # zero committed rows: empty frame with the tier's schema
-            import pyarrow as pa
-
             kind = {v: k for k, v in fused.TIER_OF_KIND.items()}[tier]
-            pa_schema = pa.schema(
-                list(fused._KIND_PA[kind])
-                + [pa.field("bucket", pa.int32()), pa.field("day", pa.date32())]
-            )
-            empty = pa.table(
-                {f.name: pa.array([], type=f.type) for f in pa_schema}
-            )
+            empty = fused._KIND_PA[kind].empty_table()
             return self.spark.createDataFrame(empty).select(*TIER_COLS[tier])
         return (
             self.spark.read.option("basePath", self.table_path)

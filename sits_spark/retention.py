@@ -5,12 +5,18 @@ ages out quickly while coarser tiers live longer (classic tiered
 downsampling — e.g. keep tier_1m 7 days, agg 1h/1d for months). With an
 Iceberg catalog this is `expireSnapshots` + partition-predicate deletes;
 in the parquet-compatible layout it is directory-level deletion of whole
-``day=...`` partitions plus a manifest note, which stays metadata-only —
-the same observation that lets the reference drop whole image files
-rather than rewrite rasters (file-level manifests,
+partitions plus a manifest note, which stays metadata-only — the same
+observation that lets the reference drop whole image files rather than
+rewrite rasters (file-level manifests,
 /root/reference/R/api_file_info.R:67-85).
 
-Expiry is driven by a WATERMARK date (the max day present), not
+Partitions come at each tier's grain: ``day=`` for tier_1m, ``month=``
+for agg and packed_1h. A partition is deleted once its LAST day is
+before the cutoff, so a month partition stays while any of its days is
+inside the keep window — the coarse tiers may hold up to a month more
+than their policy asks, never less.
+
+Expiry is driven by a WATERMARK date (the newest day present), not
 wall-clock, so runs are deterministic and testable.
 """
 
@@ -37,8 +43,15 @@ def _tier_root(warehouse: str, tier: str) -> str:
     return os.path.join(warehouse, "tiers", TIER_DIRS[tier])
 
 
-def _day_partitions(tier_path: str) -> list[tuple[str, dt.date]]:
-    """All (path, day) partitions under a (bucket, day)-laid-out tier."""
+def _month_last(first: dt.date) -> dt.date:
+    """Last day of the calendar month starting at ``first``."""
+    return (first.replace(day=28) + dt.timedelta(days=4)).replace(day=1) - dt.timedelta(days=1)
+
+
+def _partitions(tier_path: str) -> list[tuple[str, dt.date, dt.date]]:
+    """(path, first day, last day) of every partition under a tier: a
+    ``day=`` partition covers its day, a ``month=`` partition (its first
+    day) the whole calendar month."""
     out = []
     if not os.path.isdir(tier_path):
         return out
@@ -46,18 +59,25 @@ def _day_partitions(tier_path: str) -> list[tuple[str, dt.date]]:
         if not bucket_dir.startswith("bucket="):
             continue
         bpath = os.path.join(tier_path, bucket_dir)
-        for day_dir in os.listdir(bpath):
-            if not day_dir.startswith("day="):
+        for part_dir in os.listdir(bpath):
+            grain, _, value = part_dir.partition("=")
+            if grain not in ("day", "month"):
                 continue
-            day = dt.date.fromisoformat(day_dir.split("=", 1)[1])
-            out.append((os.path.join(bpath, day_dir), day))
+            first = dt.date.fromisoformat(value)
+            last = first if grain == "day" else _month_last(first)
+            out.append((os.path.join(bpath, part_dir), first, last))
     return out
 
 
+def _day_partitions(tier_path: str) -> list[tuple[str, dt.date]]:
+    """(path, last day covered) of every partition under a tier."""
+    return [(p, last) for p, _first, last in _partitions(tier_path)]
+
+
 def tier_watermark(tier_path: str) -> dt.date | None:
-    """Newest day present in a tier (metadata only)."""
-    parts = _day_partitions(tier_path)
-    return max((d for _p, d in parts), default=None)
+    """Newest day known present in a tier (metadata only): a month
+    partition vouches only for its first day."""
+    return max((first for _p, first, _last in _partitions(tier_path)), default=None)
 
 
 def expire_tier(
@@ -66,7 +86,10 @@ def expire_tier(
     watermark: dt.date | None = None,
     storage=None,
 ) -> list[str]:
-    """Delete day partitions older than ``watermark - keep_days``.
+    """Delete the partitions whose LAST day is older than ``watermark -
+    keep_days``: a day partition goes once its day has expired, a month
+    partition only once every day of the month has, so a month with any
+    day inside the keep window survives whole.
 
     Returns the deleted partition paths. Deletion is a partition-
     predicate drop (no data rewrite), routed through the storage backend
@@ -78,11 +101,11 @@ def expire_tier(
     parts = _day_partitions(tier_path)
     if not parts:
         return []
-    wm = watermark or max(d for _p, d in parts)
+    wm = watermark or tier_watermark(tier_path)
     cutoff = wm - dt.timedelta(days=keep_days)
     deleted = []
-    for path, day in parts:
-        if day < cutoff:
+    for path, last in parts:
+        if last < cutoff:
             storage.delete_prefix(path)
             deleted.append(path)
     return deleted

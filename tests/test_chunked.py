@@ -92,6 +92,50 @@ def test_flat_batch_mixed_short_and_long():
         assert np.array_equal(whit[a:b], whit1[0]), i
 
 
+def test_smooth_segments_matches_each_segment_alone():
+    """Overlapping segments of any length and order, cropped: each crop
+    equals the (1, T) SG and Whittaker solves of its segment, bit for bit."""
+    filled = _series(3000, seed=5)
+    filled[np.isnan(filled)] = 1.0
+    seg = np.array([
+        [0, 100, 2000, 150, 2990, 40],      # seg_lo
+        [50, 1900, 3000, 1900, 2993, 44],   # seg_hi
+        [10, 164, 2000, 150, 2990, 40],     # crop_lo
+        [40, 1836, 2936, 1900, 2993, 44],   # crop_hi
+    ])
+    sg, whit = engine_core.smooth_segments(filled, *seg)
+    at = 0
+    for lo, hi, clo, chi in seg.T:
+        row = filled[lo:hi].reshape(1, -1)
+        n = chi - clo
+        want_sg = kernels.smooth_sg_mtx(row)[0, clo - lo : chi - lo]
+        want_whit = kernels.smooth_whit_mtx(row, engine_core.WHIT_LAMBDA)[0, clo - lo : chi - lo]
+        assert np.array_equal(sg[at : at + n], want_sg)
+        assert np.array_equal(whit[at : at + n], want_whit)
+        at += n
+    assert at == len(sg) == len(whit)
+
+
+def test_engine_kernels_never_reach_the_oracle_solver(monkeypatch):
+    """The flat and chunk kernels smooth through smooth_segments; only the
+    oracle's smooth_conv calls smooth_whit_mtx, so the byte-match tests
+    compare two independent solvers."""
+    import inspect
+
+    from sits_spark.operators import chunk_split
+
+    def banned(*_a, **_k):
+        raise AssertionError("smooth_whit_mtx reached from the engine path")
+
+    monkeypatch.setattr(kernels, "smooth_whit_mtx", banned)
+    lens = [500, 2 * engine_core.CHUNK_SLOTS + 999, 7]
+    gb = np.concatenate([[0], np.cumsum(lens)])
+    flat = np.concatenate([_series(n, seed=i) for i, n in enumerate(lens)])
+    engine_core.band_pipeline_flat(flat, gb, np.array([10, 20_000, 99]))
+    src = inspect.getsource(chunk_split)
+    assert "smooth_sg" not in src and "smooth_whit" not in src
+
+
 def test_pipeline_bytematch_with_chunked_conv(spark, tmp_path_factory):
     """Full Spark pipeline vs oracle on data containing a conversation
     long enough to take the chunked path — exercises the lo_idx plumbing

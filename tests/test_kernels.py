@@ -65,6 +65,37 @@ def test_whittaker_short_series_passthrough():
     np.testing.assert_array_equal(kernels.smooth_whit_mtx(y, 0.5), y)
 
 
+def _whit_ragged_rows(rows, lamb):
+    """smooth_whit_ragged over ``rows`` (sorted longest first), split back."""
+    lens = np.array([len(r) for r in rows], dtype=np.int64)
+    offs = np.concatenate([[0], np.cumsum(lens)[:-1]]).astype(np.int64)
+    out = kernels.smooth_whit_ragged(np.concatenate(rows), offs, lens, lamb)
+    return [out[o : o + n] for o, n in zip(offs, lens)]
+
+
+@pytest.mark.parametrize("case", ["one_chunk_row", "ragged_with_short", "all_nan"])
+def test_whittaker_ragged_bit_identical_to_mtx(case):
+    """The fused kernel smooths every segment through smooth_whit_ragged
+    and the oracle through smooth_whit_mtx: the two solvers must agree
+    bit for bit, per row, at the pipeline's lambda."""
+    from sits_spark import engine_core
+
+    lam = engine_core.WHIT_LAMBDA
+    rng = np.random.default_rng(12)
+    if case == "one_chunk_row":  # one full chunk's extended window
+        rows = [rng.normal(50.0, 9.0, engine_core.CHUNK_SLOTS + 2 * engine_core.CHUNK_OVERLAP)]
+    elif case == "ragged_with_short":
+        # more rows than the python-tail cutoff, so both paths run
+        lens = [700, 700, 123, 9, 5, 4, 3, 2, 1] + list(rng.integers(4, 300, 40))
+        rows = [rng.normal(0.0, 3.0, n) for n in lens]
+    else:
+        rows = [rng.normal(size=40), np.full(17, np.nan), rng.normal(size=6)]
+    rows.sort(key=len, reverse=True)
+    for got, row in zip(_whit_ragged_rows(rows, lam), rows):
+        want = kernels.smooth_whit_mtx(row.reshape(1, -1), lam)[0]
+        assert np.array_equal(got.view(np.uint64), want.view(np.uint64)), len(row)
+
+
 def test_linear_interp_taxonomy():
     v = np.array([[np.nan, np.nan, 2.0, np.nan, np.nan, 8.0, np.nan]])
     out = kernels.linear_interp_mtx(v)[0]

@@ -67,6 +67,27 @@ def _spark_tier(spark, warehouse, tier):
     return RollupPipeline(spark, warehouse).read_tier(tier)
 
 
+def test_tier_grain_and_day_scan(spark, warehouse, raw_pdf):
+    """tier_1m is laid out by day, agg and packed_1h by month; a one-day
+    scan of the month-partitioned 1d aggregates still returns that day's
+    raw turn count."""
+    import datetime as dt
+
+    pipe = RollupPipeline(spark, warehouse)
+    grains = {
+        tier: {d.split("=", 1)[0] for _r, ds, _f in os.walk(pipe.tier_path(tier))
+               for d in ds if not d.startswith("bucket=")}
+        for tier in ("tier_1m", "agg", "packed_1h")
+    }
+    assert grains == {"tier_1m": {"day"}, "agg": {"month"}, "packed_1h": {"month"}}
+    days = raw_pdf["ts"].dt.floor("D")
+    day = days.value_counts().index[0]
+    lit = F.lit(day.to_pydatetime().replace(tzinfo=dt.timezone.utc))
+    got = (pipe.read_agg("1d").where(F.col("window_start") == lit)
+           .agg(F.sum("n_turns").alias("t")).collect()[0]["t"])
+    assert got == int((days == day).sum())
+
+
 def test_text_roundtrip_byte_exact(spark, input_path, raw_pdf):
     back = (
         spark.read.parquet(input_path)

@@ -3,7 +3,8 @@
 Backs the claims in sits_spark.streaming / sits_spark.retention docstrings:
 the streaming observed-slot aggregation must equal the batch aggregation
 for every window the watermark has closed, retention must drop exactly the
-day partitions older than the policy cutoff, and vacuum must remove
+partitions whose last day is older than the policy cutoff (a day
+partition's day, a month partition's last day), and vacuum must remove
 manifests of superseded fingerprints only.
 """
 
@@ -87,6 +88,44 @@ def test_retention_expires_old_day_partitions(spark, input_path, tmp_path_factor
     # the expired tier still reads cleanly
     if remaining:
         assert pipe.read_tier("tier_1m").count() > 0
+
+
+def _fake_partitions(root, grain, values):
+    for b in (0, 5):
+        for v in values:
+            d = root / f"bucket={b}" / f"{grain}={v}"
+            d.mkdir(parents=True)
+            (d / "part-0.parquet").write_bytes(b"x")
+
+
+def test_month_partition_expires_after_its_last_day(tmp_path):
+    """A month partition is deleted only once its LAST day is before the
+    cutoff: a month with any day inside the keep window survives whole."""
+    agg = tmp_path / "tiers" / "row_kind=agg"
+    _fake_partitions(agg, "month", ("2024-01-01", "2024-02-01", "2024-03-01"))
+    # a month vouches only for its first day
+    assert retention.tier_watermark(str(agg)) == dt.date(2024, 3, 1)
+
+    # cutoff 2024-02-29 = February's last day (leap year): February stays
+    deleted = retention.expire_tier(str(agg), 10, watermark=dt.date(2024, 3, 10))
+    assert sorted(os.path.basename(p) for p in deleted) == ["month=2024-01-01"] * 2
+    # one day later February's last day is before the cutoff
+    deleted = retention.expire_tier(str(agg), 10, watermark=dt.date(2024, 3, 11))
+    assert sorted(os.path.basename(p) for p in deleted) == ["month=2024-02-01"] * 2
+    assert {os.path.basename(p) for p, _d in retention._day_partitions(str(agg))} == {
+        "month=2024-03-01"
+    }
+
+    # apply_retention: the day tier sets the shared watermark (2024-03-10)
+    t1m = tmp_path / "tiers" / "row_kind=slot"
+    _fake_partitions(t1m, "day", [f"2024-03-{d:02d}" for d in range(1, 11)])
+    _fake_partitions(agg, "month", ("2023-12-01", "2024-01-01"))
+    deleted = retention.apply_retention(str(tmp_path), policy={"tier_1m": 7, "agg": 40})
+    assert sorted(os.path.basename(p) for p in deleted["tier_1m"]) == (
+        ["day=2024-03-01"] * 2 + ["day=2024-03-02"] * 2
+    )
+    # agg cutoff 2024-01-30: December goes, January (last day 01-31) stays
+    assert sorted(os.path.basename(p) for p in deleted["agg"]) == ["month=2023-12-01"] * 2
 
 
 def test_vacuum_manifest_drops_stale_fingerprints(spark, input_path, tmp_path_factory):
