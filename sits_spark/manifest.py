@@ -14,11 +14,14 @@ recomputing a bucket is self-contained (smoothing never crosses buckets).
 Output files are additionally laid out by day for partition pruning, but
 the day axis is not a resume unit (a conv's grid spans days).
 
-Manifest row: (tier, bucket, input_fingerprint, row_count, run_id).
-``input_fingerprint`` stands in for an Iceberg snapshot-id in the parquet
-fallback layout (SURVEY.md §7 hard part 3): a hash of the input file
-listing (names + sizes), so a changed input invalidates old checkpoints
-without scanning data.
+Manifest row: (tier, bucket, input_fingerprint, row_count, run_id, seq,
+gen, n_buckets). ``input_fingerprint`` stands in for an Iceberg
+snapshot-id in the parquet fallback layout (SURVEY.md §7 hard part 3): a
+hash of the input file listing (names + sizes), so a changed input
+invalidates old checkpoints without scanning data. ``n_buckets`` records
+the bucket count the warehouse was written with — Iceberg fixes
+``bucket[N]`` in the table's partition spec the same way — so a later run
+cannot commit buckets of another hash modulus next to live ones.
 """
 
 from __future__ import annotations
@@ -31,16 +34,21 @@ from pyspark.sql import functions as F
 
 MANIFEST_SCHEMA = (
     "tier string, bucket int, input_fingerprint string, row_count long, "
-    "run_id string, seq long, gen string"
+    "run_id string, seq long, gen string, n_buckets int"
 )
 
-# Resume/commit granularity (Iceberg bucket(conv_id) stand-in). Since the
-# fused single-write pipeline, write parallelism is the range-partition
-# count — NOT tied to the bucket count — so buckets only size the resume
-# unit and the directory fan-out. 64 keeps the sandbox's per-(bucket,day)
-# files non-tiny; a 100 TB deployment would raise this (256-1024) via the
-# RollupPipeline(n_buckets=...) parameter for finer-grained recovery.
-N_BUCKETS = 64
+# Resume/commit granularity (Iceberg bucket(conv_id) stand-in) of a new
+# warehouse. Write parallelism is the range-partition count, not the bucket
+# count, so buckets size only the resume unit and the file fan-out: each
+# write task writes one tier_1m file per (bucket, day) it touches. At 64
+# those files averaged ~4.7 KB and file-system metadata, not encoding, set
+# the writer's time (336 partitions of 12k rows: 0.26 s; 16: 0.018 s); 16,
+# 8 and 4 buckets gave the same pass wall, so 16 keeps the finest resume
+# unit at that speed. A 100 TB deployment would raise it (256-1024) via
+# RollupPipeline(n_buckets=...) when the warehouse is first written.
+N_BUCKETS = 16
+# the count of every warehouse whose manifest predates the n_buckets column
+LEGACY_N_BUCKETS = 64
 
 
 def bucket_expr(conv_col: str = "conv_id", n_buckets: int = N_BUCKETS):
@@ -88,9 +96,21 @@ class ManifestStore:
     locked), which the equal-seq tie-breaker below resolves
     deterministically by preferring the tombstone — conservative: the
     bucket reads as missing and gets recomputed rather than serving
-    possibly-mixed output."""
+    possibly-mixed output.
 
-    def __init__(self, spark: SparkSession, warehouse: str, storage=None):
+    ``n_buckets`` is the warehouse's bucket count: None takes the count
+    its manifest records (``N_BUCKETS`` for an empty warehouse); an
+    explicit count that differs from the recorded one is a ValueError, so
+    no run commits buckets of another hash modulus next to live ones.
+    Every row this store writes, tombstones included, records it."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        warehouse: str,
+        storage=None,
+        n_buckets: int | None = None,
+    ):
         from .storage import LocalFsStorage
 
         self.spark = spark
@@ -102,6 +122,31 @@ class ManifestStore:
         # second pipeline object), at amortized O(new files) cost
         self._max_seq = 0
         self._seen_files: set[str] = set()
+        recorded = self._recorded_n_buckets()
+        if n_buckets is not None and recorded is not None and n_buckets != recorded:
+            raise ValueError(
+                f"n_buckets={n_buckets} conflicts with the {recorded} buckets "
+                f"recorded in {self.path}; open this warehouse with "
+                f"n_buckets={recorded} or None"
+            )
+        self.n_buckets = n_buckets or recorded or N_BUCKETS
+
+    def _recorded_n_buckets(self) -> int | None:
+        """The bucket count of the newest manifest row; rows written
+        before the count was recorded read as ``LEGACY_N_BUCKETS``. None
+        for a warehouse with no manifest rows."""
+        newest: tuple[int, int] | None = None
+        for t in self._read_all():
+            n = t.num_rows
+            seqs = t["seq"].to_pylist() if "seq" in t.column_names else [0] * n
+            counts = (
+                t["n_buckets"].to_pylist() if "n_buckets" in t.column_names
+                else [None] * n
+            )
+            for sq, nb in zip(seqs, counts):
+                if newest is None or (sq or 0) >= newest[0]:
+                    newest = (sq or 0, nb or LEGACY_N_BUCKETS)
+        return None if newest is None else newest[1]
 
     def _read_all(self):
         import pyarrow.parquet as pq
@@ -231,6 +276,7 @@ class ManifestStore:
                 "run_id": [r[4] for r in rows],
                 "seq": pa.array([seq] * len(rows), pa.int64()),
                 "gen": [gen] * len(rows),
+                "n_buckets": pa.array([self.n_buckets] * len(rows), pa.int32()),
             }
         )
         sink = pa.BufferOutputStream()
@@ -255,11 +301,12 @@ class ManifestStore:
         )
 
     def plan_missing(
-        self, tier: str, fingerprint: str, n_buckets: int = N_BUCKETS
+        self, tier: str, fingerprint: str, n_buckets: int | None = None
     ) -> list[int]:
-        """Planned buckets minus committed ones (the anti-join)."""
+        """Planned buckets (default: the warehouse's) minus committed
+        ones (the anti-join)."""
         done = self.committed_buckets(tier, fingerprint)
-        return [b for b in range(n_buckets) if b not in done]
+        return [b for b in range(n_buckets or self.n_buckets) if b not in done]
 
 
 def footer_counts(tier_path: str) -> dict[int, int]:

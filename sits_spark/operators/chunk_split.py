@@ -26,11 +26,15 @@ sits R/api_chunks.R:44-148):
   band observation OUTSIDE the chunk's extended window on each side (so
   linear gap-fill across chunk boundaries interpolates between exactly
   the same endpoints as the global fill), in one nullable ``anchor``
-  struct that is NULL on every other row. Anchors are computed with
-  window functions over a per-(conv, chunk) summary of the giants only
-  that covers each conversation's FULL chunk range (gap chunks included
-  via sequence()), then unioned into the stream — no join against the fat
-  stream, no driver round-trip.
+  struct that is NULL on every other row. ``_anchor_rows`` computes them
+  with window functions over a per-(conv, chunk) summary of the giants
+  only that covers each conversation's FULL chunk range (gap chunks
+  included via sequence()). The pipeline runs it once, in the pre-scan
+  that finds the giants, and stores the rows with the giant list
+  (``RollupPipeline._giant_convs``); ``keyed_stream`` unions the rows it
+  is given into the stream — no join against the fat stream, and no
+  window function in the write plan. ``fused_write_chunked`` still
+  computes them inside its plan.
 
 The kernel (``chunk_grids``) scatters, gap-fills and flags each chunk's
 extended window (``_process_group``), then hands the windows of a batch
@@ -66,6 +70,8 @@ ANCHOR_TYPE = (
     "g_last_alen:bigint,prev_slot:bigint,prev_val:double,"
     "next_slot:bigint,next_val:double>"
 )
+# the anchors as ``_anchor_rows`` computes them and the pipeline stores them
+ANCHOR_SCHEMA = f"conv_id string, chunk bigint, anchor {ANCHOR_TYPE}"
 
 
 def _chunk_of(col):
@@ -73,8 +79,9 @@ def _chunk_of(col):
 
 
 def _anchor_rows(obs: DataFrame) -> DataFrame:
-    """One anchor row per (conv, chunk) over the conv's FULL chunk range
-    with the outside-context scalars the chunk kernel needs."""
+    """One ``ANCHOR_SCHEMA`` row per (conv, chunk) of every conversation
+    in ``obs``, over the conv's FULL chunk range, with the outside-context
+    scalars the chunk kernel needs."""
     has = F.col("alen_n") > 0
     val = F.col("alen_sum").cast("double") / F.col("alen_n")
     pt = F.when(has, F.struct(F.col("slot_s").alias("s"), val.alias("v")))
@@ -144,10 +151,6 @@ def _anchor_rows(obs: DataFrame) -> DataFrame:
     return dense.select(
         "conv_id",
         "chunk",
-        F.lit(ANCHOR).alias("marker"),
-        # 0, not NULL: a NULL here would turn the batch's int columns into
-        # float64 on the Arrow -> numpy path (inexact above 2**53)
-        *[F.lit(0).cast("long").alias(c) for c in ("slot_s", *_OBS_COLS)],
         F.struct(
             "conv_lo",
             "conv_hi",
@@ -161,15 +164,18 @@ def _anchor_rows(obs: DataFrame) -> DataFrame:
     )
 
 
-def keyed_stream(obs: DataFrame, giants: DataFrame | None) -> DataFrame:
+def keyed_stream(
+    obs: DataFrame, giants: DataFrame | None, anchors: DataFrame | None
+) -> DataFrame:
     """Observed slots as (conv_id, chunk, marker, slot_s, measures, anchor)
     rows. ``giants`` is a one-column DataFrame of the DISTINCT conv_ids to
-    split (a duplicate would duplicate rows), or None. A giant row is tagged by a broadcast
-    left join and exploded into its own chunk plus halo copies, and each
-    giant chunk gets an anchor row; every other row is one WHOLE_ROW of
-    chunk 0 with a NULL anchor. The anchors read the giants through a
-    left-semi join, which Catalyst pushes below the slot aggregation, so
-    only the giants' turns are aggregated twice."""
+    split (a duplicate would duplicate rows), or None; ``anchors`` holds
+    their ``ANCHOR_SCHEMA`` rows (``_anchor_rows``) and must cover only
+    conversations present in ``obs``: an anchor without its rows still
+    emits a grid. A giant row is tagged by a broadcast left join and
+    exploded into its own chunk plus halo copies, and each anchor becomes
+    the first row of its (conv, chunk) group; every other row is one
+    WHOLE_ROW of chunk 0 with a NULL anchor."""
     no_anchor = F.lit(None).cast(ANCHOR_TYPE).alias("anchor")
     if giants is None:
         return obs.select(
@@ -197,8 +203,17 @@ def keyed_stream(obs: DataFrame, giants: DataFrame | None) -> DataFrame:
         *_OBS_COLS,
         no_anchor,
     )
-    giant_obs = obs.join(F.broadcast(giants), "conv_id", "left_semi")
-    return rows.unionByName(_anchor_rows(giant_obs))
+    return rows.unionByName(
+        anchors.select(
+            "conv_id",
+            "chunk",
+            F.lit(ANCHOR).alias("marker"),
+            # 0, not NULL: a NULL here would turn the batch's int columns
+            # into float64 on the Arrow -> numpy path (inexact above 2**53)
+            *[F.lit(0).cast("long").alias(c) for c in ("slot_s", *_OBS_COLS)],
+            "anchor",
+        )
+    )
 
 
 def chunk_grids(tbl: dict, max_slots: int) -> Iterator[tuple]:
@@ -322,12 +337,13 @@ def fused_write_chunked(
     gen: str = "",
 ) -> DataFrame:
     """``fused.fused_write`` with EVERY conversation of ``obs`` split into
-    (conv, chunk) units of work. The pipeline splits only its giants in
-    its one write; this entry point exists so perfbench's layer ladder
-    can time the split path on the giant alone."""
+    (conv, chunk) units of work, its anchors computed inside the write
+    plan. The pipeline splits only its giants in its one write, with the
+    anchors its pre-scan stored; this entry point exists so perfbench's
+    layer ladder can time the split path on the giant alone."""
     from . import fused
 
     return fused.fused_write(
         obs, table_path, tiers, partitions, with_pack=with_pack, gen=gen,
-        giants=obs.select("conv_id").distinct(),
+        giants=obs.select("conv_id").distinct(), anchors=_anchor_rows(obs),
     )

@@ -47,6 +47,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from .. import engine_core
+from .. import manifest as mf
 from ..batching import arrow_conv_batches, conv_bounds, record_batch, schema_of
 from . import chunk_split
 from .regularize import _OBS_COLS
@@ -271,21 +272,23 @@ def _fused_iter(tiers: tuple[str, ...], with_pack: bool = True):
 
 
 def _cluster(
-    observed: DataFrame, partitions: int | None, giants: DataFrame | None = None
+    observed: DataFrame,
+    partitions: int | None,
+    giants: DataFrame | None = None,
+    anchors: DataFrame | None = None,
+    n_buckets: int = mf.N_BUCKETS,
 ) -> DataFrame:
     """The one kernel stream: range-cluster the keyed rows by
     (bucket, conv_id, chunk) and sort — an ordinary conversation (one
     chunk-0 group) stays whole inside one task, a giant's chunks spread
     over tasks, and each task's output covers few buckets, so a
     (bucket, day|month)-partitioned write needs no further exchange."""
-    from .. import manifest as mf
-
     n = partitions or int(
         observed.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     return (
-        chunk_split.keyed_stream(observed, giants)
-        .withColumn("bucket", mf.bucket_expr())
+        chunk_split.keyed_stream(observed, giants, anchors)
+        .withColumn("bucket", mf.bucket_expr(n_buckets=n_buckets))
         .repartitionByRange(n, "bucket", "conv_id", "chunk")
         .sortWithinPartitions("bucket", "conv_id", "chunk", "marker", "slot_s")
     )
@@ -296,9 +299,10 @@ def fused_tiers(
     tiers: tuple[str, ...] = ("1h", "1d"),
     partitions: int | None = None,
     with_pack: bool = True,
+    n_buckets: int = mf.N_BUCKETS,
 ) -> DataFrame:
     """Observed 1-minute slots -> union-schema stream of all tiers."""
-    return _cluster(observed, partitions).mapInArrow(
+    return _cluster(observed, partitions, n_buckets=n_buckets).mapInArrow(
         _fused_iter(tiers, with_pack), FUSED_SCHEMA
     )
 
@@ -513,6 +517,8 @@ def fused_write(
     flush_bytes: int | None = None,
     gen: str = "",
     giants: DataFrame | None = None,
+    anchors: DataFrame | None = None,
+    n_buckets: int = mf.N_BUCKETS,
 ) -> DataFrame:
     """Observed 1-minute slots -> partitioned tier table on disk.
 
@@ -520,15 +526,17 @@ def fused_write(
     caller's action on it IS the write job — one action, one range
     exchange, one mapInArrow for every conversation. ``giants`` is a
     one-column DataFrame of the distinct conv_ids to cut into
-    (conv, chunk) units of work (operators.chunk_split); None keeps every
-    conversation whole.
+    (conv, chunk) units of work and ``anchors`` their
+    ``chunk_split.ANCHOR_SCHEMA`` rows, restricted to conversations in
+    ``observed`` (operators.chunk_split); None keeps every conversation
+    whole. Rows are bucketed by ``bucket(conv_id) mod n_buckets``.
 
     Constraint: tasks write deterministic file names with no output-commit
     coordinator, which is only safe when a task attempt cannot run twice
     concurrently — i.e. speculation off. Idempotent under sequential task
     RETRY (same name, same content); enforced here rather than assumed."""
     require_no_speculation(observed.sparkSession)
-    return _cluster(observed, partitions, giants).mapInArrow(
+    return _cluster(observed, partitions, giants, anchors, n_buckets).mapInArrow(
         _write_iter(table_path, tiers, with_pack, flush_rows, flush_bytes, gen),
         STATS_SCHEMA,
     )

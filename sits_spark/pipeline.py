@@ -11,18 +11,21 @@ Physical plan — ONE action per checkpoint group, for every conversation:
 
   scan -> slot agg (map-side partial, 1 exchange) ->
   tag giants (broadcast left join with the driver-held id list) ->
-    explode giant rows into chunk + halo copies, union one anchor row
-    per giant (conv, chunk) ->
+    explode giant rows into chunk + halo copies, union the stored anchor
+    rows (one per giant (conv, chunk)) ->
   range-partition by (bucket, conv_id, chunk) + sort (1 exchange) ->
   grid/fill/smooth/rollup/pack fused mapInArrow (whole convs: flat
     kernel; giant chunks: chunk kernel) ->
   partitioned write (row_kind, bucket, day) for tier_1m,
     (row_kind, bucket, month) for agg and packed_1h
 
-The giants' anchor rows come from a small per-(conv, chunk) summary of the
-giants alone (a second scan, semi-joined to the giant ids below its slot
-aggregation, with two small exchanges of its own); without giants the
-plan is the single scan above.
+The giants and their anchor rows are a pure function of the input, so
+the pre-scan that finds them (``_giant_convs``) computes both once per
+(input fingerprint, threshold) — like LMFAO's batch of aggregates over
+one pass of the data — and stores them as one object under
+``stats_dir``. The write plan reads them back as a small declared-schema
+scan, cut to the action's buckets, so it holds one scan of the input and
+no window function; without giants it holds no anchor scan either.
 
 The fused kernel emits every tier as a UNION-schema stream tagged with
 ``row_kind`` AND emits the write's partition columns directly, so the
@@ -45,7 +48,9 @@ Readers prune by row_kind (partition pruning) and project each tier's
 column set; absent columns in a row_kind are parquet nulls (RLE'd to
 ~nothing on disk).
 
-Resume: each group's write commits one manifest row per (tier, bucket).
+Resume: each group's write commits one manifest row per (tier, bucket),
+recording the warehouse's bucket count (fixed at its first commit, as
+Iceberg fixes ``bucket[N]`` in a partition spec).
 A restarted run anti-joins planned buckets against committed rows (the
 reference's skip-existing-tiles recovery, /root/reference/R/api_gdalcubes.R:713-760)
 and recomputes only the missing buckets. ``checkpoint_groups`` > 1 splits
@@ -64,10 +69,9 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import engine_core
 from . import manifest as mf
 from . import storage as store_mod
-from .operators import fused, regularize
+from .operators import chunk_split, fused, regularize
 from .session import read_parquet
 
 TIER_DIRS = {
@@ -88,7 +92,7 @@ class RollupPipeline:
         self,
         spark: SparkSession,
         warehouse: str,
-        n_buckets: int = mf.N_BUCKETS,
+        n_buckets: int | None = None,
         range_partitions: int | None = None,
         giant_span_chunks: int | None = 2,
         storage=None,
@@ -99,18 +103,25 @@ class RollupPipeline:
         (operators.chunk_split) inside the one write stream instead of
         staying whole in one task — one pathological years-long
         conversation otherwise pins a core and holds its full grid in one
-        task. ``None`` disables the split (and its cheap pruned-column
-        pre-scan)."""
+        task. ``None`` disables the split (and its pre-scan).
+
+        ``n_buckets``: the conv hash bucket count, fixed when the
+        warehouse is first written and recorded in its manifest. None
+        takes the recorded count (``manifest.N_BUCKETS`` for an empty
+        warehouse); a count that differs from the recorded one is a
+        ValueError."""
         self.spark = spark
         self.warehouse = warehouse
-        self.n_buckets = n_buckets
         self.range_partitions = range_partitions or int(
             spark.conf.get("spark.sql.shuffle.partitions")
         )
         self.giant_span_chunks = giant_span_chunks
         self.table_path = os.path.join(warehouse, "tiers")
         self.storage = storage or store_mod.LocalFsStorage()
-        self.store = mf.ManifestStore(spark, warehouse, storage=self.storage)
+        self.store = mf.ManifestStore(
+            spark, warehouse, storage=self.storage, n_buckets=n_buckets
+        )
+        self.n_buckets = self.store.n_buckets
         # input-table statistics (the giant-conv extents list) are a pure
         # function of the INPUT fingerprint, not of this warehouse — like
         # Iceberg table stats they can live with the table's metadata and
@@ -143,16 +154,23 @@ class RollupPipeline:
             )
         )
 
-    def _write(self, observed, giants: list[str], tiers, with_pack, gen=""):
+    def _in_buckets(self, df: DataFrame | None, buckets: list[int]):
+        """``df`` cut to the conversations hashing into ``buckets``."""
+        if df is None or len(buckets) == self.n_buckets:
+            return df
+        return df.where(mf.bucket_expr(n_buckets=self.n_buckets).isin(buckets))
+
+    def _write(self, observed, giants: list[str], anchors, tiers, with_pack, gen=""):
         """The write action's lazy stats DataFrame: ONE fused_write over
         every conversation. The giants (the driver-held ``_giant_convs``
         list) are tagged by a broadcast join, not split off by a filter,
         so the slot aggregation, the range exchange and the kernel all
         run once; the tag cuts each giant into per-(conv, chunk) units of
-        work inside that one stream. A join rather than a literal
-        ``isin``: on a 4-core host, planning the write with an In list
-        took 1.4 s at 1k ids, 9.8 s at 10k and ~100 s at 100k
-        (MAX_GIANTS); the join's plan holds no id literals, and planning
+        work inside that one stream, and ``anchors`` (their stored
+        anchor rows, cut to ``observed``'s buckets) are unioned in. A join
+        rather than a literal ``isin``: on a 4-core host, planning the
+        write with an In list took 1.4 s at 1k ids, 9.8 s at 10k and
+        ~100 s at 100k; the join's plan holds no id literals, and planning
         it did not grow with the list."""
         giant_ids = None
         if giants:
@@ -164,7 +182,8 @@ class RollupPipeline:
             giant_ids = self.spark.createDataFrame(pa.table({"conv_id": giants}))
         return fused.fused_write(
             observed, self.table_path, tiers, self.range_partitions,
-            with_pack=with_pack, gen=gen, giants=giant_ids,
+            with_pack=with_pack, gen=gen, giants=giant_ids, anchors=anchors,
+            n_buckets=self.n_buckets,
         )
 
     def _commit_group(
@@ -228,15 +247,13 @@ class RollupPipeline:
         size = -(-len(missing) // n_groups)
         groups = [missing[i : i + size] for i in range(0, len(missing), size)]
 
-        giants = self._giant_convs(raw, fp)
+        giants, anchors = self._giant_convs(raw, regularize.observed_slots(raw), fp)
 
         for group in groups:
-            df = raw
-            if len(group) != self.n_buckets:
-                df = df.where(mf.bucket_expr().isin(group))
             gen = store_mod.new_generation()
             stats = self._write(
-                regularize.observed_slots(df), giants, tiers, with_pack, gen
+                regularize.observed_slots(self._in_buckets(raw, group)),
+                giants, self._in_buckets(anchors, group), tiers, with_pack, gen,
             )
             self._commit_group(stats, group, fp, run_id, tier_names, gen)
         return out
@@ -269,75 +286,114 @@ class RollupPipeline:
         if not missing:
             return out
 
-        giants = self._giant_convs(
+        giants, anchors = self._giant_convs(
             obs_all.select("conv_id", F.col("slot_s").cast("timestamp").alias("ts")),
+            obs_all,
             fp,
         )
-        obs = obs_all
-        if len(missing) != self.n_buckets:
-            obs = obs.where(mf.bucket_expr().isin(missing))
         gen = store_mod.new_generation()
-        stats = self._write(obs, giants, tiers, with_pack, gen)
+        stats = self._write(
+            self._in_buckets(obs_all, missing), giants,
+            self._in_buckets(anchors, missing), tiers, with_pack, gen,
+        )
         self._commit_group(stats, missing, fp, run_id, tier_names, gen)
         return out
 
-    # driver-side bound on the giant-id list; beyond it only the
-    # worst (longest-span) conversations are split — the rest stay on
-    # the whole-conv path, which is always correct, just less parallel
-    MAX_GIANTS = 100_000
+    # driver-side bound on the stored anchors, one row per giant chunk:
+    # the longest-span giants are split until their chunks reach it, the
+    # rest stay on the whole-conv path, which is always correct, just less
+    # parallel. 300k rows is what the earlier bound of 100k giant ids
+    # covered at the fewest chunks a default giant spans (3), ~30 MB of
+    # Arrow on the driver.
+    MAX_GIANT_CHUNKS = 300_000
 
-    def _giant_convs(self, raw: DataFrame, fp: str) -> list[str]:
-        """conv_ids spanning more than ``giant_span_chunks`` chunks, as a
-        driver-bounded list (cached per input fingerprint).
+    def _giant_convs(
+        self, conv_ts: DataFrame, obs: DataFrame, fp: str
+    ) -> tuple[list[str], DataFrame | None]:
+        """The giants — conv_ids spanning more than ``giant_span_chunks``
+        chunks — and their anchor rows (``chunk_split.ANCHOR_SCHEMA``).
 
-        The detection scan reads ONLY (conv_id, ts) — column pruning makes
-        it a fraction of the full-width scan — and the result is written
-        once under the warehouse so resumed runs and later checkpoint
-        groups reuse it without a Spark job (pyarrow read). Returns []
-        when there are no giants (or the split is disabled): the run then
-        takes the unmodified fast path."""
+        The pre-scan runs once per (input fingerprint, threshold): the
+        extents read ONLY (conv_id, ts) of ``conv_ts``, and the anchors
+        are ``chunk_split._anchor_rows`` over the giants' rows of ``obs``
+        (the observed slots of the same input). Both publish as ONE
+        parquet object under ``stats_dir``, so every later pass, resume
+        and checkpoint group reads the ids with pyarrow and the anchors as
+        a declared-schema scan, with no Spark job and no second input
+        scan in its write plan. Returns ([], None) when there are no
+        giants (or the split is disabled): the run then takes the
+        unmodified fast path."""
         if self.giant_span_chunks is None:
-            return []
+            return [], None
         import pyarrow.parquet as pq
 
-        span_sec = self.giant_span_chunks * engine_core.CHUNK_SLOTS * 60
         # cache key includes the threshold: a rerun with a different
-        # giant_span_chunks must not reuse a stale id list
+        # giant_span_chunks must not reuse a stale id list. The object sits
+        # under a "_" prefix (hidden from table listings) but is not named
+        # "_*" itself: Spark skips such a file even when named explicitly
         path = os.path.join(
-            self.stats_dir, f"_giants-{fp}-c{self.giant_span_chunks}"
+            self.stats_dir, f"_giants-{fp}-c{self.giant_span_chunks}",
+            "giants.parquet",
         )
         if not self.storage.exists(path):
-            import pyarrow as pa
-
-            ts_s = F.col("ts").cast("timestamp").cast("long")
-            rows = (
-                raw.select("conv_id", ts_s.alias("s"))
-                .groupBy("conv_id")
-                .agg(F.min("s").alias("lo"), F.max("s").alias("hi"))
-                .where(F.col("hi") - F.col("lo") > span_sec)
-                .orderBy((F.col("hi") - F.col("lo")).desc(), "conv_id")
-                .limit(self.MAX_GIANTS)
-                .select("conv_id")
-                .collect()
-            )
-            # the list is driver-bounded (<= MAX_GIANTS), so it publishes
-            # as ONE atomic object put — no temp dir, no rename: a run
-            # killed mid-write leaves nothing behind that a later run
-            # could misread as "no giants"
-            table = pa.table({"conv_id": [r["conv_id"] for r in rows]})
-            sink = pa.BufferOutputStream()
-            pq.write_table(table, sink)
-            self.storage.put_atomic(path, sink.getvalue().to_pybytes())
-        ids: list[str] = pq.read_table(path)["conv_id"].to_pylist()
-        if len(ids) >= self.MAX_GIANTS:
-            # the limit truncated the list: convs past the cap silently
-            # take the whole-conv path, so the skew guarantee degrades
+            self._store_giants(conv_ts, obs, path)
+        table = pq.read_table(path, columns=["conv_id"])
+        if table.schema.metadata and table.schema.metadata.get(b"capped") == b"1":
+            # convs past the cap silently take the whole-conv path, so
+            # the skew guarantee degrades
             logging.getLogger(__name__).warning(
-                "giant-conv list hit MAX_GIANTS=%d; longest-span convs "
-                "beyond the cap fall back to the whole-conv path",
-                self.MAX_GIANTS,
+                "giant-conv anchors hit MAX_GIANT_CHUNKS=%d; longest-span "
+                "convs beyond the cap fall back to the whole-conv path",
+                self.MAX_GIANT_CHUNKS,
             )
-        return sorted(ids)
+        ids: list[str] = sorted(set(table["conv_id"].to_pylist()))
+        if not ids:
+            return [], None
+        anchors = self.spark.read.schema(chunk_split.ANCHOR_SCHEMA).parquet(path)
+        return ids, anchors
+
+    def _store_giants(self, conv_ts: DataFrame, obs: DataFrame, path: str) -> None:
+        """Run the giant pre-scan and publish its result at ``path``."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        cap = self.MAX_GIANT_CHUNKS
+        ts_s = F.col("ts").cast("timestamp").cast("long")
+        span = F.col("hi") - F.col("lo")
+        chunk_of = chunk_split._chunk_of
+        n_chunks = chunk_of(F.col("hi")) - chunk_of(F.col("lo")) + 1
+        # every giant has >= 1 chunk, so cap + 1 longest ones decide the cut
+        ext = (
+            conv_ts.select("conv_id", ts_s.alias("s"))
+            .groupBy("conv_id")
+            .agg(F.min("s").alias("lo"), F.max("s").alias("hi"))
+            .where(span > self.giant_span_chunks * chunk_split.CHUNK_SEC)
+            .orderBy(span.desc(), "conv_id")
+            .limit(cap + 1)
+            .select("conv_id", n_chunks.alias("n_chunks"))
+            .toArrow()
+        )
+        total = np.cumsum(ext["n_chunks"].to_numpy())
+        keep = int(np.searchsorted(total, cap, "right"))
+        ids = ext.select(["conv_id"]).slice(0, keep)
+        if keep:
+            giant_obs = obs.join(
+                F.broadcast(self.spark.createDataFrame(ids)), "conv_id", "left_semi"
+            )
+            table = chunk_split._anchor_rows(giant_obs).toArrow()
+        else:
+            table = pa.table({"conv_id": pa.array([], pa.string())})
+        table = table.replace_schema_metadata(
+            {"capped": "1" if keep < ext.num_rows else "0"}
+        )
+        # driver-bounded (<= cap rows), so it publishes as ONE atomic
+        # object put — no temp dir, no rename: a run killed mid-write
+        # leaves nothing behind that a later run could misread as "no
+        # giants"
+        sink = pa.BufferOutputStream()
+        pq.write_table(table, sink)
+        self.storage.put_atomic(path, sink.getvalue().to_pybytes())
 
     # -- readers ---------------------------------------------------------
 

@@ -246,8 +246,9 @@ def test_split_stream_keeps_int64_measures_exact(spark, tmp_path_factory):
     )
     pipe = RollupPipeline(spark, str(tmp_path_factory.mktemp("exact_wh")), giant_span_chunks=0)
     obs = spark.read.parquet(obs_path)
-    giants = pipe._giant_convs(
+    giants, _anchors = pipe._giant_convs(
         obs.select("conv_id", F.col("slot_s").cast("timestamp").alias("ts")),
+        obs,
         mf.input_fingerprint(obs_path),
     )
     assert giants == ["big"]

@@ -159,7 +159,9 @@ def test_empty_input_raises_value_error_naming_path(spark, tmp_path_factory):
 
 def test_resume_after_kill_is_byte_identical(spark, input_path, golden, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("wh2") / "tiers")
-    pipe = RollupPipeline(spark, wh)
+    # 64 buckets pinned: the group arithmetic below is over 64; the resume
+    # (pipe2) takes the count the manifest recorded
+    pipe = RollupPipeline(spark, wh, n_buckets=64)
 
     # kill the job between checkpoint-group writes (FIXTURES.md §3.9):
     # group 1 commits its buckets, then the run dies before group 2's
@@ -264,28 +266,42 @@ def test_regularize_first_plan_is_one_pass_agg_no_window(spark):
     assert "Window" not in plan
 
 
-def test_one_write_plan_splits_giant_across_tasks(spark, tmp_path_factory):
+@pytest.fixture(scope="module")
+def giant_input(spark, tmp_path_factory):
+    """~25k turns, ~70 s mean gap: conv-hot-1 spans > 2 chunks (16 days)."""
+    pdf = fixtures.gen_transcripts(40, seed=9, hot_turns=25_000)
+    inp = str(tmp_path_factory.mktemp("giant_in") / "t")
+    spark.createDataFrame(pdf).write.parquet(inp)
+    return pdf, inp
+
+
+def test_one_write_plan_splits_giant_across_tasks(spark, giant_input, tmp_path_factory):
     """Giants ride the same stream as every other conversation: on a
-    fixture holding a multi-chunk giant, the write is ONE mapInArrow over
-    at most 3 input scans, the giant's slot rows still come from at least
-    2 tasks (task ids read from the file names), and the tiers match the
-    oracle."""
+    fixture holding a multi-chunk giant, once the pre-scan is stored the
+    write is ONE mapInArrow over ONE scan of the input (the anchors come
+    from the stored object, so no Window node), the giant's slot rows
+    still come from at least 2 tasks (task ids read from the file names),
+    and the tiers match the oracle. A changed input (new fingerprint)
+    gets anchors of its own, not the stale ones."""
+    import shutil
+
     import pyarrow.parquet as pq
 
-    # ~25k turns, ~70 s mean gap: conv-hot-1 spans > 2 chunks (16 days)
-    pdf = fixtures.gen_transcripts(40, seed=9, hot_turns=25_000)
-    inp = str(tmp_path_factory.mktemp("one_in") / "t")
-    spark.createDataFrame(pdf).write.parquet(inp)
+    pdf, inp = giant_input
     wh = str(tmp_path_factory.mktemp("one_wh"))
     pipe = RollupPipeline(spark, wh)
     raw = spark.read.parquet(inp)
-    giants = pipe._giant_convs(raw, mf.input_fingerprint(inp))
+    obs = regularize.observed_slots(raw)
+    giants, anchors = pipe._giant_convs(raw, obs, mf.input_fingerprint(inp))
     assert giants == ["conv-hot-1"], giants
 
-    stats = pipe._write(regularize.observed_slots(raw), giants, ("1h", "1d"), True)
+    stats = pipe._write(obs, giants, anchors, ("1h", "1d"), True)
     plan = stats._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInArrow") == 1, plan
-    assert plan.count("FileScan parquet") <= 3, plan
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    # the stored anchors are the one other scan: (conv_id, chunk, anchor)
+    assert len([ln for ln in scans if "anchor#" not in ln]) == 1, plan
+    assert "Window" not in plan, plan
 
     pipe.run(inp, run_id="one-1")
     golden = oracle.full_pipeline(pdf)
@@ -298,6 +314,173 @@ def test_one_write_plan_splits_giant_across_tasks(spark, tmp_path_factory):
         if "conv-hot-1" in pq.read_table(f, columns=["conv_id"])["conv_id"].to_pylist()
     }
     assert len(tasks) >= 2, tasks
+
+    # the giant grows by two days: its extent and its last chunks change
+    inp2 = str(tmp_path_factory.mktemp("one_in2") / "t")
+    shutil.copytree(inp, inp2)
+    hot = pdf[pdf.conv_id == "conv-hot-1"]
+    more = hot.tail(50).copy()
+    more["ts"] = more["ts"] + pd.Timedelta(days=2)
+    more["turn_idx"] = more["turn_idx"] + len(hot)
+    spark.createDataFrame(more).coalesce(1).write.mode("append").parquet(inp2)
+    pipe.run(inp2, run_id="one-2")
+    assert len([d for d in os.listdir(wh) if d.startswith("_giants-")]) == 2
+    golden2 = oracle.full_pipeline(pd.concat([pdf, more], ignore_index=True))
+    for tier, keys in (("tier_1m", ["conv_id", "slot_start"]),
+                       ("packed_1h", ["conv_id", "window_start"])):
+        got = pipe.read_tier(tier).toPandas()
+        if tier == "packed_1h":
+            for c in ("ts_d2", "vals_gorilla"):
+                got[c] = got[c].apply(bytes)
+        assert_frames_bitexact(got, golden2[tier], keys)
+
+
+def test_giant_anchor_cap_keeps_longest_and_warns(
+    spark, input_path, raw_pdf, golden, tmp_path_factory, caplog
+):
+    """The stored anchors are driver-bounded by MAX_GIANT_CHUNKS rows:
+    the longest-span giants are split while their chunk total fits, the
+    rest stay whole (and the tiers stay exact), and the cut is logged."""
+    import logging
+
+    from sits_spark.operators import chunk_split
+
+    pipe = RollupPipeline(spark, str(tmp_path_factory.mktemp("cap_wh")), giant_span_chunks=0)
+    pipe.MAX_GIANT_CHUNKS = 6
+    s = raw_pdf["ts"].astype("datetime64[s]").astype("int64").groupby(raw_pdf["conv_id"])
+    ext = pd.DataFrame({"lo": s.min(), "hi": s.max()}).reset_index()
+    ext = ext[ext.hi > ext.lo].assign(span=lambda d: d.hi - d.lo)
+    ext = ext.sort_values(["span", "conv_id"], ascending=[False, True])
+    n = ext.hi // chunk_split.CHUNK_SEC - ext.lo // chunk_split.CHUNK_SEC + 1
+    want = sorted(ext.conv_id[(n.cumsum() <= 6).to_numpy()])
+    assert 0 < len(want) < len(ext)
+
+    with caplog.at_level(logging.WARNING, logger="sits_spark.pipeline"):
+        pipe.run(input_path, run_id="cap-1")
+    assert "MAX_GIANT_CHUNKS=6" in caplog.text
+    raw = spark.read.parquet(input_path)
+    giants, anchors = pipe._giant_convs(
+        raw, regularize.observed_slots(raw), mf.input_fingerprint(input_path)
+    )
+    assert giants == want
+    assert anchors.count() <= 6
+    for tier, keys in (("tier_1m", ["conv_id", "slot_start"]),
+                       ("packed_1h", ["conv_id", "window_start"])):
+        got = pipe.read_tier(tier).toPandas()
+        if tier == "packed_1h":
+            for c in ("ts_d2", "vals_gorilla"):
+                got[c] = got[c].apply(bytes)
+        assert_frames_bitexact(got, golden[tier], keys)
+
+
+def _manifest(wh):
+    import pyarrow.parquet as pq
+
+    return pq.read_table(os.path.join(wh, "_manifest")).to_pandas()
+
+
+def _files_outside_their_action(pipe):
+    """Data files under a bucket that the action (generation) which wrote
+    them did not commit."""
+    man = _manifest(pipe.warehouse)
+    committed = man[man.row_count >= 0].groupby("gen")["bucket"].agg(set).to_dict()
+    return [
+        f for f in pipe.storage.list_files(pipe.table_path)
+        if int(re.search(r"bucket=(\d+)", f).group(1))
+        not in committed.get(re.search(r"part-g([0-9a-f]+)-", f).group(1), set())
+    ]
+
+
+def _assert_tiers_bitexact(pipe, golden):
+    assert_frames_bitexact(
+        pipe.read_tier("tier_1m").toPandas(), golden["tier_1m"], ["conv_id", "slot_start"]
+    )
+    agg = pipe.read_tier("agg").toPandas()
+    for tier in ("1h", "1d"):
+        got = agg[agg["tier"] == tier].drop(columns="tier")
+        assert_frames_bitexact(got, golden[f"agg_{tier}"], ["conv_id", "window_start"])
+    pk = pipe.read_tier("packed_1h").toPandas()
+    for c in ("ts_d2", "vals_gorilla"):
+        pk[c] = pk[c].apply(bytes)
+    assert_frames_bitexact(pk, golden["packed_1h"], ["conv_id", "window_start"])
+
+
+def test_stored_anchors_keep_to_the_write_buckets(spark, giant_input, tmp_path_factory):
+    """Checkpoint groups and a resume read the stored anchors of every
+    giant but must write only their own buckets: the tiers match the
+    oracle and no action leaves a data file under a bucket it did not
+    commit (an anchor of a giant in another bucket would emit a grid)."""
+    pdf, inp = giant_input
+    golden = oracle.full_pipeline(pdf)
+    pipe = RollupPipeline(spark, str(tmp_path_factory.mktemp("grp_wh")))
+    pipe.run(inp, run_id="grp-1", checkpoint_groups=2)
+    man = _manifest(pipe.warehouse)
+    assert len(set(man[man.row_count >= 0]["gen"])) == 2
+    _assert_tiers_bitexact(pipe, golden)
+    assert _files_outside_their_action(pipe) == []
+
+    giant_bucket = (
+        spark.createDataFrame([("conv-hot-1",)], "conv_id string")
+        .select(mf.bucket_expr(n_buckets=pipe.n_buckets).alias("b")).first()["b"]
+    )
+    lost = [b for b in range(pipe.n_buckets) if b != giant_bucket][:3]
+    fp = mf.input_fingerprint(inp)
+    pipe.store.invalidate(["tier_1m", "agg", "packed_1h"], lost, fp, "kill")
+    pipe.run(inp, run_id="grp-2")
+    man = _manifest(pipe.warehouse)
+    assert set(man[(man.run_id == "grp-2") & (man.row_count >= 0)]["bucket"]) == set(lost)
+    _assert_tiers_bitexact(pipe, golden)
+    assert _files_outside_their_action(pipe) == []
+
+
+def test_n_buckets_round_trips_bitexact(spark, input_path, golden, tmp_path_factory):
+    """A non-default bucket count buckets the write, the group filters
+    and the manifest alike: every tier matches the oracle, and the
+    manifest holds buckets 0-7 only, each row recording 8."""
+    wh = str(tmp_path_factory.mktemp("nb8") / "tiers")
+    pipe = RollupPipeline(spark, wh, n_buckets=8)
+    pipe.run(input_path, run_id="nb-1", checkpoint_groups=2)
+    _assert_tiers_bitexact(pipe, golden)
+    man = _manifest(wh)
+    assert set(man["bucket"]) == set(range(8))
+    assert set(man["n_buckets"]) == {8}
+    assert {d for _r, ds, _f in os.walk(pipe.table_path) for d in ds
+            if d.startswith("bucket=")} == {f"bucket={b}" for b in range(8)}
+    assert RollupPipeline(spark, wh).n_buckets == 8
+
+
+def test_recorded_bucket_count_guards_and_legacy_resume(
+    spark, input_path, golden, tmp_path_factory
+):
+    """A manifest written before the bucket count was recorded (no
+    n_buckets column) reads as 64: an explicit 16 is refused before any
+    manifest write, and a default resume over it stays at 64 buckets and
+    byte-identical."""
+    import pyarrow.parquet as pq
+
+    wh = str(tmp_path_factory.mktemp("legacy") / "tiers")
+    RollupPipeline(spark, wh, n_buckets=64).run(input_path, run_id="old-1")
+    mdir = os.path.join(wh, "_manifest")
+    for f in os.listdir(mdir):
+        path = os.path.join(mdir, f)
+        pq.write_table(pq.read_table(path).drop_columns(["n_buckets"]), path)
+    before = sorted(os.listdir(mdir))
+
+    with pytest.raises(ValueError, match="n_buckets=16 conflicts with the 64"):
+        RollupPipeline(spark, wh, n_buckets=16)
+    assert sorted(os.listdir(mdir)) == before
+
+    pipe = RollupPipeline(spark, wh)
+    assert pipe.n_buckets == 64
+    fp = mf.input_fingerprint(input_path)
+    lost = [3, 17, 40, 63]
+    pipe.store.invalidate(["tier_1m", "agg", "packed_1h"], lost, fp, "kill")
+    pipe.run(input_path, run_id="new-1")
+    man = spark.read.schema(mf.MANIFEST_SCHEMA).parquet(mdir).toPandas()
+    new = man[man.run_id == "new-1"]
+    assert set(new["bucket"]) == set(lost) and set(new["n_buckets"]) == {64}
+    assert set(man[man.run_id == "old-1"]["n_buckets"].dropna()) == set()
+    _assert_tiers_bitexact(pipe, golden)
 
 
 def test_multi_flush_write_byte_identical(spark, input_path, golden, tmp_path_factory):
