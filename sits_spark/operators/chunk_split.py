@@ -165,23 +165,24 @@ def _anchor_rows(obs: DataFrame) -> DataFrame:
 
 
 def keyed_stream(
-    obs: DataFrame, giants: DataFrame | None, anchors: DataFrame | None
+    obs: DataFrame, split: tuple[DataFrame, DataFrame] | None
 ) -> DataFrame:
     """Observed slots as (conv_id, chunk, marker, slot_s, measures, anchor)
-    rows. ``giants`` is a one-column DataFrame of the DISTINCT conv_ids to
-    split (a duplicate would duplicate rows), or None; ``anchors`` holds
-    their ``ANCHOR_SCHEMA`` rows (``_anchor_rows``) and must cover only
-    conversations present in ``obs``: an anchor without its rows still
-    emits a grid. A giant row is tagged by a broadcast left join and
-    exploded into its own chunk plus halo copies, and each anchor becomes
-    the first row of its (conv, chunk) group; every other row is one
-    WHOLE_ROW of chunk 0 with a NULL anchor."""
+    rows. ``split`` is None or the pair ``(ids, anchors)``: a one-column
+    DataFrame of the DISTINCT conv_ids to split (a duplicate would
+    duplicate rows) and their ``ANCHOR_SCHEMA`` rows (``_anchor_rows``),
+    which must cover only conversations present in ``obs``: an anchor
+    without its rows still emits a grid. A giant row is tagged by a
+    broadcast left join and exploded into its own chunk plus halo copies,
+    and each anchor becomes the first row of its (conv, chunk) group;
+    every other row is one WHOLE_ROW of chunk 0 with a NULL anchor."""
     no_anchor = F.lit(None).cast(ANCHOR_TYPE).alias("anchor")
-    if giants is None:
+    if split is None:
         return obs.select(
             "conv_id", F.lit(0).cast("long").alias("chunk"),
             F.lit(WHOLE_ROW).alias("marker"), "slot_s", *_OBS_COLS, no_anchor,
         )
+    giants, anchors = split
     tags = F.broadcast(giants.select("conv_id", F.lit(True).alias("giant")))
     giant = F.col("giant")  # NULL on every conversation not in ``giants``
     slot = F.col("slot_s")
@@ -345,5 +346,5 @@ def fused_write_chunked(
 
     return fused.fused_write(
         obs, table_path, tiers, partitions, with_pack=with_pack, gen=gen,
-        giants=obs.select("conv_id").distinct(), anchors=_anchor_rows(obs),
+        split=(obs.select("conv_id").distinct(), _anchor_rows(obs)),
     )

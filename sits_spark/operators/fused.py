@@ -274,8 +274,7 @@ def _fused_iter(tiers: tuple[str, ...], with_pack: bool = True):
 def _cluster(
     observed: DataFrame,
     partitions: int | None,
-    giants: DataFrame | None = None,
-    anchors: DataFrame | None = None,
+    split: tuple[DataFrame, DataFrame] | None = None,
     n_buckets: int = mf.N_BUCKETS,
 ) -> DataFrame:
     """The one kernel stream: range-cluster the keyed rows by
@@ -287,7 +286,7 @@ def _cluster(
         observed.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     return (
-        chunk_split.keyed_stream(observed, giants, anchors)
+        chunk_split.keyed_stream(observed, split)
         .withColumn("bucket", mf.bucket_expr(n_buckets=n_buckets))
         .repartitionByRange(n, "bucket", "conv_id", "chunk")
         .sortWithinPartitions("bucket", "conv_id", "chunk", "marker", "slot_s")
@@ -299,10 +298,9 @@ def fused_tiers(
     tiers: tuple[str, ...] = ("1h", "1d"),
     partitions: int | None = None,
     with_pack: bool = True,
-    n_buckets: int = mf.N_BUCKETS,
 ) -> DataFrame:
     """Observed 1-minute slots -> union-schema stream of all tiers."""
-    return _cluster(observed, partitions, n_buckets=n_buckets).mapInArrow(
+    return _cluster(observed, partitions).mapInArrow(
         _fused_iter(tiers, with_pack), FUSED_SCHEMA
     )
 
@@ -516,27 +514,25 @@ def fused_write(
     flush_rows: int | None = None,
     flush_bytes: int | None = None,
     gen: str = "",
-    giants: DataFrame | None = None,
-    anchors: DataFrame | None = None,
+    split: tuple[DataFrame, DataFrame] | None = None,
     n_buckets: int = mf.N_BUCKETS,
 ) -> DataFrame:
     """Observed 1-minute slots -> partitioned tier table on disk.
 
     Returns the (lazy) per-(tier, bucket) row-count stats DataFrame; the
     caller's action on it IS the write job — one action, one range
-    exchange, one mapInArrow for every conversation. ``giants`` is a
-    one-column DataFrame of the distinct conv_ids to cut into
-    (conv, chunk) units of work and ``anchors`` their
-    ``chunk_split.ANCHOR_SCHEMA`` rows, restricted to conversations in
-    ``observed`` (operators.chunk_split); None keeps every conversation
-    whole. Rows are bucketed by ``bucket(conv_id) mod n_buckets``.
+    exchange, one mapInArrow for every conversation. ``split`` names the
+    conversations to cut into (conv, chunk) units of work as one
+    ``(ids, anchors)`` pair (``chunk_split.keyed_stream``); None keeps
+    every conversation whole. Rows are bucketed by
+    ``bucket(conv_id) mod n_buckets``.
 
     Constraint: tasks write deterministic file names with no output-commit
     coordinator, which is only safe when a task attempt cannot run twice
     concurrently — i.e. speculation off. Idempotent under sequential task
     RETRY (same name, same content); enforced here rather than assumed."""
     require_no_speculation(observed.sparkSession)
-    return _cluster(observed, partitions, giants, anchors, n_buckets).mapInArrow(
+    return _cluster(observed, partitions, split, n_buckets).mapInArrow(
         _write_iter(table_path, tiers, with_pack, flush_rows, flush_bytes, gen),
         STATS_SCHEMA,
     )

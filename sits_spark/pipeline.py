@@ -172,18 +172,17 @@ class RollupPipeline:
         write with an In list took 1.4 s at 1k ids, 9.8 s at 10k and
         ~100 s at 100k; the join's plan holds no id literals, and planning
         it did not grow with the list."""
-        giant_ids = None
+        split = None
         if giants:
             # from Arrow, decoded in the JVM: a DataFrame made from a
             # Python list is decoded by a second pool of Python workers
             # (~0.5 GB more resident memory on a 4-core pass)
             import pyarrow as pa
 
-            giant_ids = self.spark.createDataFrame(pa.table({"conv_id": giants}))
+            split = (self.spark.createDataFrame(pa.table({"conv_id": giants})), anchors)
         return fused.fused_write(
             observed, self.table_path, tiers, self.range_partitions,
-            with_pack=with_pack, gen=gen, giants=giant_ids, anchors=anchors,
-            n_buckets=self.n_buckets,
+            with_pack=with_pack, gen=gen, split=split, n_buckets=self.n_buckets,
         )
 
     def _commit_group(
@@ -330,10 +329,12 @@ class RollupPipeline:
         # cache key includes the threshold: a rerun with a different
         # giant_span_chunks must not reuse a stale id list. The object sits
         # under a "_" prefix (hidden from table listings) but is not named
-        # "_*" itself: Spark skips such a file even when named explicitly
+        # "_*" itself: Spark skips such a file even when named explicitly.
+        # Not under "_giants-<fp>-c<n>": earlier versions wrote an id-only
+        # FILE there, which would shadow a directory of that name
         path = os.path.join(
-            self.stats_dir, f"_giants-{fp}-c{self.giant_span_chunks}",
-            "giants.parquet",
+            self.stats_dir, f"_anchors-{fp}-c{self.giant_span_chunks}",
+            "anchors.parquet",
         )
         if not self.storage.exists(path):
             self._store_giants(conv_ts, obs, path)

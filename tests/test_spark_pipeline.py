@@ -246,7 +246,7 @@ def test_giant_conv_chunked_write_byte_identical(spark, input_path, golden, tmp_
         ["conv_id", "window_start"],
     )
     # the giant-id table was materialized once for reuse
-    assert any(d.startswith("_giants-") for d in os.listdir(wh))
+    assert any(d.startswith("_anchors-") for d in os.listdir(wh))
 
 
 def test_regularize_first_plan_is_one_pass_agg_no_window(spark):
@@ -324,7 +324,7 @@ def test_one_write_plan_splits_giant_across_tasks(spark, giant_input, tmp_path_f
     more["turn_idx"] = more["turn_idx"] + len(hot)
     spark.createDataFrame(more).coalesce(1).write.mode("append").parquet(inp2)
     pipe.run(inp2, run_id="one-2")
-    assert len([d for d in os.listdir(wh) if d.startswith("_giants-")]) == 2
+    assert len([d for d in os.listdir(wh) if d.startswith("_anchors-")]) == 2
     golden2 = oracle.full_pipeline(pd.concat([pdf, more], ignore_index=True))
     for tier, keys in (("tier_1m", ["conv_id", "slot_start"]),
                        ("packed_1h", ["conv_id", "window_start"])):
@@ -452,10 +452,15 @@ def test_n_buckets_round_trips_bitexact(spark, input_path, golden, tmp_path_fact
 def test_recorded_bucket_count_guards_and_legacy_resume(
     spark, input_path, golden, tmp_path_factory
 ):
-    """A manifest written before the bucket count was recorded (no
-    n_buckets column) reads as 64: an explicit 16 is refused before any
-    manifest write, and a default resume over it stays at 64 buckets and
-    byte-identical."""
+    """A warehouse written before the bucket count was recorded: a
+    manifest with no n_buckets column reads as 64, an explicit 16 is
+    refused before any manifest write, and a default resume over it stays
+    at 64 buckets and byte-identical. Such a warehouse also holds the
+    earlier id-only giant list, a FILE named ``_giants-<fp>-c<n>``, which
+    the resume's pre-scan must neither read nor trip over."""
+    import shutil
+
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     wh = str(tmp_path_factory.mktemp("legacy") / "tiers")
@@ -465,6 +470,14 @@ def test_recorded_bucket_count_guards_and_legacy_resume(
         path = os.path.join(mdir, f)
         pq.write_table(pq.read_table(path).drop_columns(["n_buckets"]), path)
     before = sorted(os.listdir(mdir))
+    fp = mf.input_fingerprint(input_path)
+    for d in os.listdir(wh):  # this run's stored pre-scan, whatever its name
+        if d.startswith(("_anchors-", "_giants-")):
+            shutil.rmtree(os.path.join(wh, d))
+    pq.write_table(
+        pa.table({"conv_id": pa.array([], pa.string())}),
+        os.path.join(wh, f"_giants-{fp}-c2"),
+    )
 
     with pytest.raises(ValueError, match="n_buckets=16 conflicts with the 64"):
         RollupPipeline(spark, wh, n_buckets=16)
@@ -472,7 +485,6 @@ def test_recorded_bucket_count_guards_and_legacy_resume(
 
     pipe = RollupPipeline(spark, wh)
     assert pipe.n_buckets == 64
-    fp = mf.input_fingerprint(input_path)
     lost = [3, 17, 40, 63]
     pipe.store.invalidate(["tier_1m", "agg", "packed_1h"], lost, fp, "kill")
     pipe.run(input_path, run_id="new-1")
@@ -480,6 +492,7 @@ def test_recorded_bucket_count_guards_and_legacy_resume(
     new = man[man.run_id == "new-1"]
     assert set(new["bucket"]) == set(lost) and set(new["n_buckets"]) == {64}
     assert set(man[man.run_id == "old-1"]["n_buckets"].dropna()) == set()
+    assert any(d.startswith("_anchors-") for d in os.listdir(wh))
     _assert_tiers_bitexact(pipe, golden)
 
 
