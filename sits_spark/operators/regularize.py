@@ -17,7 +17,7 @@ observed minute.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _OBS_COLS = (
@@ -31,8 +31,9 @@ _OBS_COLS = (
 )
 
 
-def observed_slots(transcripts: DataFrame) -> DataFrame:
-    """Aggregate raw turns into observed (sparse) 1-minute slots.
+def slot_measures() -> list[Column]:
+    """The ``_OBS_COLS`` aggregates of one observed slot, in that order:
+    the one definition the batch and streaming slot aggregations share.
 
     Token proxy = length(text)//4; ``alen_*`` carries the assistant
     text-length sum/count whose ratio is the smoothing band.
@@ -40,16 +41,22 @@ def observed_slots(transcripts: DataFrame) -> DataFrame:
     text_len = F.coalesce(F.length("text").cast("long"), F.lit(0))
     tok = F.floor(text_len / 4).cast("long")
     is_role = lambda r: F.col("role") == r  # noqa: E731
+    measures = {
+        "n_turns": F.count(F.lit(1)),
+        "tokens_user": F.sum(F.when(is_role("user"), tok).otherwise(0)),
+        "tokens_assistant": F.sum(F.when(is_role("assistant"), tok).otherwise(0)),
+        "tokens_tool": F.sum(F.when(is_role("tool"), tok).otherwise(0)),
+        "tool_calls": F.sum(F.when(F.col("tool").isNotNull(), 1).otherwise(0)),
+        "alen_sum": F.sum(F.when(is_role("assistant"), text_len).otherwise(0)),
+        "alen_n": F.sum(F.when(is_role("assistant"), 1).otherwise(0)),
+    }
+    return [measures[c].alias(c) for c in _OBS_COLS]
+
+
+def observed_slots(transcripts: DataFrame) -> DataFrame:
+    """Aggregate raw turns into observed (sparse) 1-minute slots."""
     # ts may arrive as TIMESTAMP_NTZ (pyarrow-written parquet); with the
     # session pinned to UTC the NTZ->LTZ cast preserves the wall time
     ts_s = F.col("ts").cast("timestamp").cast("long")
     slot_s = (F.floor(ts_s / 60) * 60).alias("slot_s")
-    return transcripts.groupBy("conv_id", slot_s).agg(
-        F.count(F.lit(1)).alias("n_turns"),
-        F.sum(F.when(is_role("user"), tok).otherwise(0)).alias("tokens_user"),
-        F.sum(F.when(is_role("assistant"), tok).otherwise(0)).alias("tokens_assistant"),
-        F.sum(F.when(is_role("tool"), tok).otherwise(0)).alias("tokens_tool"),
-        F.sum(F.when(F.col("tool").isNotNull(), 1).otherwise(0)).alias("tool_calls"),
-        F.sum(F.when(is_role("assistant"), text_len).otherwise(0)).alias("alen_sum"),
-        F.sum(F.when(is_role("assistant"), 1).otherwise(0)).alias("alen_n"),
-    )
+    return transcripts.groupBy("conv_id", slot_s).agg(*slot_measures())

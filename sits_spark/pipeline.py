@@ -64,6 +64,7 @@ from __future__ import annotations
 
 import logging
 import os
+from collections.abc import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -246,7 +247,9 @@ class RollupPipeline:
         size = -(-len(missing) // n_groups)
         groups = [missing[i : i + size] for i in range(0, len(missing), size)]
 
-        giants, anchors = self._giant_convs(raw, regularize.observed_slots(raw), fp)
+        giants, anchors = self._giant_convs(
+            raw, lambda: regularize.observed_slots(raw), fp
+        )
 
         for group in groups:
             gen = store_mod.new_generation()
@@ -287,7 +290,7 @@ class RollupPipeline:
 
         giants, anchors = self._giant_convs(
             obs_all.select("conv_id", F.col("slot_s").cast("timestamp").alias("ts")),
-            obs_all,
+            lambda: obs_all,
             fp,
         )
         gen = store_mod.new_generation()
@@ -307,19 +310,20 @@ class RollupPipeline:
     MAX_GIANT_CHUNKS = 300_000
 
     def _giant_convs(
-        self, conv_ts: DataFrame, obs: DataFrame, fp: str
+        self, conv_ts: DataFrame, obs: Callable[[], DataFrame], fp: str
     ) -> tuple[list[str], DataFrame | None]:
         """The giants — conv_ids spanning more than ``giant_span_chunks``
         chunks — and their anchor rows (``chunk_split.ANCHOR_SCHEMA``).
 
         The pre-scan runs once per (input fingerprint, threshold): the
         extents read ONLY (conv_id, ts) of ``conv_ts``, and the anchors
-        are ``chunk_split._anchor_rows`` over the giants' rows of ``obs``
-        (the observed slots of the same input). Both publish as ONE
-        parquet object under ``stats_dir``, so every later pass, resume
-        and checkpoint group reads the ids with pyarrow and the anchors as
-        a declared-schema scan, with no Spark job and no second input
-        scan in its write plan. Returns ([], None) when there are no
+        are ``chunk_split._anchor_rows`` over the giants' rows of
+        ``obs()`` (the observed slots of the same input, planned only when
+        the pre-scan runs). Both publish as ONE parquet object under
+        ``stats_dir``, so every later pass, resume and checkpoint group
+        reads the ids with pyarrow and the anchors as a declared-schema
+        scan, with no Spark job and no second input scan in its write
+        plan. Returns ([], None) when there are no
         giants (or the split is disabled): the run then takes the
         unmodified fast path."""
         if self.giant_span_chunks is None:
@@ -337,7 +341,7 @@ class RollupPipeline:
             "anchors.parquet",
         )
         if not self.storage.exists(path):
-            self._store_giants(conv_ts, obs, path)
+            self._store_giants(conv_ts, obs(), path)
         table = pq.read_table(path, columns=["conv_id"])
         if table.schema.metadata and table.schema.metadata.get(b"capped") == b"1":
             # convs past the cap silently take the whole-conv path, so

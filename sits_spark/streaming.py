@@ -27,40 +27,19 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .api import _bayts_llr_fp
 from .manifest import bucket_expr
-
-
-_SLOT_MEASURES = (
-    "n_turns",
-    "tokens_user",
-    "tokens_assistant",
-    "tokens_tool",
-    "tool_calls",
-    "alen_sum",
-    "alen_n",
-)
+from .operators.regularize import _OBS_COLS, slot_measures
 
 
 def _slots_agg_windowed(stream: DataFrame, watermark: str) -> DataFrame:
     """The 1-minute windowed exact-int slot aggregation with the event-
     time window column KEPT (``w``) so further event-time aggregations
     can chain on it (Spark's multiple-stateful-operator support)."""
-    text_len = F.coalesce(F.length("text").cast("long"), F.lit(0))
-    tok = F.floor(text_len / 4).cast("long")
-    is_role = lambda r: F.col("role") == r  # noqa: E731
     ts = F.col("ts").cast("timestamp")
     return (
         stream.withColumn("ts", ts)
         .withWatermark("ts", watermark)
         .groupBy("conv_id", F.window("ts", "1 minute").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.sum(F.when(is_role("user"), tok).otherwise(0)).alias("tokens_user"),
-            F.sum(F.when(is_role("assistant"), tok).otherwise(0)).alias("tokens_assistant"),
-            F.sum(F.when(is_role("tool"), tok).otherwise(0)).alias("tokens_tool"),
-            F.sum(F.when(F.col("tool").isNotNull(), 1).otherwise(0)).alias("tool_calls"),
-            F.sum(F.when(is_role("assistant"), text_len).otherwise(0)).alias("alen_sum"),
-            F.sum(F.when(is_role("assistant"), 1).otherwise(0)).alias("alen_n"),
-        )
+        .agg(*slot_measures())
     )
 
 
@@ -75,7 +54,7 @@ def observed_slots_stream(
     return _slots_agg_windowed(stream, watermark).select(
         "conv_id",
         F.col("w.start").cast("long").alias("slot_s"),
-        *_SLOT_MEASURES,
+        *_OBS_COLS,
     )
 
 
@@ -99,13 +78,13 @@ def rollup_1h_stream(
         )
         .agg(
             F.count(F.lit(1)).alias("n_slots"),
-            *[F.sum(m).alias(m) for m in _SLOT_MEASURES],
+            *[F.sum(m).alias(m) for m in _OBS_COLS],
         )
         .select(
             "conv_id",
             F.col("hw.start").cast("long").alias("hour_s"),
             "n_slots",
-            *_SLOT_MEASURES,
+            *_OBS_COLS,
         )
     )
 

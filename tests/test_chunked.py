@@ -248,7 +248,7 @@ def test_split_stream_keeps_int64_measures_exact(spark, tmp_path_factory):
     obs = spark.read.parquet(obs_path)
     giants, _anchors = pipe._giant_convs(
         obs.select("conv_id", F.col("slot_s").cast("timestamp").alias("ts")),
-        obs,
+        lambda: obs,
         mf.input_fingerprint(obs_path),
     )
     assert giants == ["big"]

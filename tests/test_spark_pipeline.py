@@ -292,7 +292,7 @@ def test_one_write_plan_splits_giant_across_tasks(spark, giant_input, tmp_path_f
     pipe = RollupPipeline(spark, wh)
     raw = spark.read.parquet(inp)
     obs = regularize.observed_slots(raw)
-    giants, anchors = pipe._giant_convs(raw, obs, mf.input_fingerprint(inp))
+    giants, anchors = pipe._giant_convs(raw, lambda: obs, mf.input_fingerprint(inp))
     assert giants == ["conv-hot-1"], giants
 
     stats = pipe._write(obs, giants, anchors, ("1h", "1d"), True)
@@ -360,7 +360,7 @@ def test_giant_anchor_cap_keeps_longest_and_warns(
     assert "MAX_GIANT_CHUNKS=6" in caplog.text
     raw = spark.read.parquet(input_path)
     giants, anchors = pipe._giant_convs(
-        raw, regularize.observed_slots(raw), mf.input_fingerprint(input_path)
+        raw, lambda: regularize.observed_slots(raw), mf.input_fingerprint(input_path)
     )
     assert giants == want
     assert anchors.count() <= 6
