@@ -27,6 +27,7 @@ cannot commit buckets of another hash modulus next to live ones.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 
 from pyspark.sql import SparkSession
@@ -56,18 +57,52 @@ def bucket_expr(conv_col: str = "conv_id", n_buckets: int = N_BUCKETS):
     return F.pmod(F.xxhash64(F.col(conv_col)), F.lit(n_buckets)).cast("int")
 
 
+def _sink_committed(path: str) -> set[str] | None:
+    """Base names of the data files that the ``_spark_metadata`` log of a
+    streaming file sink's output at ``path`` has committed (the files
+    Spark reads there), or None when ``path`` holds no such log."""
+    log = os.path.join(path, "_spark_metadata")
+    if not os.path.isdir(log):
+        return None
+    names = set()
+    for f in os.listdir(log):
+        if f.startswith("."):  # checksums, in-flight temp files
+            continue
+        try:
+            with open(os.path.join(log, f)) as fh:
+                names.update(
+                    json.loads(line)["path"].rsplit("/", 1)[-1]
+                    for line in fh
+                    if line.startswith("{")
+                )
+        except FileNotFoundError:  # removed by the log's own cleanup
+            pass
+    return names
+
+
 def input_listing(path: str) -> list[tuple[str, int, int]]:
     """Sorted (relpath, size, mtime_ns) of the data files under ``path``;
     a file path lists itself by its own name. Files named ``_*`` or
-    ``.*`` (commit markers, checksums) are skipped. The one walker behind
+    ``.*`` (commit markers, checksums) are skipped, and so are the
+    directories Spark's own listing skips: ``.*``, and ``_*`` without a
+    ``=`` (a file sink's ``_spark_metadata`` log, whose compaction
+    changes no data). In a file sink's output only the files its log has
+    committed are listed: the sink writes a batch's files before the
+    batch's log entry, and Spark reads none of them until that entry
+    lands, which then changes the listing. The one walker behind
     ``input_fingerprint`` and ``session.read_parquet``'s schema memo."""
     if os.path.isfile(path):
         st = os.stat(path)
         return [(os.path.basename(path), st.st_size, st.st_mtime_ns)]
+    committed = _sink_committed(path)
     entries = []
-    for root, _dirs, files in os.walk(path):
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [
+            d for d in dirs
+            if not (d.startswith(".") or (d.startswith("_") and "=" not in d))
+        ]
         for f in files:
-            if f.startswith(("_", ".")):
+            if f.startswith(("_", ".")) or (committed is not None and f not in committed):
                 continue
             full = os.path.join(root, f)
             st = os.stat(full)
@@ -250,14 +285,6 @@ class ManifestStore:
         seq: int | None = None,
         gen: str = "",
     ) -> None:
-        self._write_rows(rows, seq, gen)
-
-    def _write_rows(
-        self,
-        rows: list[tuple[str, int, str, int, str]],
-        seq: int | None = None,
-        gen: str = "",
-    ) -> None:
         if not rows:
             return
         import uuid
@@ -296,7 +323,7 @@ class ManifestStore:
     ) -> None:
         """Tombstone (tier, bucket) rows under ``fingerprint`` BEFORE they
         are rewritten (row_count = -1, superseding seq)."""
-        self._write_rows(
+        self.commit(
             [(t, b, fingerprint, -1, run_id) for t in tiers for b in buckets]
         )
 

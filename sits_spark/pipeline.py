@@ -94,7 +94,6 @@ class RollupPipeline:
         spark: SparkSession,
         warehouse: str,
         n_buckets: int | None = None,
-        range_partitions: int | None = None,
         giant_span_chunks: int | None = 2,
         storage=None,
         stats_dir: str | None = None,
@@ -113,9 +112,7 @@ class RollupPipeline:
         ValueError."""
         self.spark = spark
         self.warehouse = warehouse
-        self.range_partitions = range_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        )
+        self.range_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
         self.giant_span_chunks = giant_span_chunks
         self.table_path = os.path.join(warehouse, "tiers")
         self.storage = storage or store_mod.LocalFsStorage()

@@ -69,11 +69,6 @@ def _partitions(tier_path: str) -> list[tuple[str, dt.date, dt.date]]:
     return out
 
 
-def _day_partitions(tier_path: str) -> list[tuple[str, dt.date]]:
-    """(path, last day covered) of every partition under a tier."""
-    return [(p, last) for p, _first, last in _partitions(tier_path)]
-
-
 def tier_watermark(tier_path: str) -> dt.date | None:
     """Newest day known present in a tier (metadata only): a month
     partition vouches only for its first day."""
@@ -98,13 +93,13 @@ def expire_tier(
     from .storage import LocalFsStorage
 
     storage = storage or LocalFsStorage()
-    parts = _day_partitions(tier_path)
+    parts = _partitions(tier_path)
     if not parts:
         return []
     wm = watermark or tier_watermark(tier_path)
     cutoff = wm - dt.timedelta(days=keep_days)
     deleted = []
-    for path, last in parts:
+    for path, _first, last in parts:
         if last < cutoff:
             storage.delete_prefix(path)
             deleted.append(path)

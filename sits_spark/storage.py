@@ -64,12 +64,14 @@ class LocalFsStorage:
         shutil.rmtree(prefix, ignore_errors=True)
 
 
-class ObjectStoreStorage:
+class ObjectStoreStorage(LocalFsStorage):
     """Object-store-semantics backend: single PUT is atomic (direct
     write, no rename), deletes are per-object, listing is a prefix walk.
     Backed by a local directory in this sandbox; the method surface is
     exactly what an S3/GCS client offers, so swapping in a real client
-    changes no pipeline code."""
+    changes no pipeline code. Listing, ``exists`` and single-object
+    delete are the local backend's; only the two methods that would
+    rename or delete recursively differ."""
 
     def put_atomic(self, path: str, data: bytes) -> None:
         os.makedirs(os.path.dirname(path), exist_ok=True)
@@ -77,23 +79,6 @@ class ObjectStoreStorage:
         # under its final key; there is no rename primitive to use
         with open(path, "wb") as f:
             f.write(data)
-
-    def list_files(self, prefix: str) -> list[str]:
-        out = []
-        for root, _dirs, files in os.walk(prefix):
-            for f in files:
-                if not f.startswith((".", "_")):
-                    out.append(os.path.join(root, f))
-        return sorted(out)
-
-    def exists(self, path: str) -> bool:
-        return os.path.exists(path)
-
-    def delete_file(self, path: str) -> None:
-        try:
-            os.remove(path)
-        except FileNotFoundError:
-            pass
 
     def delete_prefix(self, prefix: str) -> None:
         # object stores have no recursive delete: list + per-object DELETE

@@ -11,10 +11,12 @@ consumes. Gap-fill/smoothing stay batch jobs over closed windows (the
 smoothers need whole series; watermark-free because the grid join
 materializes missing slots — SURVEY.md §2.9 mapping).
 
-Sinks append to parquet bucketed the same way as the batch tiers, so a
-periodic batch "compaction" run (the normal RollupPipeline over the
-accumulated raw) produces byte-identical tiers — asserted in tests by
-comparing a stream-ingested observed table against the batch aggregation.
+Sinks append to parquet bucketed the same way as the batch tiers
+(``start_observed_sink``), and a periodic batch compaction
+(``RollupPipeline.run_from_observed`` over the sink's output) runs the
+fused kernel over the closed slots: the stream's only path to the 1h/1d
+tiers, byte-identical to the batch pipeline over the same closed prefix
+(asserted in tests).
 """
 
 from __future__ import annotations
@@ -30,19 +32,6 @@ from .manifest import bucket_expr
 from .operators.regularize import _OBS_COLS, slot_measures
 
 
-def _slots_agg_windowed(stream: DataFrame, watermark: str) -> DataFrame:
-    """The 1-minute windowed exact-int slot aggregation with the event-
-    time window column KEPT (``w``) so further event-time aggregations
-    can chain on it (Spark's multiple-stateful-operator support)."""
-    ts = F.col("ts").cast("timestamp")
-    return (
-        stream.withColumn("ts", ts)
-        .withWatermark("ts", watermark)
-        .groupBy("conv_id", F.window("ts", "1 minute").alias("w"))
-        .agg(*slot_measures())
-    )
-
-
 def observed_slots_stream(
     stream: DataFrame, watermark: str = "10 minutes"
 ) -> DataFrame:
@@ -51,41 +40,12 @@ def observed_slots_stream(
     Same exact-int measures; ``F.window(ts, "1 minute")`` is the
     event-time tumbling window (half-open [start, end) — identical slot
     semantics to the batch floor-to-minute)."""
-    return _slots_agg_windowed(stream, watermark).select(
-        "conv_id",
-        F.col("w.start").cast("long").alias("slot_s"),
-        *_OBS_COLS,
-    )
-
-
-def rollup_1h_stream(
-    stream: DataFrame, watermark: str = "10 minutes"
-) -> DataFrame:
-    """Streaming continuous-aggregate CASCADE raw -> 1m -> 1h: two
-    chained event-time window aggregations in ONE streaming query
-    (Spark >= 3.5 multiple-stateful-operators; ``window_time`` carries
-    event time from the closed 1m window into the 1h tumbling window).
-    This is the streaming form of the batch tier cascade (§2.9 /
-    engine_core agg tiers): per (conv_id, hour) the exact-int measures
-    summed over observed minutes plus ``n_slots`` (count of observed 1m
-    slots — the quantity the batch cascade derives from the 1m tier).
-    Late data is handled once, at the first aggregation's watermark; the
-    1h window only emits when every 1m window inside it has closed."""
-    slots = _slots_agg_windowed(stream, watermark)
     return (
-        slots.groupBy(
-            "conv_id", F.window(F.window_time("w"), "1 hour").alias("hw")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_slots"),
-            *[F.sum(m).alias(m) for m in _OBS_COLS],
-        )
-        .select(
-            "conv_id",
-            F.col("hw.start").cast("long").alias("hour_s"),
-            "n_slots",
-            *_OBS_COLS,
-        )
+        stream.withColumn("ts", F.col("ts").cast("timestamp"))
+        .withWatermark("ts", watermark)
+        .groupBy("conv_id", F.window("ts", "1 minute").alias("w"))
+        .agg(*slot_measures())
+        .select("conv_id", F.col("w.start").cast("long").alias("slot_s"), *_OBS_COLS)
     )
 
 

@@ -1,6 +1,7 @@
 """Session-level fixed costs: the memoised parquet read, the input
 listing it keys on, and the per-Column call-site capture being off."""
 
+import json
 import os
 import uuid
 
@@ -48,6 +49,50 @@ def test_directory_fingerprint_unchanged(tmp_path):
     (tmp_path / "_SUCCESS").write_bytes(b"")
     (tmp_path / ".a.parquet.crc").write_bytes(b"xy")
     assert mf.input_fingerprint(str(tmp_path)) == "46a48488382ad1103fda88166ab2ebea"
+
+
+def test_dirs_spark_skips_leave_fingerprint_unchanged(tmp_path):
+    """Directories Spark's listing skips (``.*``, ``_*`` without ``=``)
+    are not input; a ``_``-named partition directory is."""
+    (tmp_path / "bucket=3").mkdir()
+    (tmp_path / "bucket=3" / "part-0.parquet").write_bytes(b"12345")
+    before = mf.input_fingerprint(str(tmp_path))
+    for d in (".hidden", "_tmp", "bucket=3/_temporary"):
+        (tmp_path / d).mkdir()
+        (tmp_path / d / "part-9.parquet").write_bytes(b"xyz")
+    assert mf.input_fingerprint(str(tmp_path)) == before
+    (tmp_path / "_part=1").mkdir()
+    (tmp_path / "_part=1" / "b.parquet").write_bytes(b"xy")
+    assert mf.input_fingerprint(str(tmp_path)) != before
+
+
+def _sink_log(tmp_path, name, files):
+    lines = [json.dumps({"path": f"file://{tmp_path}/{f}", "action": "add"}) for f in files]
+    (tmp_path / "_spark_metadata" / name).write_text("\n".join(["v1", *lines]))
+
+
+def test_sink_log_is_not_input_and_gates_uncommitted_files(tmp_path):
+    """A file sink's ``_spark_metadata`` log changes the fingerprint only
+    when it commits a data file: adding and compacting the log leave it
+    unchanged, and a data file the log does not name yet (written before
+    its batch's entry, not read by Spark) is not listed until it does."""
+    (tmp_path / "bucket=3").mkdir()
+    (tmp_path / "bucket=3" / "part-0.parquet").write_bytes(b"12345")
+    before = mf.input_fingerprint(str(tmp_path))
+    (tmp_path / "_spark_metadata").mkdir()
+    _sink_log(tmp_path, "0", ["bucket=3/part-0.parquet"])
+    assert mf.input_fingerprint(str(tmp_path)) == before
+    (tmp_path / "_spark_metadata" / "0").unlink()
+    _sink_log(tmp_path, "9.compact", ["bucket=3/part-0.parquet"])
+    _sink_log(tmp_path, "10", [])
+    assert mf.input_fingerprint(str(tmp_path)) == before
+
+    (tmp_path / "bucket=3" / "part-1.parquet").write_bytes(b"678")
+    assert mf.input_fingerprint(str(tmp_path)) == before
+    _sink_log(tmp_path, "11", ["bucket=3/part-1.parquet"])
+    assert [r for r, _s, _m in mf.input_listing(str(tmp_path))] == [
+        "bucket=3/part-0.parquet", "bucket=3/part-1.parquet"
+    ]
 
 
 def test_second_read_launches_no_job_and_rewrite_reinfers(spark, tmp_path):

@@ -34,35 +34,64 @@ def input_path(spark, raw_pdf, tmp_path_factory):
     return path
 
 
+def _assert_tiers_equal(pipe_a, pipe_b):
+    """Every tier of two warehouses holds the same rows, floats bitwise."""
+    for tier in ("tier_1m", "agg", "packed_1h"):
+        a = pipe_a.read_tier(tier).toPandas()
+        b = pipe_b.read_tier(tier).toPandas()
+        keys = ["conv_id", "slot_start" if tier == "tier_1m" else "window_start"]
+        a = a.sort_values(keys).reset_index(drop=True)
+        b = b.sort_values(keys).reset_index(drop=True)
+        assert a.columns.tolist() == b.columns.tolist() and len(a) == len(b) > 0
+        for c in a.columns:
+            av, bv = a[c].to_numpy(), b[c].to_numpy()
+            if av.dtype == np.float64:
+                assert np.array_equal(
+                    av.view(np.uint64), bv.view(np.uint64)
+                ), (tier, c)
+            else:
+                assert np.array_equal(av, bv), (tier, c)
+
+
 def test_stream_observed_slots_equal_batch(spark, input_path, tmp_path_factory):
+    """The sink (stream -> bucketed observed slots) equals the batch
+    aggregation for every window the watermark closed, and compacting its
+    output gives the tiers of the batch slots cut to that closed prefix:
+    the stream's one path to the 1h/1d tiers."""
     out = str(tmp_path_factory.mktemp("s_out"))
     ckpt = str(tmp_path_factory.mktemp("s_ckpt"))
     schema = spark.read.parquet(input_path).schema
     stream = spark.readStream.schema(schema).parquet(input_path)
     slots = streaming.observed_slots_stream(stream, watermark="10 minutes")
-    q = (
-        streaming.start_observed_sink(slots, out, ckpt, trigger_seconds=1)
-        if False
-        else slots.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    q = streaming.start_observed_sink(slots, out, ckpt, trigger_seconds=1)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
     got = spark.read.parquet(out)
+    # the input listing is the set of files Spark reads from the sink
+    assert len(mf.input_listing(out)) == len(got.inputFiles()) > 0
     want = regularize.observed_slots(spark.read.parquet(input_path))
     # append mode only emits windows the final watermark has passed;
     # compare the common closed prefix
     max_emitted = got.agg(F.max("slot_s")).collect()[0][0]
     assert max_emitted is not None, "stream emitted no closed windows"
-    g = got.where(F.col("slot_s") <= max_emitted).orderBy("conv_id", "slot_s").toPandas()
-    w = want.where(F.col("slot_s") <= max_emitted).orderBy("conv_id", "slot_s").toPandas()
+    closed = want.where(F.col("slot_s") <= max_emitted)
+    g = got.orderBy("conv_id", "slot_s").toPandas()
+    w = closed.orderBy("conv_id", "slot_s").toPandas()
     assert len(g) == len(w) and len(g) > 0
     for c in w.columns:
         assert np.array_equal(g[c].to_numpy(), w[c].to_numpy()), c
+
+    # compaction of the sink's output (bucket=N/ plus _spark_metadata/)
+    obs_path = str(tmp_path_factory.mktemp("s_obs") / "observed")
+    closed.write.parquet(obs_path)
+    pipe_s = RollupPipeline(spark, str(tmp_path_factory.mktemp("s_wh")))
+    pipe_s.run_from_observed(out, run_id="sink-1")
+    pipe_b = RollupPipeline(spark, str(tmp_path_factory.mktemp("b_wh")))
+    pipe_b.run_from_observed(obs_path, run_id="batch-1")
+    _assert_tiers_equal(pipe_s, pipe_b)
 
 
 def test_retention_expires_old_day_partitions(spark, input_path, tmp_path_factory):
@@ -70,7 +99,7 @@ def test_retention_expires_old_day_partitions(spark, input_path, tmp_path_factor
     pipe = RollupPipeline(spark, wh)
     pipe.run(input_path, run_id="r1")
     t1m_root = retention._tier_root(wh, "tier_1m")
-    before = retention._day_partitions(t1m_root)
+    before = retention._partitions(t1m_root)
     assert before, "tier_1m has day partitions"
     wm = retention.tier_watermark(t1m_root)
 
@@ -79,10 +108,10 @@ def test_retention_expires_old_day_partitions(spark, input_path, tmp_path_factor
     )
     cutoff = wm - dt.timedelta(days=7)
     # exactly the pre-cutoff partitions are gone
-    want_deleted = sorted(p for p, d in before if d < cutoff)
+    want_deleted = sorted(p for p, _first, last in before if last < cutoff)
     assert sorted(deleted["tier_1m"]) == want_deleted
-    remaining = retention._day_partitions(t1m_root)
-    assert all(d >= cutoff for _p, d in remaining)
+    remaining = retention._partitions(t1m_root)
+    assert all(last >= cutoff for _p, _first, last in remaining)
     # agg keeps everything at 365 days
     assert deleted["agg"] == []
     # the expired tier still reads cleanly
@@ -112,7 +141,7 @@ def test_month_partition_expires_after_its_last_day(tmp_path):
     # one day later February's last day is before the cutoff
     deleted = retention.expire_tier(str(agg), 10, watermark=dt.date(2024, 3, 11))
     assert sorted(os.path.basename(p) for p in deleted) == ["month=2024-02-01"] * 2
-    assert {os.path.basename(p) for p, _d in retention._day_partitions(str(agg))} == {
+    assert {os.path.basename(p) for p, _f, _l in retention._partitions(str(agg))} == {
         "month=2024-03-01"
     }
 
@@ -216,21 +245,7 @@ def test_compaction_from_observed_equals_raw_pipeline(spark, input_path, tmp_pat
     pipe_b = RollupPipeline(spark, wh_b)
     pipe_b.run_from_observed(obs_path, run_id="compact-1")
 
-    for tier in ("tier_1m", "agg", "packed_1h"):
-        a = pipe_a.read_tier(tier).toPandas()
-        b = pipe_b.read_tier(tier).toPandas()
-        keys = ["conv_id", "slot_start" if tier == "tier_1m" else "window_start"]
-        a = a.sort_values(keys).reset_index(drop=True)
-        b = b.sort_values(keys).reset_index(drop=True)
-        assert a.columns.tolist() == b.columns.tolist() and len(a) == len(b) > 0
-        for c in a.columns:
-            av, bv = a[c].to_numpy(), b[c].to_numpy()
-            if av.dtype == np.float64:
-                assert np.array_equal(
-                    av.view(np.uint64), bv.view(np.uint64)
-                ), (tier, c)
-            else:
-                assert np.array_equal(av, bv), (tier, c)
+    _assert_tiers_equal(pipe_a, pipe_b)
 
     # resume: an immediate re-compaction is a no-op
     pipe_b.run_from_observed(obs_path, run_id="compact-2")
@@ -242,48 +257,3 @@ def test_compaction_from_observed_equals_raw_pipeline(spark, input_path, tmp_pat
         for r in pq.read_table(f)["run_id"].to_pylist()
     }
     assert "compact-2" not in runs
-
-
-def test_stream_1h_cascade_equals_batch(spark, input_path, tmp_path_factory):
-    """The chained 1m -> 1h streaming aggregation (two stateful windowed
-    aggs in one query) must equal the batch re-aggregation of observed
-    slots for every hour the watermark closed."""
-    out = str(tmp_path_factory.mktemp("h_out"))
-    ckpt = str(tmp_path_factory.mktemp("h_ckpt"))
-    schema = spark.read.parquet(input_path).schema
-    stream = spark.readStream.schema(schema).parquet(input_path)
-    hourly = streaming.rollup_1h_stream(stream, watermark="10 minutes")
-    q = (
-        hourly.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = spark.read.parquet(out)
-    slots = regularize.observed_slots(spark.read.parquet(input_path))
-    want = (
-        slots.groupBy(
-            "conv_id", (F.floor(F.col("slot_s") / 3600) * 3600).alias("hour_s")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_slots"),
-            *[
-                F.sum(c).alias(c)
-                for c in (
-                    "n_turns", "tokens_user", "tokens_assistant",
-                    "tokens_tool", "tool_calls", "alen_sum", "alen_n",
-                )
-            ],
-        )
-    )
-    max_emitted = got.agg(F.max("hour_s")).collect()[0][0]
-    assert max_emitted is not None, "stream emitted no closed hours"
-    g = got.where(F.col("hour_s") <= max_emitted).orderBy("conv_id", "hour_s").toPandas()
-    w = want.where(F.col("hour_s") <= max_emitted).orderBy("conv_id", "hour_s").toPandas()
-    assert len(g) == len(w) and len(g) > 0
-    for c in w.columns:
-        assert np.array_equal(g[c].to_numpy(), w[c].to_numpy()), c
