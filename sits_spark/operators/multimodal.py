@@ -1,99 +1,16 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""PNG codec for image payloads, pure numpy + stdlib zlib.
 
-Treats image/audio/video content as ``binary`` columns with typed metadata
-(the engine's training-data-pipeline surface; SURVEY.md §2 extension).
-The Spark-side plumbing — schema, batch shape, Arrow transport, partition
-behavior — is real and tested. Decoding has three modes:
-
-- ``decode_stub="real"``   -> REAL numpy decoders for library-free formats:
-  PNG (full 8/16-bit non-interlaced core: gray/RGB/palette/alpha, all
-  five scanline filters, stdlib zlib inflate — plus an encoder whose
-  independent forward filters pin the decoder in tests), binary PPM/PGM
-  images (P6/P5 headers + raw samples, incl. nearest-neighbor resize)
-  and PCM WAV audio (RIFF header + int16 samples). JPEG/MP3/video raise
-  NotImplementedError — the clearly-marked seam where PIL/ffmpeg would
-  be injected (not in this container).
-- ``decode_stub="fake"``   -> deterministic md5-seeded features, so
-  downstream plumbing is testable independent of content.
-- ``decode_stub="fail"``   -> NotImplementedError immediately.
-
-Mirrors the reference's pattern of an injected processing closure applied
-blockwise (``filter_fn``/``impute_fn`` at
-/root/reference/R/api_classify.R:459-470) — here the injected step is the
-decoder, applied over Arrow batches in ``mapInPandas``.
+``decode_png`` reads the non-interlaced 8/16-bit core of the format
+(gray, RGB, palette, gray+alpha, RGBA; all five scanline filters).
+``encode_png`` writes it with one forward filter per image; its filters
+are computed independently of the decoder's unfiltering, so a round trip
+pins the decoder's arithmetic. Adam7 interlace and sub-byte depths raise
+NotImplementedError.
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, n_bytes long, "
-    "content_md5 string"
-)
-
-FEATURE_SCHEMA = "media_id long, kind string, n_bytes long, feat array<float>"
-
-N_FEATURES = 8
-
-
-def to_media_table(df: DataFrame, id_col: str, text_col: str, kind: str = "blob") -> DataFrame:
-    """Wrap a column as an opaque binary payload with typed metadata —
-    the ingestion shape for image/audio/video bytes."""
-    payload = F.encode(F.col(text_col), "utf-8")
-    return df.select(
-        F.col(id_col).alias("media_id"),
-        F.lit(kind).alias("kind"),
-        payload.alias("payload"),
-        F.octet_length(payload).cast("long").alias("n_bytes"),
-        F.md5(payload).alias("content_md5"),
-    )
-
-
-def _fake_features(payload: bytes, k: int = N_FEATURES) -> np.ndarray:
-    """Deterministic fake feature vector from payload bytes (md5-seeded)."""
-    h = hashlib.md5(payload).digest()
-    raw = np.frombuffer((h * ((k * 4) // len(h) + 1))[: k * 4], dtype="<u4")
-    return (raw.astype(np.float64) / 2**32).astype(np.float32)
-
-
-# --------------------------------------------------------- real decoders
-
-
-def decode_ppm(payload: bytes) -> np.ndarray:
-    """Binary PPM (P6) / PGM (P5) -> (h, w, c) uint8/uint16 array.
-
-    Pure-numpy parse of the netpbm format: magic, whitespace/comment-
-    separated width/height/maxval tokens, then raw big-endian samples."""
-    if payload[:2] not in (b"P6", b"P5"):
-        raise ValueError("not a binary PPM/PGM payload")
-    channels = 3 if payload[:2] == b"P6" else 1
-    # tokenize header: 3 ints after the magic, '#' comments to EOL ignored
-    pos, tokens = 2, []
-    while len(tokens) < 3:
-        while pos < len(payload) and payload[pos : pos + 1].isspace():
-            pos += 1
-        if payload[pos : pos + 1] == b"#":
-            while pos < len(payload) and payload[pos : pos + 1] != b"\n":
-                pos += 1
-            continue
-        start = pos
-        while pos < len(payload) and not payload[pos : pos + 1].isspace():
-            pos += 1
-        tokens.append(int(payload[start:pos]))
-    pos += 1  # single whitespace after maxval
-    w, h, maxval = tokens
-    dtype = np.dtype(">u2") if maxval > 255 else np.uint8
-    n = h * w * channels
-    arr = np.frombuffer(payload, dtype=dtype, count=n, offset=pos)
-    return arr.reshape(h, w, channels).astype(np.uint16 if maxval > 255 else np.uint8)
-
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 # color type -> samples per pixel (3 = palette: 1 index -> 3 RGB samples)
@@ -263,115 +180,3 @@ def encode_png(img: np.ndarray, filter_type: int = 0) -> bytes:
         + chunk(b"IEND", b"")
     )
 
-
-def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Nearest-neighbor resize (pure numpy index map) — the thumbnail/
-    normalize step of an image pipeline."""
-    h, w = img.shape[:2]
-    rows = np.minimum((np.arange(out_h) * h) // out_h, h - 1)
-    cols = np.minimum((np.arange(out_w) * w) // out_w, w - 1)
-    return img[rows][:, cols]
-
-
-def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
-    """PCM WAV -> (samples[n, channels] int16, sample_rate).
-
-    Minimal RIFF walk: fmt chunk for rate/channels/bits (16-bit PCM
-    only), data chunk for samples; other chunks skipped."""
-    import struct
-
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a WAV payload")
-    pos, rate, channels, bits, data = 12, None, None, None, None
-    while pos + 8 <= len(payload):
-        cid, size = payload[pos : pos + 4], struct.unpack(
-            "<I", payload[pos + 4 : pos + 8]
-        )[0]
-        body = payload[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt_code, channels, rate = struct.unpack("<HHI", body[:8])
-            bits = struct.unpack("<H", body[14:16])[0]
-            if fmt_code != 1 or bits != 16:
-                raise NotImplementedError("only 16-bit PCM WAV supported")
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)
-    if rate is None or data is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    # header fields are untrusted: channels=0 would make reshape(-1, 0)
-    # raise an opaque ValueError, and a data chunk that is not a whole
-    # number of frames would silently truncate or crash in frombuffer
-    if not channels or channels < 1:
-        raise ValueError(f"WAV fmt chunk declares invalid channels={channels}")
-    if len(data) % (2 * channels):
-        raise ValueError(
-            f"WAV data chunk length {len(data)} is not a multiple of "
-            f"frame size {2 * channels} (16-bit x {channels}ch)"
-        )
-    samples = np.frombuffer(data, dtype="<i2")
-    return samples.reshape(-1, channels), rate
-
-
-def _image_features(img: np.ndarray, k: int = N_FEATURES) -> np.ndarray:
-    h, w = img.shape[:2]
-    flat = img.astype(np.float64)
-    return np.array(
-        [h, w, img.shape[2], flat.mean(), flat.std(), flat.min(), flat.max(),
-         float(np.median(flat))],
-        dtype=np.float32,
-    )[:k]
-
-
-def _audio_features(samples: np.ndarray, rate: int, k: int = N_FEATURES) -> np.ndarray:
-    x = samples.astype(np.float64)
-    rms = float(np.sqrt(np.mean(x * x))) if x.size else 0.0
-    return np.array(
-        [samples.shape[0], rate, samples.shape[1], x.mean() if x.size else 0.0,
-         x.std() if x.size else 0.0, rms, x.min() if x.size else 0.0,
-         x.max() if x.size else 0.0],
-        dtype=np.float32,
-    )[:k]
-
-
-def _real_features(payload: bytes) -> np.ndarray:
-    if payload[:2] in (b"P6", b"P5"):
-        return _image_features(decode_ppm(payload))
-    if payload[: len(_PNG_SIG)] == _PNG_SIG:
-        return _image_features(decode_png(payload))
-    if payload[:4] == b"RIFF":
-        return _audio_features(*decode_wav(payload))
-    raise NotImplementedError(
-        "JPEG/MP3/video decode requires an image/audio library not "
-        "present in this environment; inject a real decoder here "
-        "(PNG/PPM/PGM/WAV decode IS implemented, library-free)"
-    )
-
-
-def extract_features(media: DataFrame, decode_stub: str = "fake") -> DataFrame:
-    """Decode/feature-extract payloads via Arrow-batched ``mapInPandas``.
-
-    ``decode_stub="real"`` runs the numpy PPM/PGM/WAV decoders above (the
-    production batch shape with genuine content-dependent output);
-    compressed formats raise at the marked seam."""
-    if decode_stub not in ("fake", "fail", "real"):
-        raise ValueError("decode_stub must be 'fake', 'fail' or 'real'")
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if decode_stub == "fail":
-                raise NotImplementedError(
-                    "media decode requires an image/audio library not "
-                    "present in this environment; inject a real decoder here"
-                )
-            mk = _real_features if decode_stub == "real" else _fake_features
-            feats = [mk(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].to_numpy(),
-                    "kind": pdf["kind"].to_numpy(),
-                    "n_bytes": pdf["n_bytes"].to_numpy(),
-                    "feat": feats,
-                }
-            )
-
-    return media.mapInPandas(fn, FEATURE_SCHEMA)

@@ -1,122 +1,10 @@
-"""Multimodal binary-column plumbing: schema, batch shape, determinism,
-and the clearly-marked decode seam (sits_spark.operators.multimodal)."""
+"""PNG codec round trips, palette decode and rejected inputs
+(sits_spark.operators.multimodal)."""
 
 import numpy as np
 import pytest
 
-from pyspark.sql import functions as F
-from pyspark.sql.utils import PythonException
-
 from sits_spark.operators import multimodal
-
-
-@pytest.fixture(scope="module")
-def media(spark, tmp_path_factory):
-    rows = [(i, f"payload-{i} " * (i % 7 + 1)) for i in range(200)]
-    df = spark.createDataFrame(rows, "media_id long, body string")
-    return multimodal.to_media_table(df, "media_id", "body", kind="audio")
-
-
-def test_media_table_schema_and_metadata(media):
-    assert media.schema.simpleString() == (
-        "struct<media_id:bigint,kind:string,payload:binary,n_bytes:bigint,"
-        "content_md5:string>"
-    )
-    row = media.where(F.col("media_id") == 3).first()
-    assert bytes(row.payload).decode() == "payload-3 " * 4
-    assert row.n_bytes == len(bytes(row.payload))
-    assert row.kind == "audio"
-
-
-def test_feature_extraction_fake_decoder_deterministic(media):
-    feats = multimodal.extract_features(media, decode_stub="fake")
-    assert feats.schema.simpleString() == (
-        "struct<media_id:bigint,kind:string,n_bytes:bigint,feat:array<float>>"
-    )
-    got = feats.orderBy("media_id").toPandas()
-    assert len(got) == 200
-    # deterministic: features are a pure function of payload bytes
-    row5 = np.array(got.loc[got.media_id == 5, "feat"].iloc[0])
-    want = multimodal._fake_features(("payload-5 " * 6).encode())
-    assert np.array_equal(row5, want)
-    # repeated runs identical
-    again = multimodal.extract_features(media, decode_stub="fake").orderBy("media_id").toPandas()
-    assert all(
-        np.array_equal(np.array(a), np.array(b))
-        for a, b in zip(got["feat"], again["feat"])
-    )
-    # batch shape: k features per row, float32
-    assert all(len(f) == multimodal.N_FEATURES for f in got["feat"])
-
-
-def test_feature_extraction_fail_stub_raises(media):
-    with pytest.raises(PythonException, match="NotImplementedError"):
-        multimodal.extract_features(media, decode_stub="fail").count()
-
-
-def test_invalid_stub_rejected(media):
-    with pytest.raises(ValueError):
-        multimodal.extract_features(media, decode_stub="nope")
-
-
-def _ppm_bytes(h, w, seed=0):
-    rng = np.random.default_rng(seed)
-    img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-    return b"P6\n# synthetic\n%d %d\n255\n" % (w, h) + img.tobytes(), img
-
-
-def _wav_bytes(n, rate=8000, channels=2, seed=0):
-    import struct
-    rng = np.random.default_rng(seed)
-    samples = rng.integers(-32768, 32767, (n, channels), dtype=np.int16)
-    data = samples.astype("<i2").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, channels, rate, rate * channels * 2, channels * 2, 16)
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt + b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", len(body)) + body, samples
-
-
-def test_real_ppm_decode_roundtrip():
-    payload, img = _ppm_bytes(13, 7, seed=3)
-    got = multimodal.decode_ppm(payload)
-    assert got.shape == (13, 7, 3)
-    np.testing.assert_array_equal(got, img)
-    small = multimodal.resize_nearest(got, 4, 4)
-    assert small.shape == (4, 4, 3)
-    # corner pixels map to themselves under nearest-neighbor
-    np.testing.assert_array_equal(small[0, 0], img[0, 0])
-
-
-def test_real_wav_decode_roundtrip():
-    payload, samples = _wav_bytes(500, rate=16000, channels=2, seed=4)
-    got, rate = multimodal.decode_wav(payload)
-    assert rate == 16000
-    np.testing.assert_array_equal(got, samples)
-
-
-def test_real_decoder_through_spark(spark):
-    ppm, img = _ppm_bytes(9, 5, seed=1)
-    wav, samples = _wav_bytes(300, rate=8000, channels=1, seed=2)
-    df = spark.createDataFrame(
-        [(1, "image", bytearray(ppm)), (2, "audio", bytearray(wav))],
-        "media_id long, kind string, payload binary",
-    ).withColumn("n_bytes", F.octet_length("payload").cast("long"))
-    feats = multimodal.extract_features(df, decode_stub="real")
-    got = {r.media_id: np.array(r.feat) for r in feats.collect()}
-    np.testing.assert_allclose(
-        got[1][:3], [9, 5, 3]
-    )  # h, w, channels from the REAL decode
-    np.testing.assert_allclose(got[1][3], img.astype(np.float64).mean(), rtol=1e-6)
-    np.testing.assert_allclose(got[2][:3], [300, 8000, 1])
-    # compressed formats still raise at the marked seam
-    jpg = spark.createDataFrame(
-        [(3, "image", bytearray(b"\xff\xd8\xff\xe0 fake jpeg"))],
-        "media_id long, kind string, payload binary",
-    ).withColumn("n_bytes", F.octet_length("payload").cast("long"))
-    with pytest.raises(PythonException, match="NotImplementedError"):
-        multimodal.extract_features(jpg, decode_stub="real").collect()
-
-
-# ----------------------------------------------------------------- PNG
 
 
 def _rand_img(h, w, ch, dtype, seed):
@@ -201,16 +89,3 @@ def test_png_rejects_and_seams():
     with pytest.raises(NotImplementedError, match="Adam7"):
         multimodal.decode_png(interlaced)
 
-
-def test_png_through_spark_real_decoder(spark):
-    """PNG payloads flow through the Arrow-batched real decode path."""
-    img = _rand_img(9, 5, 3, np.uint8, seed=77)
-    payload = multimodal.encode_png(img, filter_type=4)
-    df = spark.createDataFrame(
-        [(1, "image", bytearray(payload))],
-        "media_id long, kind string, payload binary",
-    ).withColumn("n_bytes", F.octet_length("payload").cast("long"))
-    feats = multimodal.extract_features(df, decode_stub="real")
-    got = {r.media_id: np.array(r.feat) for r in feats.collect()}
-    np.testing.assert_allclose(got[1][:3], [9, 5, 3])
-    np.testing.assert_allclose(got[1][3], img.astype(np.float64).mean(), rtol=1e-6)

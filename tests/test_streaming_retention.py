@@ -53,11 +53,10 @@ def _assert_tiers_equal(pipe_a, pipe_b):
                 assert np.array_equal(av, bv), (tier, c)
 
 
-def test_stream_observed_slots_equal_batch(spark, input_path, tmp_path_factory):
-    """The sink (stream -> bucketed observed slots) equals the batch
-    aggregation for every window the watermark closed, and compacting its
-    output gives the tiers of the batch slots cut to that closed prefix:
-    the stream's one path to the 1h/1d tiers."""
+@pytest.fixture(scope="module")
+def sink(spark, input_path, tmp_path_factory):
+    """Run the sink (stream -> bucketed observed slots) to completion;
+    return its output path and the last slot the watermark closed."""
     out = str(tmp_path_factory.mktemp("s_out"))
     ckpt = str(tmp_path_factory.mktemp("s_ckpt"))
     schema = spark.read.parquet(input_path).schema
@@ -68,23 +67,40 @@ def test_stream_observed_slots_equal_batch(spark, input_path, tmp_path_factory):
         q.processAllAvailable()
     finally:
         q.stop()
+    # append mode only emits windows the final watermark has passed;
+    # the tests compare the common closed prefix
+    max_emitted = spark.read.parquet(out).agg(F.max("slot_s")).collect()[0][0]
+    assert max_emitted is not None, "stream emitted no closed windows"
+    return out, max_emitted
 
+
+def _closed_batch_slots(spark, input_path, max_emitted):
+    slots = regularize.observed_slots(spark.read.parquet(input_path))
+    return slots.where(F.col("slot_s") <= max_emitted)
+
+
+def test_stream_observed_slots_equal_batch(spark, input_path, sink):
+    """The sink's observed slots equal the batch aggregation for every
+    window the watermark closed."""
+    out, max_emitted = sink
     got = spark.read.parquet(out)
     # the input listing is the set of files Spark reads from the sink
     assert len(mf.input_listing(out)) == len(got.inputFiles()) > 0
-    want = regularize.observed_slots(spark.read.parquet(input_path))
-    # append mode only emits windows the final watermark has passed;
-    # compare the common closed prefix
-    max_emitted = got.agg(F.max("slot_s")).collect()[0][0]
-    assert max_emitted is not None, "stream emitted no closed windows"
-    closed = want.where(F.col("slot_s") <= max_emitted)
+    closed = _closed_batch_slots(spark, input_path, max_emitted)
     g = got.orderBy("conv_id", "slot_s").toPandas()
     w = closed.orderBy("conv_id", "slot_s").toPandas()
     assert len(g) == len(w) and len(g) > 0
     for c in w.columns:
         assert np.array_equal(g[c].to_numpy(), w[c].to_numpy()), c
 
-    # compaction of the sink's output (bucket=N/ plus _spark_metadata/)
+
+def test_stream_1h_cascade_equals_batch(spark, input_path, sink, tmp_path_factory):
+    """The stream's 1m -> 1h cascade (the sink, then ``run_from_observed``
+    over its output, ``bucket=N/`` plus ``_spark_metadata/``) gives the
+    tiers of the batch slots cut to the same closed prefix, and its 1h
+    sums equal the batch re-aggregation of those slots per hour."""
+    out, max_emitted = sink
+    closed = _closed_batch_slots(spark, input_path, max_emitted)
     obs_path = str(tmp_path_factory.mktemp("s_obs") / "observed")
     closed.write.parquet(obs_path)
     pipe_s = RollupPipeline(spark, str(tmp_path_factory.mktemp("s_wh")))
@@ -92,6 +108,30 @@ def test_stream_observed_slots_equal_batch(spark, input_path, tmp_path_factory):
     pipe_b = RollupPipeline(spark, str(tmp_path_factory.mktemp("b_wh")))
     pipe_b.run_from_observed(obs_path, run_id="batch-1")
     _assert_tiers_equal(pipe_s, pipe_b)
+
+    sums = ("n_turns", "tokens_user", "tokens_assistant", "tokens_tool", "tool_calls")
+    want = (
+        closed.groupBy(
+            "conv_id", (F.floor(F.col("slot_s") / 3600) * 3600).alias("hour_s")
+        )
+        .agg(*[F.sum(c).alias(c) for c in sums])
+        .orderBy("conv_id", "hour_s")
+        .toPandas()
+    )
+    got = (
+        pipe_s.read_agg("1h")
+        .where(F.col("n_turns") > 0)
+        .select(
+            "conv_id",
+            F.unix_timestamp("window_start").alias("hour_s"),
+            *sums,
+        )
+        .orderBy("conv_id", "hour_s")
+        .toPandas()
+    )
+    assert len(got) == len(want) > 0
+    for c in want.columns:
+        assert np.array_equal(got[c].to_numpy(), want[c].to_numpy()), c
 
 
 def test_retention_expires_old_day_partitions(spark, input_path, tmp_path_factory):
