@@ -3,8 +3,8 @@
 ``applyInPandas`` pays per-group overhead (one pandas frame + one Python
 call per group) and ``mapInPandas`` still round-trips Arrow -> pandas ->
 Arrow with block consolidation. With ~10^5-10^6 conversations, both
-dominate the numpy kernels. The engine instead range-partitions by
-conv_id, sorts within partitions by (conv_id, slot), and processes raw
+dominate the numpy kernels. The engine instead partitions by
+conversation, sorts within partitions by (conv_id, slot), and processes raw
 ``pyarrow.RecordBatch``es in ``mapInArrow`` — columns pulled into numpy
 once per batch, conversations sliced by numpy boundaries, outputs
 assembled back into RecordBatches zero-copy where possible.

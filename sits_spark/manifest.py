@@ -39,9 +39,9 @@ MANIFEST_SCHEMA = (
 )
 
 # Resume/commit granularity (Iceberg bucket(conv_id) stand-in) of a new
-# warehouse. Write parallelism is the range-partition count, not the bucket
-# count, so buckets size only the resume unit and the file fan-out: each
-# write task writes one tier_1m file per (bucket, day) it touches. At 64
+# warehouse. Write parallelism is the fused stage's task count, not the
+# bucket count, so buckets size only the resume unit and the file fan-out:
+# each write task writes one tier_1m file per (bucket, day) it touches. At 64
 # those files averaged ~4.7 KB and file-system metadata, not encoding, set
 # the writer's time (336 partitions of 12k rows: 0.26 s; 16: 0.018 s); 16,
 # 8 and 4 buckets gave the same pass wall, so 16 keeps the finest resume

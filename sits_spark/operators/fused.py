@@ -9,15 +9,17 @@ computing every requested band in one chunk traversal
 (/root/reference/R/api_apply.R:114-138 block loop).
 
 One stream feeds the kernel: observed slots keyed by (conv_id, chunk)
-(operators.chunk_split.keyed_stream), range-partitioned once by
-(bucket, conv_id, chunk) and sorted. An ordinary conversation is one
+(operators.chunk_split.keyed_stream), placed once by a partition id
+computed from the conv bucket (``_task_of``: the sits master's
+metadata-only chunk-to-worker plan, so no sample job for range bounds)
+and sorted by (bucket, conv_id, chunk). An ordinary conversation is one
 chunk-0 group that stays whole inside one task and goes to the flat
 engine_core kernels; a conversation tagged as a giant arrives as
-per-(conv, chunk) groups with halo and anchor rows, spread over tasks,
-and goes to chunk_split's per-chunk kernel. Both kinds of series leave
-through one generator (``_emit_tiers``); the oracle's per-conv
-engine_core functions are the independent reference they are
-byte-matched against in tests/test_spark_pipeline.py.
+per-(conv, chunk) groups with halo and anchor rows, its chunks on
+consecutive tasks, and goes to chunk_split's per-chunk kernel. Both
+kinds of series leave through one generator (``_emit_tiers``); the
+oracle's per-conv engine_core functions are the independent reference
+they are byte-matched against in tests/test_spark_pipeline.py.
 
 Two sinks over the same kernel stream:
 
@@ -25,9 +27,9 @@ Two sinks over the same kernel stream:
   {slot, agg, pack}) for downstream DataFrame composition.
 - ``fused_write``: an Arrow-native partitioned-table writer — each task
   writes its (row_kind, bucket, day|month) parquet files directly via pyarrow
-  and returns only per-partition row-count stats. This is the
+  and returns only its per-(tier, bucket) row-count stats. This is the
   DataSourceV2-writer pattern realized at the operator level: the input
-  is already range-clustered by bucket, so the write needs no
+  is already placed by bucket, so the write needs no
   repartition exchange and no partition sort, each tier's files carry its
   OWN narrow schema (no union nulls), and the 3-tier fan-out costs one
   action instead of three. Idempotent under task retry: file names are
@@ -44,7 +46,8 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 from .. import engine_core
 from .. import manifest as mf
@@ -271,24 +274,57 @@ def _fused_iter(tiers: tuple[str, ...], with_pack: bool = True):
     return fn
 
 
+# the low bits of the conv hash pick the bucket (``bucket_expr`` is the
+# hash mod n_buckets); its top 20 bits, which do not decide the bucket,
+# place a conversation inside its bucket's share of the tasks
+_U_BITS = 20
+
+
+def _task_of(n: int, n_buckets: int, buckets: list[int] | None) -> Column:
+    """Each row's fused task, from its bucket and conversation alone: the
+    action's k buckets take equal shares of the n tasks in bucket order
+    (a bucket's whole conversations all land in one task when n divides
+    k, and spread over n/k tasks when n > k), and a giant's chunks go to
+    consecutive tasks from its conversation's. Every row of one
+    (conv_id, chunk) group lands in one task. ``buckets`` is the action's
+    bucket list (None: all ``n_buckets``), so a resume or checkpoint
+    group of a few buckets still uses every task."""
+    if buckets is None or len(buckets) == n_buckets:
+        rank, k = "bucket", n_buckets
+    else:
+        # the input holds only these buckets, so every bucket has a rank
+        rank = f"array_position(array({', '.join(map(str, buckets))}), bucket) - 1"
+        k = len(buckets)
+    u = f"shiftrightunsigned(xxhash64(conv_id), {64 - _U_BITS})"
+    whole = f"((({rank}) * {1 << _U_BITS} + {u}) * {n}) div {k << _U_BITS}"
+    return F.expr(
+        f"CAST(CASE WHEN marker = {chunk_split.WHOLE_ROW} THEN {whole} "
+        f"ELSE pmod({whole} + chunk, {n}) END AS INT)"
+    )
+
+
 def _cluster(
     observed: DataFrame,
     partitions: int | None,
     split: tuple[DataFrame, DataFrame] | None = None,
     n_buckets: int = mf.N_BUCKETS,
+    buckets: list[int] | None = None,
 ) -> DataFrame:
-    """The one kernel stream: range-cluster the keyed rows by
-    (bucket, conv_id, chunk) and sort — an ordinary conversation (one
-    chunk-0 group) stays whole inside one task, a giant's chunks spread
-    over tasks, and each task's output covers few buckets, so a
-    (bucket, day|month)-partitioned write needs no further exchange."""
+    """The one kernel stream: place the keyed rows by partition id
+    (``_task_of``) and sort by (bucket, conv_id, chunk) — an ordinary
+    conversation (one chunk-0 group) stays whole inside one task, a
+    giant's chunks spread over tasks, and each task's output covers few
+    buckets, so a (bucket, day|month)-partitioned write needs no further
+    exchange. The placement is computed per row from metadata (the conv
+    hash and the action's bucket list), so the exchange runs no sample
+    job for range bounds and computes its input once."""
     n = partitions or int(
         observed.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     return (
         chunk_split.keyed_stream(observed, split)
         .withColumn("bucket", mf.bucket_expr(n_buckets=n_buckets))
-        .repartitionByRange(n, "bucket", "conv_id", "chunk")
+        .repartitionById(n, _task_of(n, n_buckets, buckets))
         .sortWithinPartitions("bucket", "conv_id", "chunk", "marker", "slot_s")
     )
 
@@ -306,8 +342,8 @@ def fused_tiers(
 
 
 # flush thresholds per row_kind: bound task memory to ~flush-size per kind
-# regardless of how much data the task's key range holds (a skewed range
-# at 100x otherwise buffers its whole multi-GB output before writing).
+# regardless of how much data the task's share of the keys holds (a skewed
+# task at 100x otherwise buffers its whole multi-GB output before writing).
 # Both limits apply — rows for the narrow tiers, bytes for blob-carrying
 # pack rows whose size per row is unbounded.
 FLUSH_ROWS = 1 << 18
@@ -516,41 +552,38 @@ def fused_write(
     gen: str = "",
     split: tuple[DataFrame, DataFrame] | None = None,
     n_buckets: int = mf.N_BUCKETS,
+    buckets: list[int] | None = None,
 ) -> DataFrame:
     """Observed 1-minute slots -> partitioned tier table on disk.
 
-    Returns the (lazy) per-(tier, bucket) row-count stats DataFrame; the
-    caller's action on it IS the write job — one action, one range
-    exchange, one mapInArrow for every conversation. ``split`` names the
-    conversations to cut into (conv, chunk) units of work as one
-    ``(ids, anchors)`` pair (``chunk_split.keyed_stream``); None keeps
-    every conversation whole. Rows are bucketed by
-    ``bucket(conv_id) mod n_buckets``.
+    Returns the (lazy) per-task, per-(tier, bucket) row-count stats
+    DataFrame; the caller's action on it IS the write job — one action,
+    one partition-id exchange, one mapInArrow for every conversation.
+    ``split`` names the conversations to cut into (conv, chunk) units of
+    work as one ``(ids, anchors)`` pair (``chunk_split.keyed_stream``);
+    None keeps every conversation whole. Rows are bucketed by
+    ``bucket(conv_id) mod n_buckets``; ``buckets`` lists the buckets
+    ``observed`` holds (None: all of them), over which the tasks are
+    shared out (``_task_of``).
 
     Constraint: tasks write deterministic file names with no output-commit
     coordinator, which is only safe when a task attempt cannot run twice
     concurrently — i.e. speculation off. Idempotent under sequential task
     RETRY (same name, same content); enforced here rather than assumed."""
     require_no_speculation(observed.sparkSession)
-    return _cluster(observed, partitions, split, n_buckets).mapInArrow(
+    return _cluster(observed, partitions, split, n_buckets, buckets).mapInArrow(
         _write_iter(table_path, tiers, with_pack, flush_rows, flush_bytes, gen),
         STATS_SCHEMA,
     )
 
 
 def slot_tier(fused: DataFrame) -> DataFrame:
-    from pyspark.sql import functions as F
-
     return fused.where(F.col("row_kind") == "slot").select(*TIER_1M_COLS)
 
 
 def agg_tier(fused: DataFrame) -> DataFrame:
-    from pyspark.sql import functions as F
-
     return fused.where(F.col("row_kind") == "agg").select(*ROLLUP_COLS)
 
 
 def pack_tier(fused: DataFrame) -> DataFrame:
-    from pyspark.sql import functions as F
-
     return fused.where(F.col("row_kind") == "pack").select(*PACK_COLS)

@@ -13,11 +13,14 @@ Physical plan — ONE action per checkpoint group, for every conversation:
   tag giants (broadcast left join with the driver-held id list) ->
     explode giant rows into chunk + halo copies, union the stored anchor
     rows (one per giant (conv, chunk)) ->
-  range-partition by (bucket, conv_id, chunk) + sort (1 exchange) ->
+  place by a partition id computed from the conv bucket + sort by
+    (bucket, conv_id, chunk) (1 exchange, no sample job) ->
   grid/fill/smooth/rollup/pack fused mapInArrow (whole convs: flat
     kernel; giant chunks: chunk kernel) ->
   partitioned write (row_kind, bucket, day) for tier_1m,
-    (row_kind, bucket, month) for agg and packed_1h
+    (row_kind, bucket, month) for agg and packed_1h ->
+  per-task row counts collected and summed per (tier, bucket) on the
+    driver (no stats shuffle)
 
 The giants and their anchor rows are a pure function of the input, so
 the pre-scan that finds them (``_giant_convs``) computes both once per
@@ -112,6 +115,9 @@ class RollupPipeline:
         ValueError."""
         self.spark = spark
         self.warehouse = warehouse
+        # the fused stage's task count. The name predates the partition-id
+        # placement (fused._task_of) that replaced the range exchange; it
+        # stays because perfbench's layer ladder passes it to fused_write
         self.range_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
         self.giant_span_chunks = giant_span_chunks
         self.table_path = os.path.join(warehouse, "tiers")
@@ -158,13 +164,17 @@ class RollupPipeline:
             return df
         return df.where(mf.bucket_expr(n_buckets=self.n_buckets).isin(buckets))
 
-    def _write(self, observed, giants: list[str], anchors, tiers, with_pack, gen=""):
+    def _write(
+        self, observed, giants: list[str], anchors, tiers, with_pack, gen="",
+        buckets: list[int] | None = None,
+    ):
         """The write action's lazy stats DataFrame: ONE fused_write over
-        every conversation. The giants (the driver-held ``_giant_convs``
-        list) are tagged by a broadcast join, not split off by a filter,
-        so the slot aggregation, the range exchange and the kernel all
-        run once; the tag cuts each giant into per-(conv, chunk) units of
-        work inside that one stream, and ``anchors`` (their stored
+        every conversation of ``buckets`` (None: all). The giants (the
+        driver-held ``_giant_convs`` list) are tagged by a broadcast join,
+        not split off by a filter, so the slot aggregation, the exchange
+        and the kernel all run once; the tag cuts each giant into
+        per-(conv, chunk) units of work inside that one stream, and
+        ``anchors`` (their stored
         anchor rows, cut to ``observed``'s buckets) are unioned in. A join
         rather than a literal ``isin``: on a 4-core host, planning the
         write with an In list took 1.4 s at 1k ids, 9.8 s at 10k and
@@ -181,6 +191,7 @@ class RollupPipeline:
         return fused.fused_write(
             observed, self.table_path, tiers, self.range_partitions,
             with_pack=with_pack, gen=gen, split=split, n_buckets=self.n_buckets,
+            buckets=buckets,
         )
 
     def _commit_group(
@@ -199,13 +210,13 @@ class RollupPipeline:
         rename ever happens in the hot path; stale generations are
         reclaimed by ``vacuum``."""
         self.store.invalidate(list(TIER_DIRS), group, fp, run_id)
-        # collecting the stats IS the write action; counts feed lineage
-        counts = {
-            (r["tier"], r["bucket"]): r["rows"]
-            for r in stats.groupBy("tier", "bucket")
-            .agg(F.sum("rows").alias("rows"))
-            .collect()
-        }
+        # collecting the stats IS the write action; counts feed lineage.
+        # A task returns a row per (tier, bucket) it wrote, so the rows are
+        # few and summed here rather than by a shuffle and a job of their own
+        counts: dict[tuple[str, int], int] = {}
+        for r in stats.collect():
+            key = (r["tier"], r["bucket"])
+            counts[key] = counts.get(key, 0) + r["rows"]
         self.store.commit(
             [
                 (t, b, fp, counts.get((t, b), 0), run_id)
@@ -253,6 +264,7 @@ class RollupPipeline:
             stats = self._write(
                 regularize.observed_slots(self._in_buckets(raw, group)),
                 giants, self._in_buckets(anchors, group), tiers, with_pack, gen,
+                group,
             )
             self._commit_group(stats, group, fp, run_id, tier_names, gen)
         return out
@@ -293,7 +305,7 @@ class RollupPipeline:
         gen = store_mod.new_generation()
         stats = self._write(
             self._in_buckets(obs_all, missing), giants,
-            self._in_buckets(anchors, missing), tiers, with_pack, gen,
+            self._in_buckets(anchors, missing), tiers, with_pack, gen, missing,
         )
         self._commit_group(stats, missing, fp, run_id, tier_names, gen)
         return out

@@ -3,7 +3,6 @@ listing it keys on, and the per-Column call-site capture being off."""
 
 import json
 import os
-import uuid
 
 import pandas as pd
 import pytest
@@ -13,17 +12,7 @@ from pyspark.errors.utils import is_debugging_enabled
 from sits_spark import manifest as mf
 from sits_spark.session import _READ_SCHEMAS, read_parquet
 
-
-def _jobs_in(spark, fn):
-    """Spark job ids launched while ``fn`` runs, counted by job group."""
-    sc = spark.sparkContext
-    group = f"t-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "read memo test")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, sc.statusTracker().getJobIdsForGroup(group)
+from conftest import jobs_in
 
 
 def test_single_file_fingerprints_differ(tmp_path):
@@ -99,9 +88,9 @@ def test_second_read_launches_no_job_and_rewrite_reinfers(spark, tmp_path):
     path = str(tmp_path / "t.parquet")
     pd.DataFrame({"k": [1, 2, 3], "v": [0.5, 1.5, 2.5]}).to_parquet(path)
 
-    first, jobs = _jobs_in(spark, lambda: read_parquet(spark, path))
+    first, jobs = jobs_in(spark, lambda: read_parquet(spark, path))
     assert jobs  # schema inference
-    second, jobs = _jobs_in(spark, lambda: read_parquet(spark, path))
+    second, jobs = jobs_in(spark, lambda: read_parquet(spark, path))
     assert jobs == []
     assert second.schema == first.schema
     assert sorted(second.collect()) == sorted(first.collect())
@@ -109,12 +98,12 @@ def test_second_read_launches_no_job_and_rewrite_reinfers(spark, tmp_path):
     # same bytes, new mtime: a rewrite, so the schema is inferred again
     st = os.stat(path)
     os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
-    _, jobs = _jobs_in(spark, lambda: read_parquet(spark, path))
+    _, jobs = jobs_in(spark, lambda: read_parquet(spark, path))
     assert jobs
 
     # new contents and schema at the same path
     pd.DataFrame({"k": [7], "w": ["x"]}).to_parquet(path)
-    third, jobs = _jobs_in(spark, lambda: read_parquet(spark, path))
+    third, jobs = jobs_in(spark, lambda: read_parquet(spark, path))
     assert jobs
     assert third.columns == ["k", "w"]
     assert [tuple(r) for r in third.collect()] == [(7, "x")]

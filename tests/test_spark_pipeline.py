@@ -20,6 +20,8 @@ from sits_spark import manifest as mf
 from sits_spark.operators import regularize
 from sits_spark.pipeline import RollupPipeline
 
+from conftest import jobs_in
+
 N_CONVS = 120
 SEED = 42
 
@@ -283,7 +285,8 @@ def test_one_write_plan_splits_giant_across_tasks(spark, giant_input, tmp_path_f
     fixture holding a multi-chunk giant, once the pre-scan is stored the
     write is ONE mapInArrow over ONE scan of the input (the anchors come
     from the stored object, so no Window node), the giant's slot rows
-    still come from at least 2 tasks (task ids read from the file names),
+    come from one task per chunk, up to the task count (task ids read
+    from the file names),
     and the tiers match the oracle. A changed input (new fingerprint)
     gets anchors of its own, not the stale ones."""
     import shutil
@@ -312,11 +315,14 @@ def test_one_write_plan_splits_giant_across_tasks(spark, giant_input, tmp_path_f
         pipe.read_tier("tier_1m").toPandas(), golden["tier_1m"], ["conv_id", "slot_start"]
     )
     tasks = {
-        int(re.search(r"part-g\w+-(\d{5})-", os.path.basename(f)).group(1))
+        _task_id(f)
         for f in pipe._live_files("tier_1m")
         if "conv-hot-1" in pq.read_table(f, columns=["conv_id"])["conv_id"].to_pylist()
     }
-    assert len(tasks) >= 2, tasks
+    # consecutive chunks go to consecutive tasks
+    n_chunks = anchors.where(F.col("conv_id") == "conv-hot-1").count()
+    assert n_chunks > 2
+    assert len(tasks) == min(n_chunks, pipe.range_partitions), tasks
 
     # the giant grows by two days: its extent and its last chunks change
     inp2 = str(tmp_path_factory.mktemp("one_in2") / "t")
@@ -374,6 +380,109 @@ def test_giant_anchor_cap_keeps_longest_and_warns(
             for c in ("ts_d2", "vals_gorilla"):
                 got[c] = got[c].apply(bytes)
         assert_frames_bitexact(got, golden[tier], keys)
+
+
+def _task_id(path: str) -> int:
+    """The writing task's partition id, from a data file's name."""
+    return int(re.search(r"part-g\w+?-(\d{5})-", os.path.basename(path)).group(1))
+
+
+@pytest.fixture(scope="module")
+def warm_pass(spark, giant_input, tmp_path_factory):
+    """A warm pass on the giant fixture — a second ``run`` into a fresh
+    warehouse, reusing the first run's stored anchors — as its pipeline
+    and the Spark job ids it launched."""
+    _pdf, inp = giant_input
+    stats = str(tmp_path_factory.mktemp("warm_stats"))
+    cold = RollupPipeline(spark, str(tmp_path_factory.mktemp("cold_wh")), stats_dir=stats)
+    cold.run(inp, run_id="cold")
+    pipe = RollupPipeline(spark, str(tmp_path_factory.mktemp("warm_wh")), stats_dir=stats)
+    _, jobs = jobs_in(spark, lambda: pipe.run(inp, run_id="warm"))
+    return pipe, jobs
+
+
+def test_warm_pass_runs_four_jobs_and_no_range_exchange(
+    spark, warm_pass, giant_input, input_path, warehouse, tmp_path_factory
+):
+    """The kernel stream is placed by a partition id computed from the
+    bucket, and the write stats are summed on the driver: a warm pass
+    runs 4 jobs (tag broadcast, scan + partial slot aggregation, the
+    exchange's map stage, fused kernel + write), with no sample job for
+    range bounds and no stats shuffle, and 3 on an input without giants
+    (no tag broadcast)."""
+    pipe, jobs = warm_pass
+    assert len(jobs) == 4, jobs
+    _pdf, inp = giant_input
+    raw = spark.read.parquet(inp)
+    obs = regularize.observed_slots(raw)
+    giants, anchors = pipe._giant_convs(raw, lambda: obs, mf.input_fingerprint(inp))
+    plan = (
+        pipe._write(obs, giants, anchors, ("1h", "1d"), True)
+        ._jdf.queryExecution().executedPlan().toString().lower()
+    )
+    assert "shufflepartitionidpassthrough" in plan, plan
+    assert "rangepartitioning" not in plan, plan
+
+    # the module warehouse's run stored this input's (empty) giant list
+    plain = RollupPipeline(spark, str(tmp_path_factory.mktemp("plain_wh")), stats_dir=warehouse)
+    _, jobs = jobs_in(spark, lambda: plain.run(input_path, run_id="warm"))
+    assert len(jobs) == 3, jobs
+
+
+def test_manifest_counts_equal_footers(warm_pass):
+    """The driver-side sum of the per-task stats rows: every live manifest
+    row counts exactly the rows its (tier, bucket) files hold — the
+    giant's bucket gets stats rows from several tasks."""
+    pipe, _jobs = warm_pass
+    man = _manifest(pipe.warehouse)
+    live = man[man.row_count >= 0]
+    assert set(live.tier) == {"tier_1m", "agg", "packed_1h"}
+    for tier, rows in live.groupby("tier"):
+        footers = mf.footer_counts(pipe.tier_path(tier))
+        assert sum(footers.values()) > 0
+        for b, n in zip(rows.bucket, rows.row_count):
+            assert n == footers.get(b, 0), (tier, b, n, footers.get(b))
+
+
+def _tasks_by_bucket(files: list[str]) -> dict[int, set[int]]:
+    out: dict[int, set[int]] = {}
+    for f in files:
+        out.setdefault(int(re.search(r"bucket=(\d+)", f).group(1)), set()).add(_task_id(f))
+    return out
+
+
+def test_full_pass_places_each_bucket_in_one_task(spark, warehouse):
+    """With the task count dividing the bucket count, each bucket's
+    conversations all land in one task, bucket b in task b * n // k."""
+    pipe = RollupPipeline(spark, warehouse)
+    n, k = pipe.range_partitions, pipe.n_buckets
+    assert k % n == 0 and k > n
+    tasks = _tasks_by_bucket(pipe._live_files("tier_1m"))
+    assert tasks == {b: {b * n // k} for b in range(k)}, tasks
+
+
+def test_resume_of_two_buckets_uses_every_task(
+    spark, input_path, golden, warehouse, tmp_path_factory
+):
+    """A resume writes only its lost buckets, yet shares all the tasks
+    out over them: each of the 2 buckets spreads over n / 2 tasks."""
+    pipe = RollupPipeline(
+        spark, str(tmp_path_factory.mktemp("resume_wh")), stats_dir=warehouse
+    )
+    pipe.range_partitions = 4
+    pipe.run(input_path, run_id="full")
+    # the fixture's two largest buckets; each has conversations in both
+    # halves of its hash range, so each half-bucket task gets rows
+    lost = [5, 13]
+    fp = mf.input_fingerprint(input_path)
+    pipe.store.invalidate(["tier_1m", "agg", "packed_1h"], lost, fp, "kill")
+    pipe.run(input_path, run_id="resume")
+    man = _manifest(pipe.warehouse)
+    [gen] = set(man[(man.run_id == "resume") & (man.row_count >= 0)]["gen"])
+    files = [f for f in pipe._live_files("tier_1m") if f"part-g{gen}-" in f]
+    assert set(_tasks_by_bucket(files)) == set(lost)
+    assert {_task_id(f) for f in files} == {0, 1, 2, 3}
+    _assert_tiers_bitexact(pipe, golden)
 
 
 def _manifest(wh):
