@@ -174,12 +174,11 @@ class RollupPipeline:
         not split off by a filter, so the slot aggregation, the exchange
         and the kernel all run once; the tag cuts each giant into
         per-(conv, chunk) units of work inside that one stream, and
-        ``anchors`` (their stored
-        anchor rows, cut to ``observed``'s buckets) are unioned in. A join
-        rather than a literal ``isin``: on a 4-core host, planning the
-        write with an In list took 1.4 s at 1k ids, 9.8 s at 10k and
-        ~100 s at 100k; the join's plan holds no id literals, and planning
-        it did not grow with the list."""
+        ``anchors`` (their stored anchor rows, cut to ``observed``'s
+        buckets) are unioned in. A join rather than a literal ``isin``: on
+        a 4-core host, planning the write with an In list took 1.4 s at 1k
+        ids, 9.8 s at 10k and ~100 s at 100k; the join's plan holds no id
+        literals, and planning it did not grow with the list."""
         split = None
         if giants:
             # from Arrow, decoded in the JVM: a DataFrame made from a
